@@ -1938,7 +1938,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH top-k (bucketed candidates, exact rerank) —
     approximate by construction, so rows-only; recall is measured against
-    brute force in tests/bench."""
+    brute force in tests/test_operators.py."""
     emb = _t(spark, sf_dir, "embeddings")
     queries_df = emb.where(F.col("vec_id") < 8)
     return lsh_topk(queries_df, emb, dim=64, k=5)
@@ -2059,12 +2059,10 @@ def pipeline_pages_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle configuration (the spec path — every stage SQL-replayable):
     md5 dedup family, native Column features, string-gram duplicate
     fractions.  The hot path (Arrow signals + xxhash64 family, pinned
-    semantically equal by the parity pytests) is what ``bench.py`` and
-    the pipeline runner measure."""
+    semantically equal by the parity pytests) is what the pipeline
+    runner and ``perfbench/run.py`` measure."""
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     return gold_projection(dedup(filter_kept(featurize(bronze, cfg)), cfg))
 
 
@@ -2146,9 +2144,7 @@ def pipeline_stage_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra scans, no shuffles beyond the pipeline's own.  The handful
     of scalar counts is assembled driver-side (bounded: 5 rows)."""
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     feat = featurize(bronze, cfg)
     lang_ok = F.col("lang_pred") == F.lit(cfg.target_lang)
     c = feat.agg(
@@ -2185,9 +2181,7 @@ def _pipeline_stage_attrition_sql() -> str:
     """DuckDB twin of :func:`pipeline_stage_attrition`: the SAME staged
     CTEs as the gold oracle, with FILTERed counts replaying the four
     conditional counts and the identical IEEE drop_pct division."""
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     ctes = _pipeline_sql_ctes(cfg)
     return f"""
 WITH {ctes},
@@ -2230,9 +2224,7 @@ def corpus_domain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from greatex_spark.operators.urls import host_of, registered_domain
 
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     feat = featurize(bronze, cfg)
     dom = registered_domain(host_of(F.col("url")))
     return (
@@ -2270,9 +2262,7 @@ def _corpus_domain_report_sql() -> str:
     discipline."""
     from greatex_spark.operators.urls import host_of_sql, registered_domain_sql
 
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     ctes = _pipeline_sql_ctes(cfg, upto="feat")
     dom = registered_domain_sql(host_of_sql("url"))
     return f"""
@@ -2315,9 +2305,7 @@ def pipeline_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from greatex_spark.operators.sampling import sample_hash, top_n_per_group
 
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     feat = featurize(bronze, cfg)
     dropped = feat.where(~F.coalesce(F.col("keep"), F.lit(False))).select(
         drop_reason(cfg).alias("drop_reason"),
@@ -2343,9 +2331,7 @@ def _pipeline_drop_audit_sql() -> str:
     from greatex_spark.operators.dedup import md5_long_sql
     from greatex_spark.operators.sampling import DENOM
 
-    cfg = PipelineConfig(
-        dedup_hash_family="md5", arrow_features=False, hashed_ngrams=False
-    )
+    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
     ctes = _pipeline_sql_ctes(cfg, upto="feat")
     key = md5_long_sql("(url::VARCHAR || ':7')")
     return f"""
@@ -2375,7 +2361,6 @@ def _lineage_config() -> "PipelineConfig":
     return PipelineConfig(
         dedup_hash_family="md5",
         arrow_features=False,
-        hashed_ngrams=False,
         keep_fraction_band=(0.2, 0.8),
     )
 

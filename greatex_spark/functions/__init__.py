@@ -1,12 +1,3 @@
-from greatex_spark.functions.heuristics import (  # noqa: F401
-    quality_features,
-    with_quality_features,
-)
-from greatex_spark.functions.pii import scrub_pii, scrub_pii_py  # noqa: F401
-from greatex_spark.functions.html import html_to_text  # noqa: F401
-from greatex_spark.functions.textstats import detect_lang, fingerprint64  # noqa: F401
-from greatex_spark.functions.toxicity import (  # noqa: F401
-    load_blocklist,
-    scrub_toxicity,
-    toxicity_count,
-)
+"""Quality-signal functions, one module per family: import each from
+its defining module (``greatex_spark.functions.heuristics`` and so on),
+so a caller loads only the functions it runs."""

@@ -96,34 +96,12 @@ def _dup_fraction_of(grams: Column) -> Column:
     )
 
 
-def _hashed_ngrams_col(words: Column, n: int) -> Column:
-    """n-gram identities as xxhash64 of the word-hash tuple — no gram
-    strings are materialized (GC-light twin of :func:`ngrams_col`;
-    equal distinct-counts up to 64-bit collisions)."""
-    return _let(
-        F.transform(words, lambda w: F.xxhash64(w)),
-        lambda wh: F.when(
-            F.size(wh) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(wh) - n),
-                lambda i: F.xxhash64(*[F.element_at(wh, i + j + 1) for j in range(n)]),
-            ),
-        ).otherwise(F.array().cast("array<bigint>")),
-    )
-
-
-def quality_struct(text: Column, hashed_ngrams: bool = False) -> Column:
+def quality_struct(text: Column) -> Column:
     """ALL heuristic features as one struct Column, tokenizing exactly
     once per row.  Extract fields in a *separate* projection so the
     struct itself is evaluated once (CollapseProject keeps non-cheap
-    producers used more than once in their own projection).
-
-    ``hashed_ngrams=True`` computes the duplicate-n-gram fractions over
-    hashed gram identities instead of gram strings — the hot-path
-    variant used by the pipeline (values equal up to 64-bit hash
-    collisions; the string variant remains the oracle-checked spec)."""
+    producers used more than once in their own projection)."""
     stop_arr = F.lit(list(GOPHER_STOPWORDS))
-    grams_of = _hashed_ngrams_col if hashed_ngrams else ngrams_col
 
     def build(words: Column, lines: Column) -> Column:
         n_words = F.size(words)
@@ -160,8 +138,8 @@ def quality_struct(text: Column, hashed_ngrams: bool = False) -> Column:
                 .cast("double")
                 / n_lines
             ).alias("ellipsis_line_fraction"),
-            _dup_fraction_of(grams_of(words, 2)).alias("dup_2gram_fraction"),
-            _dup_fraction_of(grams_of(words, 3)).alias("dup_3gram_fraction"),
+            _dup_fraction_of(ngrams_col(words, 2)).alias("dup_2gram_fraction"),
+            _dup_fraction_of(ngrams_col(words, 3)).alias("dup_3gram_fraction"),
             F.trim(text).rlike(r'[.!?"”]$').alias("ends_with_terminal_punct"),
             text.contains("{").alias("has_brace"),
             F.lower(text).contains("lorem ipsum").alias("has_lorem_ipsum"),
@@ -225,10 +203,10 @@ def gopher_keep_duckdb_sql(
     ``pipeline.stages.featurize`` exactly (same tokenization, same
     ``max(n,1)`` ratio denominators, same int→double divisions).
 
-    The duplicate-n-gram twin counts distinct gram *strings* — equal to
-    the native spec (``quality_struct(hashed_ngrams=False)``); run the
-    pipeline with ``PipelineConfig(hashed_ngrams=False)`` when this
-    expression is the oracle."""
+    The duplicate-n-gram twin counts distinct gram *strings*, as the
+    native spec :func:`quality_struct` does; run the pipeline with
+    ``PipelineConfig(arrow_features=False)`` when this expression is
+    the oracle."""
     t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
     c = text_expr
     words = f"regexp_extract_all({c}, '\\S+')"

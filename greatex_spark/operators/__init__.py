@@ -1,40 +1,3 @@
-from greatex_spark.operators.dedup import (  # noqa: F401
-    content_fingerprint_index,
-    exact_dedup,
-    exact_dedup_incremental,
-    minhash_lsh_dedup,
-    minhash_signature,
-    ngram_jaccard,
-    ngram_jaccard_pairs,
-    simhash64,
-    simhash_dedup,
-)
-from greatex_spark.operators.ann import (  # noqa: F401
-    brute_force_topk,
-    embedding_cosine_dedup,
-    lsh_topk,
-    semdedup,
-)
-from greatex_spark.operators.cluster import (  # noqa: F401
-    connected_components,
-    duplicate_clusters,
-)
-from greatex_spark.operators.dsir import (  # noqa: F401
-    dsir_log_weight,
-    dsir_sample,
-    fit_hashed_lm,
-)
-from greatex_spark.operators.asof import asof_join  # noqa: F401
-from greatex_spark.operators.cms import (  # noqa: F401
-    cms_heavy_hitters,
-    cms_heavy_hitters_arrow,
-    cms_sketch,
-)
-from greatex_spark.operators.packing import pack_sequences  # noqa: F401
-from greatex_spark.operators.rangejoin import range_join  # noqa: F401
-from greatex_spark.operators.sketch import hll_distinct, ngram_hll  # noqa: F401
-from greatex_spark.operators.sampling import (  # noqa: F401
-    domain_quota,
-    stratified_sample,
-)
-from greatex_spark.operators.sessions import session_stats  # noqa: F401
+"""Corpus-assembly operators, one module per family: import each from
+its defining module (``greatex_spark.operators.dedup`` and so on), so a
+caller loads only the operators it runs."""

@@ -463,11 +463,11 @@ def ivf_topk(
     DuckDB (:func:`ivf_topk_duckdb_sql`).  The corpus is scanned once
     to assign cells; each query joins only ~``nprobe/nlist`` of it.
 
-    Pass precomputed ``centroids`` to skip training (e.g. the bench
-    reuses one quantizer across variants).
+    Pass precomputed ``centroids`` to skip training (e.g. to reuse one
+    quantizer across variants).
 
     Recall < 1.0 by construction; measure against
-    :func:`brute_force_topk` (see tests/bench)."""
+    :func:`brute_force_topk` (see tests/test_operators.py)."""
     if centroids is None:
         rows = _hash_sample(corpus, id_col, vec_col, train_sample).collect()
         pts = _vec_matrix([r[1] for r in rows])
@@ -568,8 +568,8 @@ def ivf_topk_arrow(
     work on balanced cells).
 
     Scores use the same rounding + tie-break as every other ANN path.
-    Recall < 1.0 by construction — measured next to wall time and
-    candidate fraction in ``bench.py``."""
+    Recall < 1.0 by construction — pinned at ≥ 0.9 on the clustered
+    corpus by ``tests/test_embeddings.py``."""
     if centroids is None:
         rows = _hash_sample(corpus, id_col, vec_col, train_sample).collect()
         pts = _vec_matrix([r[1] for r in rows])
@@ -715,8 +715,8 @@ def assign_cells_arrow(
 ) -> DataFrame:
     """Per-row IVF cell assignment (one ``cell`` column) — the
     instrumentation twin of the assignment inside
-    :func:`ivf_topk_arrow`; the bench uses it to report the exact
-    candidate fraction an index configuration probes."""
+    :func:`ivf_topk_arrow`, for measuring the exact candidate fraction
+    an index configuration probes."""
     import pandas as pd
 
     cents = np.array(centroids, dtype=np.float64)
@@ -1150,7 +1150,8 @@ def embedding_cosine_dedup(
     ``num_tables`` independent plane sets act like MinHash bands: a
     near-copy whose projection crosses a sign boundary in one table is
     still caught in another (P(miss) = p₁^T).  Measured on 50k random
-    vectors + 2,000 planted ±1% copies (bench.py ``emb_dedup_recall``):
+    vectors + 2,000 planted ±1% copies (``emb_dedup_recall`` in
+    BENCH_r05.json):
     single-table 8-bit recall 0.30 (cap-bound), 14-bit 0.94; the
     12-bit × 2-table default ≈ 0.98 with zero false merges."""
     from greatex_spark.operators.dedup import bucket_representatives
@@ -1688,6 +1689,34 @@ def train_ivfpq(
     return centroids, codebooks
 
 
+def _ivfpq_quantizers(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    nlist: int,
+    m: int,
+    ksub: int,
+    train_sample: int,
+    max_iter: int,
+    centroids: list[list[float]] | None,
+    codebooks: list[list[list[float]]] | None,
+) -> tuple[list[list[float]], list[list[list[float]]]]:
+    """Both quantizers as given, or both trained on the hash sample.
+    Residual codebooks only describe the cells they were trained
+    against, so supplying exactly one of the pair is an error."""
+    if (centroids is None) != (codebooks is None):
+        raise ValueError(
+            "pass both centroids and codebooks (a matched pair, e.g. from "
+            "train_ivfpq), or neither to train both"
+        )
+    if centroids is None:
+        rows = _hash_sample(corpus, id_col, vec_col, train_sample).collect()
+        centroids, codebooks = train_ivfpq(
+            _vec_matrix([r[1] for r in rows]), nlist, m, ksub, max_iter
+        )
+    return centroids, codebooks
+
+
 def ivfpq_quantizers_from_parquet(
     path: str,
     nlist: int = 8,
@@ -1754,12 +1783,10 @@ def ivfpq_topk(
     oracle-replayable — :func:`ivfpq_topk_duckdb_sql` retrains
     identical quantizers and replays every fold in the same IEEE
     order."""
-    if centroids is None or codebooks is None:
-        rows = _hash_sample(corpus, id_col, vec_col, train_sample).collect()
-        pts = _vec_matrix([r[1] for r in rows])
-        tc, tcb = train_ivfpq(pts, nlist, m, ksub, max_iter)
-        centroids = centroids if centroids is not None else tc
-        codebooks = codebooks if codebooks is not None else tcb
+    centroids, codebooks = _ivfpq_quantizers(
+        corpus, id_col, vec_col, nlist, m, ksub, train_sample, max_iter,
+        centroids, codebooks,
+    )
     from greatex_spark.functions.exprs import let
 
     cent_lit = F.lit([[float(x) for x in c] for c in centroids])
@@ -1936,7 +1963,10 @@ def brute_force_l2_topk_arrow(
     bench scale, exactly as :func:`brute_force_topk_arrow` is for the
     cosine ones.  ``||c-q||² = |c|² − 2c·q + |q|²`` via one matmul per
     (batch, query-chunk); per-batch top-(k+1) leaders; final window
-    merge (distance ASC, neighbor ASC)."""
+    merge (distance ASC, neighbor ASC).  Distances are rounded BEFORE
+    the per-batch selection, over members pre-ordered by id with a
+    stable sort, so a rounding tie at the boundary keeps the lowest
+    neighbor_id exactly as :func:`brute_force_l2_topk` does."""
     import pandas as pd
 
     q_rows = queries.select(id_col, vec_col).collect()
@@ -1950,23 +1980,23 @@ def brute_force_l2_topk_arrow(
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = _vec_matrix(pdf[vec_col])
+            perm = np.argsort(ids, kind="stable")
+            ids = ids[perm]
+            cm = _vec_matrix(pdf[vec_col])[perm]
             c_sq = (cm**2).sum(axis=1)
             kk = min(k + 1, len(ids))
             for lo in range(0, len(q_ids), q_chunk):
                 sl = slice(lo, lo + q_chunk)
                 d = c_sq[:, None] - 2.0 * (cm @ qm[sl].T) + q_sq[None, sl]
                 np.maximum(d, 0.0, out=d)  # FP guard on identical vectors
-                top = np.argpartition(d, kk - 1, axis=0)[:kk]
+                d = np.round(d, score_decimals)
+                top = np.argsort(d, axis=0, kind="stable")[:kk]
                 n_q = d.shape[1]
                 yield pd.DataFrame(
                     {
                         "query_id": np.repeat(q_ids[sl], kk),
                         "neighbor_id": ids[top.T.reshape(-1)],
-                        "dist": np.round(
-                            d[top.T.reshape(-1), np.repeat(np.arange(n_q), kk)],
-                            score_decimals,
-                        ),
+                        "dist": d[top.T.reshape(-1), np.repeat(np.arange(n_q), kk)],
                     }
                 )
 
@@ -2043,12 +2073,10 @@ def ivfpq_topk_probe_arrow(
     80 s → 2.3 s end-to-end)."""
     import pandas as pd
 
-    if centroids is None or codebooks is None:
-        rows = _hash_sample(corpus, id_col, vec_col, train_sample).collect()
-        pts = _vec_matrix([r[1] for r in rows])
-        tc, tcb = train_ivfpq(pts, nlist, m, ksub, max_iter)
-        centroids = centroids if centroids is not None else tc
-        codebooks = codebooks if codebooks is not None else tcb
+    centroids, codebooks = _ivfpq_quantizers(
+        corpus, id_col, vec_col, nlist, m, ksub, train_sample, max_iter,
+        centroids, codebooks,
+    )
     cents = np.asarray(centroids, dtype=np.float64)
     cbs = np.asarray(codebooks, dtype=np.float64)  # (m, ksub, dsub)
     n_sub = cbs.shape[0]

@@ -97,8 +97,8 @@ def connected_components(
     ``on_round`` (optional ``Callable[[int], None]``) fires after each
     round's labels are materialized (checkpoint + convergence probe
     both complete), with the 1-based round index — a measurement seam
-    for per-round wall/shuffle instrumentation (``bench.py`` cc_1m);
-    the final converged round (the no-change probe round) fires too."""
+    for per-round wall/shuffle instrumentation; the final converged
+    round (the no-change probe round) fires too."""
     ckpt = _checkpointer(checkpoint_dir)
     e = (
         edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))

@@ -37,6 +37,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from greatex_spark.operators.dedup import md5_long, md5_long_sql
 
@@ -131,9 +132,10 @@ def cms_heavy_hitters_arrow(
                 {item_col: pdf[item_col].to_numpy()[keep], "est_count": est[keep]}
             )
 
-    return with_buckets.mapInPandas(
-        est_batches, f"{item_col} string, est_count long"
-    ).distinct()
+    out_schema = T.StructType(
+        [items.schema[item_col], T.StructField("est_count", T.LongType())]
+    )
+    return with_buckets.mapInPandas(est_batches, out_schema).distinct()
 
 
 def cms_heavy_hitters_duckdb_sql(

@@ -22,6 +22,11 @@ built from public primitives):
    most, bounded because intervals are bounded;
 3. equi-join on the bin, then the EXACT containment filter.
 
+An interval with ``end <= start`` contains no point; such rows (and
+rows with a NULL bound) are dropped before step 2, where an inverted
+interval would otherwise explode to a descending bin run as long as
+its span.
+
 Each (point, interval) pair meets in exactly one bin (the point's), so
 the join produces no duplicates — no ``distinct`` repair pass.  Cost:
 one shuffle keyed by bin (or none, when the exploded interval side
@@ -54,6 +59,15 @@ def _micros(df: DataFrame, col: str) -> Column:
     return F.unix_micros(c)
 
 
+def _bin(micros: Column, bin_us: int) -> Column:
+    """``floor(micros / bin_us)`` in long arithmetic.  Subtracting the
+    non-negative ``pmod`` remainder leaves an exact multiple, so the
+    truncating ``div`` floors negative (pre-1970) micros too; a DOUBLE
+    quotient would round near the end of the timestamp range."""
+    w = F.lit(bin_us)
+    return F.call_function("div", micros - F.pmod(micros, w), w)
+
+
 def range_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -69,20 +83,21 @@ def range_join(
 
     ``broadcast_intervals=True`` (the common shape — intervals are the
     small side: alerts, deploys, epochs) makes the equi-join a
-    BroadcastHashJoin: the point table is never shuffled at all."""
+    BroadcastHashJoin: the point table is never shuffled at all.
+    Intervals with ``end <= start`` are dropped: they contain no point."""
     bin_us = bin_seconds * 1_000_000
-    ivb = intervals.withColumn(
+    ivb = intervals.where(F.col(end_col) > F.col(start_col)).withColumn(
         "__bin",
         F.explode(
             F.sequence(
-                F.floor(_micros(intervals, start_col) / bin_us),
-                F.floor((_micros(intervals, end_col) - 1) / bin_us),
+                _bin(_micros(intervals, start_col), bin_us),
+                _bin(_micros(intervals, end_col) - 1, bin_us),
             )
         ),
     )
     if broadcast_intervals:
         ivb = F.broadcast(ivb)
-    pts = points.withColumn("__bin", F.floor(_micros(points, point_ts) / bin_us))
+    pts = points.withColumn("__bin", _bin(_micros(points, point_ts), bin_us))
     return (
         pts.join(ivb, on="__bin")
         .where(

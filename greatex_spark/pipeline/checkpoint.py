@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import logging
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,7 +64,6 @@ LINEAGE_SCHEMA = T.StructType(
 class Checkpoint:
     name: str
     suite: Suite
-    store_metrics: bool = True
     raise_on_failure: bool = True
     collect_partial_unexpected: bool = True
     # failure-notification hook — the library-call recast of the
@@ -75,12 +74,6 @@ class Checkpoint:
     # log_failure_action for the built-in logging notifier, or plug in
     # pager/email senders.
     on_failure: Callable[["ValidationResult"], None] | None = None
-    # StoreEvaluationParametersAction recast (SURVEY §2 D4): publish the
-    # run's observed metrics to the catalog parameter store so later
-    # gates can bound themselves with {"$PARAMETER": ...} kwargs — see
-    # greatex_spark.expectations.params.
-    store_evaluation_parameters: bool = True
-    extra: dict = field(default_factory=dict)
 
 
 def log_failure_action(validation: ValidationResult) -> None:
@@ -167,14 +160,13 @@ def run_checkpoint(
         load_parameters,
         resolve_suite,
         store_parameters,
+        suite_has_markers,
         validation_parameters,
     )
 
     # D4: bind {"$PARAMETER": ...} kwargs — explicit mapping wins, else
     # the latest committed values from the catalog parameter store
     # (loaded only when the suite actually uses markers)
-    from greatex_spark.expectations.params import suite_has_markers
-
     params = evaluation_parameters
     if params is None and catalog is not None and suite_has_markers(checkpoint.suite):
         params = load_parameters(spark, catalog)
@@ -186,9 +178,11 @@ def run_checkpoint(
         batch_identifier=batch_identifier or checkpoint.name,
         collect_partial_unexpected=checkpoint.collect_partial_unexpected,
     )
-    if checkpoint.store_metrics and catalog is not None:
+    if catalog is not None:
         store_metrics(spark, catalog, validation, epoch)
-    if checkpoint.store_evaluation_parameters and catalog is not None:
+        # StoreEvaluationParametersAction recast (SURVEY §2 D4): publish
+        # the observed metrics so later gates can bound themselves with
+        # {"$PARAMETER": ...} kwargs — see expectations/params.py
         store_parameters(
             spark,
             catalog,

@@ -32,6 +32,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from greatex_spark.expectations.compiler import ValidationResult
 from greatex_spark.pipeline.checkpoint import (
@@ -84,15 +85,36 @@ def _stage(
     compute,
     run_name: str,
 ) -> DataFrame:
-    """Write-or-skip one stage, then return the committed snapshot."""
+    """Write-or-skip one stage, then return the committed snapshot (read
+    once: lineage and the gate both use that read)."""
     if resume and catalog.has_epoch(table, epoch):
         result.skipped.append(table)
-    else:
-        df = compute()
-        catalog.write_snapshot(df, table, epoch)
-        committed = catalog.read_snapshot(spark, table, epoch)
-        store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
-    return catalog.read_snapshot(spark, table, epoch)
+        return catalog.read_snapshot(spark, table, epoch)
+    catalog.write_snapshot(compute(), table, epoch)
+    committed = catalog.read_snapshot(spark, table, epoch)
+    store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
+    return committed
+
+
+def _bronze_source(
+    source_df: DataFrame | None, epoch: int, config: PipelineConfig
+) -> DataFrame:
+    if source_df is None:
+        raise ValueError(f"epoch {epoch} has no committed bronze; source_df required")
+    if not config.extract_from_html:
+        return source_df
+    # crawl feeds with raw html only: derive text at ingest via the
+    # codegen'd regexp extraction (functions/html.py); rows that
+    # already carry text keep it
+    from greatex_spark.functions.html import html_to_text
+
+    return source_df.withColumn(
+        "text",
+        F.coalesce(
+            F.nullif(F.col("text"), F.lit("")),
+            html_to_text(F.decode(F.col("html"), "UTF-8")),
+        ),
+    )
 
 
 def run_pipeline(
@@ -115,37 +137,10 @@ def run_pipeline(
     result = PipelineResult(run_name=run_name, epoch=epoch)
 
     # -- bronze ----------------------------------------------------------
-    if resume and catalog.has_epoch(BRONZE, epoch):
-        result.skipped.append(BRONZE)
-        bronze = catalog.read_snapshot(spark, BRONZE, epoch)
-    else:
-        if source_df is None:
-            raise ValueError(f"epoch {epoch} has no committed bronze; source_df required")
-        if config.extract_from_html:
-            # crawl feeds with raw html only: derive text at ingest via
-            # the codegen'd regexp extraction (functions/html.py); rows
-            # that already carry text keep it
-            from pyspark.sql import functions as F
-
-            from greatex_spark.functions.html import html_to_text
-
-            source_df = source_df.withColumn(
-                "text",
-                F.coalesce(
-                    F.nullif(F.col("text"), F.lit("")),
-                    html_to_text(F.decode(F.col("html"), "UTF-8")),
-                ),
-            )
-        if config.salted_bronze_layout:
-            # crawl feeds arrive clustered by domain (hot domains →
-            # straggler partitions); salt-spread on hash(url) before the
-            # first commit so every downstream stage starts balanced
-            from greatex_spark.operators.skew import salted_repartition
-
-            source_df = salted_repartition(source_df, "url")
-        catalog.write_snapshot(source_df, BRONZE, epoch)
-        bronze = catalog.read_snapshot(spark, BRONZE, epoch)
-        store_partition_lineage(spark, catalog, bronze, BRONZE, epoch, run_name)
+    bronze = _stage(
+        spark, catalog, result, BRONZE, epoch, resume,
+        lambda: _bronze_source(source_df, epoch, config), run_name,
+    )
     result.validations["source"] = run_checkpoint(
         spark, bronze,
         Checkpoint(

@@ -41,27 +41,16 @@ class PipelineConfig:
     gopher_thresholds: dict = field(
         default_factory=lambda: {**DEFAULT_THRESHOLDS, "max_words": 2000}
     )
-    dedup: bool = True
     minhash_num_perm: int = 64
     minhash_num_bands: int = 16
     # xxhash64 = GC-light numeric shingle hashing (hot path); "md5" is
     # the oracle-replayable spec family (same decisions up to hash
     # collisions) — see operators/dedup.py
     dedup_hash_family: str = "xxhash64"
-    # "anti" broadcasts the small dropped-id set so the text-carrying
-    # rows never shuffle in the survivor join (right for the few-%
-    # near-dup rate of quality-filtered web text); "semi" is the spec
-    # shape, right when much of the corpus is duplicate — see
-    # minhash_lsh_dedup
-    dedup_survivor_join: str = "anti"
     # heuristic features: Arrow-batched pandas UDF (hot path; identical
     # semantics, ~10-30x cheaper than the interpreted-HOF native spec —
     # see functions/heuristics_arrow.py) vs native Column expressions
     arrow_features: bool = True
-    # native path only: duplicate-n-gram fractions over hashed gram
-    # identities (GC-light hot path) vs gram strings (the exact spec the
-    # DuckDB pipeline oracle replays) — equal up to 64-bit collisions
-    hashed_ngrams: bool = True
     # real-model seam: paths to a fastText .bin / KenLM .arpa swap the
     # deterministic stand-ins for real models (lazily loaded once per
     # executor; see functions/langid.py, functions/perplexity.py).  The
@@ -86,10 +75,6 @@ class PipelineConfig:
     # survives it — opt-in because it rewrites text
     substring_trim: bool = False
     substring_trim_k: int = 13
-    # salt-spread bronze on hash(url) at commit (crawl feeds arrive
-    # clustered by domain; hot domains make straggler partitions) —
-    # costs one extra shuffle at ingest, so opt-in
-    salted_bronze_layout: bool = False
     # derive text from raw html at bronze ingest (functions/html.py
     # regexp extraction) for feeds that ship html only; rows that
     # already carry text keep it — opt-in, default preserves input text
@@ -159,7 +144,7 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
     else:
         step1 = df.select(
             "*",
-            quality_struct(F.col("text"), hashed_ngrams=config.hashed_ngrams).alias("__qs"),
+            quality_struct(F.col("text")).alias("__qs"),
             (ext_lang if ext_lang is not None else detect_lang("text")).alias("lang_pred"),
             ppl_udf(F.col("text")).alias("log_ppl"),
             scrubbed().alias("text_scrubbed"),
@@ -228,8 +213,6 @@ def drop_reason(config: PipelineConfig) -> Column:
 
 
 def dedup(df: DataFrame, config: PipelineConfig) -> DataFrame:
-    if not config.dedup:
-        return df
     from greatex_spark.operators.dedup import minhash_lsh_dedup
 
     return minhash_lsh_dedup(
@@ -239,7 +222,9 @@ def dedup(df: DataFrame, config: PipelineConfig) -> DataFrame:
         num_perm=config.minhash_num_perm,
         num_bands=config.minhash_num_bands,
         family=config.dedup_hash_family,
-        survivor_join=config.dedup_survivor_join,
+        # broadcast the small dropped-id set so the text-carrying rows
+        # never shuffle (the few-% near-dup rate of filtered web text)
+        survivor_join="anti",
     )
 
 

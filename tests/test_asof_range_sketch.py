@@ -171,6 +171,41 @@ class TestRangeJoin:
         )
         assert "BroadcastHashJoin" in plan and "NestedLoop" not in plan
 
+    def test_bins_are_long_integer_division(self, spark):
+        """Bin ids are ``floor(epoch_us / W)`` on longs, as documented:
+        no DOUBLE quotient, which rounds near the end of the timestamp
+        range (9999-12-31 23:59:59.999999 at W = 1 s lands one bin
+        high)."""
+        from greatex_spark.operators.rangejoin import range_join
+
+        points, intervals = self._frames(spark)
+        plan = (
+            range_join(points, intervals, bin_seconds=1)
+            ._jdf.queryExecution()
+            .optimizedPlan()
+            .toString()
+        )
+        assert "double" not in plan.lower(), plan
+
+    def test_empty_and_inverted_intervals_are_dropped(self, spark):
+        """``end <= start`` contains no point.  An inverted interval
+        must not explode to a descending bin run as long as its span
+        (124 years at W = 1 s is past Spark's array size limit)."""
+        from greatex_spark.operators.rangejoin import range_join
+
+        points, intervals = self._frames(spark)
+        degenerate = spark.createDataFrame(
+            [
+                (8, _ts("2024-01-01 10:30:00"), _ts("2024-01-01 10:30:00")),
+                (9, _ts("2024-01-01 11:00:00"), _ts("1900-01-01 00:00:00")),
+            ],
+            "iv_id long, start timestamp, end timestamp",
+        )
+        rows = range_join(
+            points, intervals.unionByName(degenerate), bin_seconds=1
+        ).collect()
+        assert sorted((r.event_id, r.iv_id) for r in rows) == [(1, 7), (2, 7)]
+
 
 class TestCmsHeavyHitters:
     def _items(self, spark):
@@ -212,6 +247,28 @@ class TestCmsHeavyHitters:
             for r in cms_heavy_hitters_arrow(items, "item", threshold=50).collect()
         }
         assert spec == arrow and len(spec) >= 3
+
+    def test_arrow_path_keeps_long_item_type(self, spark):
+        """A ``long`` item column comes back as ``long``, with the spec
+        path's exact (item, estimate) pairs."""
+        from pyspark.sql import types as T
+
+        from greatex_spark.operators.cms import (
+            cms_heavy_hitters,
+            cms_heavy_hitters_arrow,
+        )
+
+        heavy = [(1000 + i,) for i in range(3) for _ in range(50 + i)]
+        light = [(i,) for i in range(2000)]
+        items = spark.createDataFrame(heavy + light, "item long")
+        out = cms_heavy_hitters_arrow(items, "item", threshold=50)
+        assert out.schema["item"].dataType == T.LongType()
+        spec = {
+            (r.item, r.est_count)
+            for r in cms_heavy_hitters(items, "item", threshold=50).collect()
+        }
+        arrow = {(r.item, r.est_count) for r in out.collect()}
+        assert spec == arrow and {1000, 1001, 1002} <= {i for i, _ in spec}
 
     def test_matches_duckdb_bit_for_bit(self, spark, sf_dir):
         import duckdb

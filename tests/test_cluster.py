@@ -93,8 +93,8 @@ def test_cc_reliable_checkpoint_dir_used_and_result_unchanged(spark, tmp_path):
 def test_cc_on_round_seam_counts_doubling_rounds(spark):
     """The on_round measurement seam fires once per materialized round
     with 1-based indices, and the round count over a long path is
-    O(log2 diameter) — the property the cc_1m bench section records at
-    1M edges.  A 128-edge path (diameter 128) must close in well under
+    O(log2 diameter), the property that keeps 1M-edge graphs cheap.
+    A 128-edge path (diameter 128) must close in well under
     128 rounds; path doubling predicts ~log2(128)=7 plus the final
     no-change probe round."""
     edges = [(i, i + 1) for i in range(128)]

@@ -818,3 +818,54 @@ class TestIVFPQProbeArrow:
             for r in brute_force_l2_topk_arrow(q, df, k=5).collect()
         }
         assert spec == arw and len(spec) == 20
+
+    def test_l2_arrow_rounding_tie_at_k_boundary_keeps_lowest_id(self, spark):
+        """Three neighbours whose squared distances differ only below the
+        6th decimal tie after rounding; the spec keeps the lowest id, so
+        the per-batch selection must round first and break ties by id."""
+        from greatex_spark.operators.ann import (
+            brute_force_l2_topk,
+            brute_force_l2_topk_arrow,
+        )
+
+        rows = [
+            (0, [0.0]),
+            (10, [1.0000002]),  # d ≈ 1.0000004 → 1.0
+            (11, [1.00000015]),  # d ≈ 1.0000003 → 1.0
+            (12, [1.0000001]),  # d ≈ 1.0000002 → 1.0
+            (20, [3.0]),
+        ]
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        df = df.coalesce(1)  # one Arrow batch holds every candidate
+        q = df.where("vec_id = 0")
+        spec = [
+            (r.neighbor_id, r.dist) for r in brute_force_l2_topk(q, df, k=1).collect()
+        ]
+        arw = [
+            (r.neighbor_id, r.dist)
+            for r in brute_force_l2_topk_arrow(q, df, k=1).collect()
+        ]
+        assert spec == [(10, 1.0)]
+        assert arw == spec
+
+    @pytest.mark.parametrize("given", ["centroids", "codebooks"])
+    def test_half_given_quantizers_rejected(self, spark, given):
+        """Residual codebooks describe the cells they were trained
+        against: a lone centroid set or a lone codebook set must not
+        be paired with a freshly trained other half."""
+        from greatex_spark.operators.ann import (
+            _vec_matrix,
+            ivfpq_topk,
+            ivfpq_topk_probe_arrow,
+            train_ivfpq,
+        )
+
+        df = self._clustered_df(spark, n=200)
+        cents, cbs = train_ivfpq(
+            _vec_matrix([r.embedding for r in df.collect()]), nlist=4, m=4, ksub=16
+        )
+        kw = {"centroids": cents} if given == "centroids" else {"codebooks": cbs}
+        q = df.where("vec_id < 2")
+        for fn in (ivfpq_topk, ivfpq_topk_probe_arrow):
+            with pytest.raises(ValueError, match="centroids and codebooks"):
+                fn(q, df, k=3, nlist=4, nprobe=2, m=4, ksub=16, **kw)

@@ -3,9 +3,9 @@
 ``entry(spark)`` — flagship end-to-end quality-filter query at sf0.001.
 ``queries()``   — one callable per implemented operator (SURVEY.md §2).
 ``oracle_sql()`` — equivalent DuckDB SQL per query; every entry has one
-(the IVF quantizer replays via a deterministic numpy Lloyd's retrained
-from the same parquet, and the pipeline entries replay from a committed
-bronze fixture parquet the SQL reads directly).
+(the DSIR language models refit from the same parquet, and the pipeline
+entries replay from a committed bronze fixture parquet the SQL reads
+directly).
 
 Determinism contracts used throughout so Spark and DuckDB hash-match:
 
@@ -16,11 +16,11 @@ Determinism contracts used throughout so Spark and DuckDB hash-match:
 - integer-count sums CAST to BIGINT in the SQL (DuckDB widens int sums
   to HUGEINT, which pandas renders float64 and the driver's
   dtype-sensitive hash then rejects);
-- the dedup/ANN hash family derives 60-bit hashes from md5 (identical
+- the dedup hash family derives 60-bit hashes from md5 (identical
   in both engines) with literal universal-hash permutation constants —
   see greatex_spark.operators.dedup;
 - sequential IEEE folds (list_reduce) replay Spark's F.aggregate
-  accumulation order for vector math and the perplexity model;
+  accumulation order for the DSIR score and the perplexity model;
 - regexes are restricted to the common java.util.regex / RE2 dialect
   (see greatex_spark.functions.pii);
 - rankings round scores to 6 decimals and tie-break on ids.
@@ -50,12 +50,6 @@ from greatex_spark.functions.textstats import (
     rolling_fingerprint64_duckdb_sql,
     whitespace_token_count,
 )
-from greatex_spark.operators.ann import (
-    brute_force_topk,
-    embedding_cosine_dedup_duckdb_sql,
-    lsh_topk,
-    lsh_topk_duckdb_sql,
-)
 from greatex_spark.operators.dedup import (
     content_fingerprint_index,
     exact_dedup,
@@ -69,8 +63,6 @@ from greatex_spark.operators.dedup import (
     simhash_dedup,
     simhash_dedup_duckdb_sql,
 )
-from greatex_spark.operators.multimodal import extract_features, media_from_text
-from greatex_spark.pages import generate_pages
 from greatex_spark.pipeline.stages import (
     PipelineConfig,
     dedup,
@@ -1862,136 +1854,7 @@ WHERE a.doc_id < 200
 
 
 # ---------------------------------------------------------------------------
-# similarity search
-
-
-def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return brute_force_topk(queries_df, emb, k=5)
-
-
-def _ann_brute_topk_sql() -> str:
-    dot = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-    nq = "sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-    nc = "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))"
-    cos = f"CASE WHEN {nq} * {nc} > 0 THEN {dot} / ({nq} * {nc}) ELSE 0.0 END"
-    return f"""
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({cos}, 6) AS score
-  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 8),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC)
-           AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-FROM ranked WHERE rank <= 5
-"""
-
-
-def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k: deterministic hash-sampled numpy-Lloyd's
-    coarse quantizer (no RNG, no eager corpus count), literal-centroid
-    cell assignment, nprobe cells, exact rerank.  Fully oracle-replayed:
-    the DuckDB twin retrains the identical quantizer from the same
-    parquet and inlines the same centroids."""
-    from greatex_spark.operators.ann import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return ivf_topk(queries_df, emb, k=5, nlist=8, nprobe=4)
-
-
-def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC top-k (operators/ann.py:pq_topk, Jégou
-    et al. 2011): deterministic hash-sampled per-subspace Lloyd's
-    codebooks, corpus quantized to m=8 codes (the 16×-smaller stored
-    representation that makes embedding scans affordable at 100 TB),
-    exact queries broadcast into a flat asymmetric-distance scan.
-    Oracle-replayed end-to-end: the DuckDB twin retrains the identical
-    codebooks from the same parquet."""
-    from greatex_spark.operators.ann import pq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return pq_topk(queries_df, emb, k=5, m=8, ksub=16)
-
-
-def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ top-k (operators/ann.py:ivfpq_topk, Jégou et al. 2011):
-    coarse cells prune candidates to nprobe/nlist of the corpus AND the
-    scan reads PQ codes of the residual vec − centroid[cell] — the
-    production composition at 10^9+ vectors (persisted representation
-    ≈ m+4 bytes/row, candidates bounded by the probe set).  Fully
-    oracle-replayed: the DuckDB twin retrains both quantizers from the
-    same parquet via the identical hash sample."""
-    from greatex_spark.operators.ann import ivfpq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return ivfpq_topk(queries_df, emb, k=5, nlist=8, nprobe=4, m=8, ksub=16)
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH top-k (bucketed candidates, exact rerank) —
-    approximate by construction, so rows-only; recall is measured against
-    brute force in tests/test_operators.py."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return lsh_topk(queries_df, emb, dim=64, k=5)
-
-
-def emb_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate removal (fifth dedup family): drop a row
-    iff a lower-id row in the same random-hyperplane bucket has cosine
-    ≥ threshold.  Seeded-literal planes + sequential IEEE folds → the
-    DuckDB oracle replays the same drops."""
-    from greatex_spark.operators.ann import embedding_cosine_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_cosine_dedup(emb, dim=64, threshold=0.3).select(
-        "vec_id", "label"
-    )
-
-
-def emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space benchmark decontamination (operators/ann.py):
-    drop corpus vectors whose cosine vs ANY benchmark vector (the
-    deterministic vec_id % 31 eval slice) reaches the threshold —
-    the semantic complement of doc_decontaminate's 13-gram rule.
-    Broadcast nested-loop semi join: the corpus never shuffles."""
-    from greatex_spark.operators.ann import embedding_decontaminate
-
-    emb = _t(spark, sf_dir, "embeddings")
-    bench = emb.where(F.col("vec_id") % 31 == 0)
-    return embedding_decontaminate(emb, bench, dim=64, threshold=0.35).select(
-        "vec_id", "label"
-    )
-
-
-def _emb_decontaminate_sql() -> str:
-    from greatex_spark.operators.ann import embedding_decontaminate_duckdb_sql
-
-    return embedding_decontaminate_duckdb_sql(
-        "t.vec_id, t.label", threshold=0.35
-    )
-
-
-def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (sixth dedup family, Abbas et al. 2023): k-means cells
-    as semantic candidate groups, within-cell cosine drop rule, bounded
-    representatives.  The deterministic quantizer (hash-sampled numpy
-    Lloyd's, as in ann_ivf_topk) lets the DuckDB oracle retrain the
-    identical centroids and replay every drop."""
-    from greatex_spark.operators.ann import semdedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return semdedup(emb, dim=64, threshold=0.4, nlist=8).select(
-        "vec_id", "label"
-    )
+# data selection
 
 
 DSIR_BUCKETS = 1024
@@ -2018,18 +1881,8 @@ def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source", "dsir_logw", "dsir_key")
 
 
-def emb_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    first = F.element_at(F.col("embedding"), 1).cast("double")
-    return emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(first).alias("min_first"),
-        F.max(first).alias("max_first"),
-    )
-
-
 # ---------------------------------------------------------------------------
-# pipeline + multimodal (rows-only: inputs are generated/binary)
+# staged pipeline
 
 
 def _bronze_fixture(sf_dir: str) -> str:
@@ -2575,84 +2428,13 @@ FROM __rows
 """
 
 
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Opaque-binary media plumbing: documents → media rows (payload =
-    utf8 bytes, typed metadata) → mapInPandas feature extraction."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    media = media_from_text(docs)
-    feats = extract_features(media)
-    return feats.select(
-        "media_id", "kind", F.size("features").alias("dim"),
-        F.element_at("features", 1).alias("f0"),
-    )
-
-
-def _ann_ivf_oracle() -> dict[str, str]:
-    """DuckDB twin of :func:`ann_ivf_topk` — the oracle harness runs at
-    sf0.01 (driver contract), so the quantizer retrains on that parquet
-    with the identical hash sample + deterministic Lloyd's and the
-    centroids inline as literals.  ``SPARK_GRAFT_ORACLE_SF_DIR``
-    overrides the corpus (the pytest parity suite checks the same
-    contract at sf0.001).  If the fixture is unavailable the entry is
-    omitted and the driver falls back to the rows-only check."""
-    import os
-
-    from greatex_spark.operators.ann import (
-        ivf_centroids_from_parquet,
-        ivf_topk_duckdb_sql,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        cents = ivf_centroids_from_parquet(f"{sf_dir}/embeddings.parquet", nlist=8)
-    except Exception:
-        return {}
-    return {"ann_ivf_topk": ivf_topk_duckdb_sql("vec_id < 8", cents, nprobe=4)}
-
-
-def _ann_pq_oracle() -> dict[str, str]:
-    """DuckDB twin of :func:`ann_pq_topk` — same retrained-quantizer
-    contract as :func:`_ann_ivf_oracle`, per-subspace codebooks."""
-    import os
-
-    from greatex_spark.operators.ann import (
-        pq_codebooks_from_parquet,
-        pq_topk_duckdb_sql,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        cbs = pq_codebooks_from_parquet(f"{sf_dir}/embeddings.parquet", m=8, ksub=16)
-    except Exception:
-        return {}
-    return {"ann_pq_topk": pq_topk_duckdb_sql("vec_id < 8", cbs)}
-
-
-def _ann_ivfpq_oracle() -> dict[str, str]:
-    """DuckDB twin of :func:`ann_ivfpq_topk` — same retrained-quantizer
-    contract: one hash sample trains the coarse centroids AND the
-    residual PQ codebooks, both inlined as literals."""
-    import os
-
-    from greatex_spark.operators.ann import (
-        ivfpq_quantizers_from_parquet,
-        ivfpq_topk_duckdb_sql,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        cents, cbs = ivfpq_quantizers_from_parquet(
-            f"{sf_dir}/embeddings.parquet", nlist=8, m=8, ksub=16
-        )
-    except Exception:
-        return {}
-    return {"ann_ivfpq_topk": ivfpq_topk_duckdb_sql("vec_id < 8", cents, cbs, nprobe=4)}
-
-
 def _doc_dsir_oracle() -> dict[str, str]:
     """DuckDB twin of :func:`doc_dsir_sample` — refits both hashed LMs
     from the same parquet (identical integer counts → identical
-    driver-side math.log literals) and replays the fold + Gumbel key."""
+    driver-side math.log literals) and replays the fold + Gumbel key.
+    The LMs refit on sf0.01 unless ``SPARK_GRAFT_ORACLE_SF_DIR`` names
+    another corpus (the pytest parity suite sets sf0.001).  If the
+    fixture is unavailable the entry is omitted."""
     import os
 
     from greatex_spark.operators.dsir import (
@@ -2675,26 +2457,6 @@ def _doc_dsir_oracle() -> dict[str, str]:
             DSIR_N,
             num_buckets=DSIR_BUCKETS,
         )
-    }
-
-
-def _emb_semdedup_oracle() -> dict[str, str]:
-    """DuckDB twin of :func:`emb_semdedup` — same retrained-quantizer
-    contract as :func:`_ann_ivf_oracle`."""
-    import os
-
-    from greatex_spark.operators.ann import (
-        ivf_centroids_from_parquet,
-        semdedup_duckdb_sql,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    try:
-        cents = ivf_centroids_from_parquet(f"{sf_dir}/embeddings.parquet", nlist=8)
-    except Exception:
-        return {}
-    return {
-        "emb_semdedup": semdedup_duckdb_sql("t.vec_id, t.label", cents, threshold=0.4)
     }
 
 
@@ -2792,22 +2554,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": url_canonicalize,
         "url_dedup_domains": url_dedup_domains,
         "url_quality_filter": url_quality_filter,
-        "ann_brute_topk": ann_brute_topk,
-        "ann_lsh_topk": ann_lsh_topk,
-        "ann_ivf_topk": ann_ivf_topk,
-        "ann_pq_topk": ann_pq_topk,
-        "ann_ivfpq_topk": ann_ivfpq_topk,
-        "emb_cosine_dedup": emb_cosine_dedup,
-        "emb_semdedup": emb_semdedup,
-        "emb_decontaminate": emb_decontaminate,
         "doc_dsir_sample": doc_dsir_sample,
-        "emb_label_stats": emb_label_stats,
         "pipeline_pages_gold": pipeline_pages_gold,
         "pipeline_lineage_metrics": pipeline_lineage_metrics,
         "pipeline_stage_attrition": pipeline_stage_attrition,
         "corpus_domain_report": corpus_domain_report,
         "pipeline_drop_audit": pipeline_drop_audit,
-        "multimodal_features": multimodal_features,
     }
 
 
@@ -2933,38 +2685,8 @@ QUALIFY row_number() OVER (
         "url_canonicalize": _url_canonicalize_sql(),
         "url_dedup_domains": _url_dedup_domains_sql(),
         "url_quality_filter": _url_quality_filter_sql(),
-        "ann_brute_topk": _ann_brute_topk_sql(),
-        "ann_lsh_topk": lsh_topk_duckdb_sql("vec_id < 8"),
-        "emb_cosine_dedup": embedding_cosine_dedup_duckdb_sql(
-            "t.vec_id, t.label", threshold=0.3
-        ),
-        "emb_decontaminate": _emb_decontaminate_sql(),
-        "emb_label_stats": """
-SELECT label, count(*) AS n,
-  min(CAST(embedding[1] AS DOUBLE)) AS min_first,
-  max(CAST(embedding[1] AS DOUBLE)) AS max_first
-FROM embeddings GROUP BY label
-""",
-        **_ann_ivf_oracle(),
-        **_ann_pq_oracle(),
-        **_ann_ivfpq_oracle(),
-        **_emb_semdedup_oracle(),
         **_doc_dsir_oracle(),
         "pipeline_pages_gold": _pipeline_pages_gold_sql(),
-        # the fake decoder is a sha256 fold of the payload bytes, so even
-        # the multimodal plumbing replays in SQL (payload = utf8(text),
-        # feature_j = LE-uint16 of digest bytes / 65535 rounded 6)
-        "multimodal_features": """
-SELECT doc_id AS media_id,
-  (['image', 'audio', 'video'])[(doc_id % 3) + 1] AS kind,
-  CASE WHEN text IS NULL THEN NULL ELSE CAST(16 AS INT) END AS dim,
-  round((('0x' || substr(h, 1, 2))::BIGINT
-         + 256 * ('0x' || substr(h, 3, 2))::BIGINT) / 65535.0, 6) AS f0
-FROM (
-  SELECT doc_id, text,
-    sha256(text || (['image', 'audio', 'video'])[(doc_id % 3) + 1]) AS h
-  FROM documents WHERE doc_id < 100)
-""",
         # the metrics/lineage plane, replayed per-expectation from the
         # same staged CTEs as the gold data path (run-scoped columns —
         # run_name, timestamps, duration — excluded from the compared

@@ -19,7 +19,7 @@ Distributed shape (the part that matters at 100 TB):
    rows before the exchange, so the shuffle carries kilobytes no
    matter the input size.
 2. The d·w integer table is collected (d=4, w=4096 → 16k longs,
-   driver-bounded like the IVF centroid literals) and folded back as
+   driver-bounded) and folded back as
    LITERAL arrays: the estimate is ``least(array[j][bucket_j])`` — a
    map-side projection, zero joins.
 3. Only rows passing ``est >= T`` reach the ``distinct`` — the

@@ -22,8 +22,8 @@ Pipeline shape (all Spark-native, no UDFs):
    tie-break, absorbing cross-engine ``ln`` ulp differences — the
    repo-wide round-before-tie-break convention).
 
-At 10^12 documents: fit the models on bounded hash-samples (the same
-``_hash_sample`` discipline as the IVF quantizer); scoring is a single
+At 10^12 documents: fit the models on bounded, deterministic
+hash-samples of the corpus; scoring is a single
 projection; sampling shuffles only per-partition top-n heads.
 
 The reference has no counterpart (beyond-reference LLM-pipeline

@@ -37,7 +37,6 @@ def gated_ingest(
     quarantine_dir: str,
     checkpoint_dir: str,
     suite: Suite,
-    metrics_rows: list | None = None,
     max_files_per_trigger: int | None = None,
     catalog: Catalog | None = None,
 ) -> None:
@@ -47,8 +46,7 @@ def gated_ingest(
     ``catalog``, when given, appends each micro-batch's typed gate
     metrics to the SAME ``metrics`` table the batch checkpoints use
     (``pipeline.checkpoint.store_metrics``, batch_id as the epoch) —
-    batch and streaming runs share one lineage store.  ``metrics_rows``
-    additionally collects the flattened dicts in-process (tests)."""
+    batch and streaming runs share one lineage store."""
     reader = spark.readStream.schema(PAGE_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -61,8 +59,6 @@ def gated_ingest(
             batch_identifier=f"stream-batch-{batch_id}",
             collect_partial_unexpected=False,
         )
-        if metrics_rows is not None:
-            metrics_rows.extend(vr.to_metrics_rows())
         if catalog is not None:
             # same typed store as the batch gates — one metrics table
             # for the whole lake, streaming epochs keyed by batch_id

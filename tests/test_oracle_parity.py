@@ -3,30 +3,33 @@ Spark query on the sf0.001 corpus (row count, sorted column names,
 values) — the same comparison the driver harness performs at sf0.01.
 
 Uses sf0.001 to keep the suite fast; ``tools/check_oracle.py`` runs the
-identical check at sf0.01.
+identical check at sf0.01; this suite reuses its table list and its
+dtype-strict ``compare``.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
-# corpus-dependent oracles (IVF centroid literals) must retrain on the
-# SAME corpus this suite runs against — set before oracle_sql() is called
+# corpus-dependent oracles (DSIR LM literals) must refit on the SAME
+# corpus this suite runs against — set before oracle_sql() is called
 os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
 
 import __spark_entry__ as entrymod  # noqa: E402
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from check_oracle import TABLES, compare  # noqa: E402
+
+# built once per module: oracle_sql() refits the DSIR LMs on every call
+QUERIES = entrymod.queries()
+ORACLES = entrymod.oracle_sql()
 
 
 @pytest.fixture(scope="module")
@@ -40,33 +43,16 @@ def duck():
     con.close()
 
 
-def _norm(df):
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
-def _eq(a, b):
-    if isinstance(a, float) or isinstance(b, float):
-        fa, fb = float(a), float(b)
-        return (math.isnan(fa) and math.isnan(fb)) or fa == fb
-    return a == b
-
-
-@pytest.mark.parametrize("name", sorted(entrymod.oracle_sql()))
+@pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, duck, name):
-    sdf = entrymod.queries()[name](spark, SF_DIR).toPandas()
-    ddf = duck.execute(entrymod.oracle_sql()[name]).fetchdf()
-    assert len(sdf) == len(ddf), f"row count {len(sdf)} != {len(ddf)}"
-    assert sorted(sdf.columns) == sorted(ddf.columns)
-    s, d = _norm(sdf), _norm(ddf)
-    for c in s.columns:
-        mism = [
-            (i, x, y) for i, (x, y) in enumerate(zip(s[c], d[c])) if not _eq(x, y)
-        ]
-        assert not mism, f"col {c}: first mismatches {mism[:3]}"
+    sdf = QUERIES[name](spark, SF_DIR).toPandas()
+    ddf = duck.execute(ORACLES[name]).fetchdf()
+    problems = compare(name, sdf, ddf)
+    assert not problems, problems
+
+
+def test_every_query_has_an_oracle():
+    assert set(QUERIES) == set(ORACLES)
 
 
 def test_entry_runs(spark):
@@ -76,8 +62,7 @@ def test_entry_runs(spark):
 
 
 def test_rows_only_queries_run(spark):
-    oracles = entrymod.oracle_sql()
-    for name, fn in entrymod.queries().items():
-        if name in oracles:
+    for name, fn in QUERIES.items():
+        if name in ORACLES:
             continue
         assert fn(spark, SF_DIR).count() >= 0, name

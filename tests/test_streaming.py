@@ -4,12 +4,15 @@ resume, and windowed event-time aggregation."""
 from __future__ import annotations
 
 import os
+from collections import Counter
 
 from pyspark.sql import functions as F
 
 from greatex_spark.expectations.spec import E, Suite
 from greatex_spark.pages import generate_pages
+from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
 from greatex_spark.streaming import gated_ingest, windowed_page_counts
+from greatex_spark.tables import Catalog
 
 
 def _suite() -> Suite:
@@ -24,6 +27,11 @@ def _land(df, path):
     df.coalesce(1).write.mode("append").parquet(path)
 
 
+def _stored_metrics(spark, catalog: Catalog) -> list:
+    """Every gate-metric row the ingest persisted in the catalog."""
+    return catalog.read_latest(spark, METRICS_TABLE).collect()
+
+
 def test_gated_ingest_and_resume(spark, tmp_path):
     landing = str(tmp_path / "landing")
     bronze = str(tmp_path / "bronze")
@@ -34,24 +42,26 @@ def test_gated_ingest_and_resume(spark, tmp_path):
     _land(pages.where(F.col("url").endswith("0")), landing)
     _land(pages.where(F.col("url").endswith("1")), landing)
 
-    metrics: list = []
-    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), metrics)
+    catalog = Catalog(str(tmp_path / "lake"))
+    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), catalog=catalog)
     first_count = spark.read.parquet(bronze).count()
     assert first_count == pages.where(
         F.col("url").endswith("0") | F.col("url").endswith("1")
     ).count()
-    assert metrics and all(m["successful_outcome"] for m in metrics)
+    metrics = _stored_metrics(spark, catalog)
+    assert metrics and all(m.successful_outcome for m in metrics)
     assert not os.path.exists(quarantine)
 
     # resume: land one more file; only IT is processed
     _land(pages.where(F.col("url").endswith("2")), landing)
-    metrics2: list = []
-    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), metrics2)
+    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), catalog=catalog)
     assert spark.read.parquet(bronze).count() == first_count + pages.where(
         F.col("url").endswith("2")
     ).count()
-    # exactly one new micro-batch was validated
-    assert {m["batch_identifier"] for m in metrics2} == {"stream-batch-1"}
+    # the rows the resumed run appended: exactly one new micro-batch
+    # was validated
+    metrics2 = Counter(_stored_metrics(spark, catalog)) - Counter(metrics)
+    assert {m.batch_identifier for m in metrics2} == {"stream-batch-1"}
 
 
 def test_gated_ingest_quarantines_bad_batch(spark, tmp_path):
@@ -64,20 +74,17 @@ def test_gated_ingest_quarantines_bad_batch(spark, tmp_path):
         "url", F.regexp_replace("url", "^https://", "ftp://")
     )
     _land(bad, landing)
-    metrics: list = []
-    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), metrics)
+    catalog = Catalog(str(tmp_path / "lake"))
+    gated_ingest(spark, landing, bronze, quarantine, ckpt, _suite(), catalog=catalog)
     assert not os.path.exists(bronze)
     assert spark.read.parquet(quarantine).count() == 20
-    assert any(not m["successful_outcome"] for m in metrics)
+    assert any(not m.successful_outcome for m in _stored_metrics(spark, catalog))
 
 
 def test_gated_ingest_metrics_share_batch_store(spark, tmp_path):
     """Streaming gate metrics land in the SAME catalog `metrics` table
     as the batch checkpoints — one lineage store, identical schema,
     streaming epochs keyed by micro-batch id."""
-    from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
-    from greatex_spark.tables import Catalog
-
     landing = str(tmp_path / "landing")
     catalog = Catalog(str(tmp_path / "lake"))
     pages = generate_pages(spark, 40, seed=3)

@@ -22,18 +22,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-# The oracle-SQL builders in __spark_entry__ (bronze fixture path, IVF
-# centroid literals, DSIR LM literals) size themselves from
-# SPARK_GRAFT_ORACLE_SF_DIR at import time.  Propagate this harness's
-# scale factor BEFORE the import, or a second-scale run silently
-# compares a Spark query at sf0.1 against a DuckDB twin built for
-# sf0.01 (the exact mismatch behind the 8 spurious failures in the
-# first sf0.1 sweep).
-os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = os.environ.get(
-    "GREATEX_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from greatex_spark.session import get_spark  # noqa: E402
@@ -41,7 +30,7 @@ from greatex_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("GREATEX_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
@@ -106,6 +95,13 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
 
 def main() -> int:
     only = set(sys.argv[1:])
+    # The oracle-SQL builders in __spark_entry__ (bronze fixture path,
+    # DSIR LM literals) size themselves from SPARK_GRAFT_ORACLE_SF_DIR
+    # when oracle_sql() runs.  Propagate this harness's scale factor
+    # first, or a second-scale run silently compares a Spark query at
+    # sf0.1 against a DuckDB twin built for sf0.01.  Setting it here,
+    # not at import, keeps ``compare`` importable without side effects.
+    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
     spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:

@@ -20,7 +20,8 @@ Determinism contracts used throughout so Spark and DuckDB hash-match:
   in both engines) with literal universal-hash permutation constants —
   see greatex_spark.operators.dedup;
 - sequential IEEE folds (list_reduce) replay Spark's F.aggregate
-  accumulation order for the DSIR score and the perplexity model;
+  accumulation order for embedding cosines, the DSIR score and the
+  perplexity model;
 - regexes are restricted to the common java.util.regex / RE2 dialect
   (see greatex_spark.functions.pii);
 - rankings round scores to 6 decimals and tie-break on ids.
@@ -62,6 +63,13 @@ from greatex_spark.operators.dedup import (
     ngram_jaccard_dedup_duckdb_sql,
     simhash_dedup,
     simhash_dedup_duckdb_sql,
+)
+from greatex_spark.operators.embedding import (
+    brute_force_topk,
+    embedding_cosine_dedup,
+    embedding_cosine_dedup_duckdb_sql,
+    embedding_decontaminate,
+    embedding_decontaminate_duckdb_sql,
 )
 from greatex_spark.pipeline.stages import (
     PipelineConfig,
@@ -1854,6 +1862,71 @@ WHERE a.doc_id < 200
 
 
 # ---------------------------------------------------------------------------
+# embedding operators
+
+
+def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    queries_df = emb.where(F.col("vec_id") < 8)
+    return brute_force_topk(queries_df, emb, k=5)
+
+
+def _ann_brute_topk_sql() -> str:
+    dot = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
+    nq = "sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
+    nc = "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))"
+    cos = f"CASE WHEN {nq} * {nc} > 0 THEN {dot} / ({nq} * {nc}) ELSE 0.0 END"
+    return f"""
+WITH scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         round({cos}, 6) AS score
+  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
+  WHERE q.vec_id < 8),
+ranked AS (
+  SELECT query_id, neighbor_id, score,
+         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC)
+           AS rank
+  FROM scored)
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
+FROM ranked WHERE rank <= 5
+"""
+
+
+def emb_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-duplicate removal: drop a row iff a lower-id row
+    in the same random-hyperplane bucket has cosine ≥ threshold.
+    Seeded-literal planes + sequential IEEE folds → the DuckDB oracle
+    replays the same drops."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return embedding_cosine_dedup(emb, dim=64, threshold=0.3).select(
+        "vec_id", "label"
+    )
+
+
+def emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-space benchmark decontamination: drop corpus vectors
+    whose cosine vs ANY benchmark vector (the deterministic
+    vec_id % 31 eval slice) reaches the threshold — the semantic
+    complement of doc_decontaminate's 13-gram rule.  Broadcast
+    nested-loop semi join: the corpus never shuffles."""
+    emb = _t(spark, sf_dir, "embeddings")
+    bench = emb.where(F.col("vec_id") % 31 == 0)
+    return embedding_decontaminate(emb, bench, dim=64, threshold=0.35).select(
+        "vec_id", "label"
+    )
+
+
+def emb_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = _t(spark, sf_dir, "embeddings")
+    first = F.element_at(F.col("embedding"), 1).cast("double")
+    return emb.groupBy("label").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(first).alias("min_first"),
+        F.max(first).alias("max_first"),
+    )
+
+
+# ---------------------------------------------------------------------------
 # data selection
 
 
@@ -2554,6 +2627,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": url_canonicalize,
         "url_dedup_domains": url_dedup_domains,
         "url_quality_filter": url_quality_filter,
+        "ann_brute_topk": ann_brute_topk,
+        "emb_cosine_dedup": emb_cosine_dedup,
+        "emb_decontaminate": emb_decontaminate,
+        "emb_label_stats": emb_label_stats,
         "doc_dsir_sample": doc_dsir_sample,
         "pipeline_pages_gold": pipeline_pages_gold,
         "pipeline_lineage_metrics": pipeline_lineage_metrics,
@@ -2685,6 +2762,19 @@ QUALIFY row_number() OVER (
         "url_canonicalize": _url_canonicalize_sql(),
         "url_dedup_domains": _url_dedup_domains_sql(),
         "url_quality_filter": _url_quality_filter_sql(),
+        "ann_brute_topk": _ann_brute_topk_sql(),
+        "emb_cosine_dedup": embedding_cosine_dedup_duckdb_sql(
+            "t.vec_id, t.label", threshold=0.3
+        ),
+        "emb_decontaminate": embedding_decontaminate_duckdb_sql(
+            "t.vec_id, t.label", threshold=0.35
+        ),
+        "emb_label_stats": """
+SELECT label, count(*) AS n,
+  min(CAST(embedding[1] AS DOUBLE)) AS min_first,
+  max(CAST(embedding[1] AS DOUBLE)) AS max_first
+FROM embeddings GROUP BY label
+""",
         **_doc_dsir_oracle(),
         "pipeline_pages_gold": _pipeline_pages_gold_sql(),
         # the metrics/lineage plane, replayed per-expectation from the

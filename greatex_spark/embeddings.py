@@ -1,17 +1,16 @@
 """Deterministic clustered synthetic embeddings, generated distributed.
 
-The ANN crossover benchmark (approximate vs exact search) needs a
-corpus where approximate indexing can win: real text/image embeddings
-are CLUSTERED (documents about one topic collapse into a small region),
-which is exactly the regime IVF/LSH exploit.  The driver-provided
-``embeddings.parquet`` fixture is uniform-random — the worst case for
-any space-partitioning index — so this module synthesizes a clustered
-corpus the same way ``greatex_spark.pages`` synthesizes pages: fixed
-seed, no external data, deterministic per row id regardless of
-partitioning or executor count.
+Real text/image embeddings are CLUSTERED (documents about one topic
+collapse into a small region); the ``embeddings.parquet`` test
+fixture is uniform-random.  This module
+synthesizes a clustered corpus for the embedding operators' tests
+(:mod:`greatex_spark.operators.embedding`) the same way
+``greatex_spark.pages`` synthesizes pages: fixed seed, no external
+data, deterministic per row id regardless of partitioning or executor
+count.
 
 Construction: ``n_clusters`` centroids are drawn once driver-side from
-seeded numpy (tiny: nlist × dim floats, shipped in the task closure);
+seeded numpy (tiny: n_clusters × dim floats, shipped in the task closure);
 row ``i`` belongs to cluster ``i % n_clusters`` and equals
 ``centroid + noise_scale * u`` where ``u`` is SplitMix64-mixed uniform
 noise derived from ``(seed, i, component)`` — counter-based, so any
@@ -79,7 +78,7 @@ def generate_clustered_embeddings(
     float32 ``embedding`` = centroid[cluster] + noise.  With the default
     ``noise_scale`` the intra-cluster distance is far below the
     inter-centroid distance, so a vector's true nearest neighbors are
-    in-cluster — the structure IVF/LSH exist to exploit."""
+    in-cluster."""
     cents = cluster_centroids(n_clusters, dim, seed)
 
     def gen(batches):

@@ -1,5 +1,4 @@
-"""Clustered-embedding generator + probe-scan ANN hot paths (the
-crossover operators: IVF / LSH restricted scans vs brute force)."""
+"""Clustered-embedding generator + embedding-space decontamination."""
 
 from __future__ import annotations
 
@@ -11,15 +10,7 @@ from greatex_spark.embeddings import (
     cluster_centroids,
     generate_clustered_embeddings,
 )
-from greatex_spark.operators.ann import (
-    _query_probe_map,
-    _vec_matrix,
-    assign_cells_arrow,
-    brute_force_topk,
-    ivf_topk_arrow,
-    lsh_topk_probe_arrow,
-    train_centroids,
-)
+from greatex_spark.operators.embedding import _vec_matrix
 
 N, DIM, NC = 4000, 32, 16
 
@@ -33,12 +24,6 @@ def emb(spark):
     )
     df.count()
     return df
-
-
-@pytest.fixture(scope="module")
-def exact_pairs(spark, emb):
-    q = emb.where(F.col("vec_id") < 64)
-    return {(r.query_id, r.neighbor_id) for r in brute_force_topk(q, emb, k=5).collect()}
 
 
 def test_generator_deterministic_across_partitionings(spark):
@@ -57,8 +42,7 @@ def test_generator_deterministic_across_partitionings(spark):
 
 
 def test_generator_cluster_structure(spark, emb):
-    """Every vector is nearer its own centroid than any other — the
-    clustered regime the approximate indexes exploit."""
+    """Every vector is nearer its own centroid than any other."""
     cents = cluster_centroids(NC, DIM, seed=13)
     rows = emb.limit(500).collect()
     vm = _vec_matrix([r.embedding for r in rows])
@@ -66,117 +50,9 @@ def test_generator_cluster_structure(spark, emb):
     assert (np.argmin(d2, axis=1) == np.array([r.cluster for r in rows])).all()
 
 
-def test_ivf_arrow_full_probe_equals_exact(spark, emb, exact_pairs):
-    """nprobe == nlist probes every cell → the probe scan must return
-    exactly the brute-force result (same rounding, same tie-break)."""
-    q = emb.where(F.col("vec_id") < 64)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk_arrow(q, emb, k=5, nlist=8, nprobe=8).collect()
-    }
-    assert got == exact_pairs
-
-
-def test_ivf_arrow_partial_probe_recall(spark, emb, exact_pairs):
-    q = emb.where(F.col("vec_id") < 64)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_topk_arrow(q, emb, k=5, nlist=NC, nprobe=2).collect()
-    }
-    recall = len(exact_pairs & got) / len(exact_pairs)
-    assert recall >= 0.9, recall
-
-
-def test_lsh_probe_arrow_recall(spark, emb, exact_pairs):
-    q = emb.where(F.col("vec_id") < 64)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in lsh_topk_probe_arrow(
-            q, emb, dim=DIM, k=5, num_bits=10, multiprobe=2
-        ).collect()
-    }
-    recall = len(exact_pairs & got) / len(exact_pairs)
-    assert recall >= 0.9, recall
-
-
-def test_lsh_probe_arrow_multitable_full_coverage_equals_exact(spark, emb, exact_pairs):
-    """num_bits=2 with multiprobe=2 probes all 4 buckets of every table,
-    so with ANY number of tables the candidate set is the whole corpus
-    and the result must equal brute force exactly — which also proves
-    the multi-table (query, neighbor) dedup: a duplicate surviving the
-    batch merge would displace a true neighbor from some top-k."""
-    q = emb.where(F.col("vec_id") < 64)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in lsh_topk_probe_arrow(
-            q, emb, dim=DIM, k=5, num_bits=2, multiprobe=2, num_tables=3
-        ).collect()
-    }
-    assert got == exact_pairs
-
-
-def test_lsh_probe_arrow_multitable_ranks_distinct(spark, emb):
-    """Multi-table output has exactly one row per (query, rank), ranks
-    are 1..k, and neighbors within a query are distinct."""
-    q = emb.where(F.col("vec_id") < 8)
-    rows = lsh_topk_probe_arrow(
-        q, emb, dim=DIM, k=5, num_bits=4, multiprobe=1, num_tables=4
-    ).collect()
-    per_q: dict[int, list] = {}
-    for r in rows:
-        per_q.setdefault(r.query_id, []).append(r)
-    for qid, rs in per_q.items():
-        assert sorted(r.rank for r in rs) == list(range(1, len(rs) + 1)), qid
-        assert len({r.neighbor_id for r in rs}) == len(rs), qid
-
-
-def test_lsh_probe_arrow_multitable_beats_single_table_recall(spark, emb, exact_pairs):
-    """The recall lever the parameter exists for: at equal bits, 4
-    tables strictly dominate 1 table's candidate set (table 0 shares
-    the seed), so recall is monotonically ≥ — and on this corpus
-    strictly better."""
-    q = emb.where(F.col("vec_id") < 64)
-
-    def recall(T):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in lsh_topk_probe_arrow(
-                q, emb, dim=DIM, k=5, num_bits=8, multiprobe=1, num_tables=T
-            ).collect()
-        }
-        return len(exact_pairs & got) / len(exact_pairs)
-
-    r1, r4 = recall(1), recall(4)
-    assert r4 >= r1
-    assert r4 >= 0.9, (r1, r4)
-
-
-def test_candidate_fraction_instrumentation(spark, emb):
-    """assign_cells_arrow + the probe map reproduce the exact fraction
-    of (query, corpus) pairs the IVF scan scores — and with a partial
-    probe it is genuinely < 1."""
-    from greatex_spark.operators.ann import _hash_sample
-
-    rows = _hash_sample(emb, "vec_id", "embedding", 1024).collect()
-    cents = train_centroids(_vec_matrix([r[1] for r in rows]), NC, 5)
-    q = emb.where(F.col("vec_id") < 64)
-    qm = _vec_matrix([r.embedding for r in q.collect()])
-    _, cq = _query_probe_map(qm, np.array(cents), 2)
-    counts = {
-        r.cell: r.n
-        for r in assign_cells_arrow(emb, cents)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert sum(counts.values()) == N
-    frac = sum(counts.get(c, 0) * len(ql) for c, ql in cq.items()) / (N * 64)
-    assert 0 < frac < 0.5, frac
-
-
 class TestEmbeddingDecontaminate:
     def test_contaminated_rows_dropped(self, spark):
-        from greatex_spark.operators.ann import embedding_decontaminate
+        from greatex_spark.operators.embedding import embedding_decontaminate
 
         rows = [
             (0, [1.0, 0.0, 0.0], "bench"),   # benchmark member
@@ -194,7 +70,7 @@ class TestEmbeddingDecontaminate:
     def test_duckdb_twin_parity(self, spark, emb):
         import duckdb
 
-        from greatex_spark.operators.ann import (
+        from greatex_spark.operators.embedding import (
             embedding_decontaminate,
             embedding_decontaminate_duckdb_sql,
         )
@@ -220,7 +96,7 @@ class TestEmbeddingDecontaminate:
         assert got == want
 
     def test_corpus_never_shuffles_for_decision(self, spark, emb):
-        from greatex_spark.operators.ann import embedding_decontaminate
+        from greatex_spark.operators.embedding import embedding_decontaminate
 
         bench = emb.where(F.col("vec_id") % 97 == 0)
         plan = (

@@ -22,5 +22,8 @@ def test_pipeline_does_not_load_unused_operators():
     )
     loaded = set(json.loads(out.stdout.strip().splitlines()[-1]))
     assert "greatex_spark.pipeline.runner" in loaded
-    for name in ("cms", "dsir", "cluster", "asof", "rangejoin", "sketch", "sessions"):
+    for name in (
+        "cms", "dsir", "cluster", "asof", "rangejoin", "sketch", "sessions",
+        "embedding",
+    ):
         assert f"greatex_spark.operators.{name}" not in loaded, sorted(loaded)

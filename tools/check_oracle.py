@@ -30,7 +30,7 @@ from greatex_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("GREATEX_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents",
+    "lineitem", "events", "documents", "embeddings",
 ]
 
 

@@ -23,7 +23,8 @@ count.  This module implements the mechanism those bands approximate:
 - parameters persist in the snapshot catalog as a typed table
   (``evaluation_parameters``), so a resumed or downstream run reads the
   latest committed values — same storage/lineage model as the metrics
-  table, replacing GE's JSON parameter store.
+  table, replacing GE's JSON parameter store.  Both the append and the
+  read run on the driver with pyarrow, with no Spark job.
 
 Naming divergence (documented): GE references parameters by URN
 (``urn:great_expectations:validations:<suite>:...observed_value``);
@@ -38,8 +39,10 @@ import ast
 from collections.abc import Mapping
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from greatex_spark.expectations.spec import Expectation, Suite
 
@@ -191,18 +194,20 @@ def store_parameters(
         }
         for k, v in sorted(params.items())
     ]
-    catalog.append(spark.createDataFrame(rows, PARAMS_SCHEMA), PARAMS_TABLE)
+    catalog.append(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(PARAMS_SCHEMA)), PARAMS_TABLE
+    )
 
 
 def load_parameters(spark: SparkSession, catalog) -> dict[str, float]:
     """Latest committed value per parameter name (max epoch wins; ties
     break on run_name for determinism).  The table is tiny (a few rows
-    per gate per run) — this is a driver-side read by design."""
-    try:
-        df = catalog.read_latest(spark, PARAMS_TABLE)
-    except Exception:
+    per gate per run), so it is read with pyarrow on the driver.  Only
+    a store with no committed snapshot yields ``{}``; an unreadable
+    store raises."""
+    if catalog.latest_epoch(PARAMS_TABLE) is None:
         return {}
-    rows = df.collect()
+    rows = catalog.read_latest_arrow(PARAMS_TABLE).to_pylist()
     best: dict[str, tuple] = {}
     for r in rows:
         key = r["parameter_name"]

@@ -9,17 +9,23 @@ typed metrics/lineage rows (replacing the Postgres JSON store + the
 shredding trigger at ``/root/reference/database-setup/storedb.sql:33-75``),
 and raise :class:`GateFailed` to halt downstream stages on failure —
 the AirflowException equivalent.
+
+The bookkeeping rows are built on the driver and appended with
+pyarrow (:meth:`Catalog.append`): storing them runs no Spark job.
 """
 
 from __future__ import annotations
 
 import logging
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from greatex_spark.expectations.compiler import GateFailed, ValidationResult, run_suite
 from greatex_spark.expectations.spec import Suite
@@ -105,16 +111,10 @@ def store_metrics(
     validation: ValidationResult,
     epoch: int,
 ) -> None:
-    rows = [
-        {
-            k: v
-            for k, v in r.items()
-            if k in {f.name for f in METRICS_SCHEMA.fields}
-        }
-        | {"checkpoint_epoch": epoch}
-        for r in validation.to_metrics_rows()
-    ]
-    catalog.append(spark.createDataFrame(rows, METRICS_SCHEMA), METRICS_TABLE)
+    rows = [r | {"checkpoint_epoch": epoch} for r in validation.to_metrics_rows()]
+    catalog.append(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(METRICS_SCHEMA)), METRICS_TABLE
+    )
 
 
 def store_partition_lineage(
@@ -125,25 +125,27 @@ def store_partition_lineage(
     epoch: int,
     run_name: str,
 ) -> None:
-    """Per-partition row counts for the committed snapshot — the
-    per-partition lineage artifact required by BASELINE.json.  One
-    narrow aggregation; partition id comes from the physical layout."""
-    lineage = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("row_count"))
-        .select(
-            F.lit(table_name).alias("table_name"),
-            F.lit(epoch).cast("long").alias("checkpoint_epoch"),
-            F.lit(run_name).alias("run_name"),
-            F.col("partition_id").cast("int").alias("partition_id"),
-            F.col("row_count").cast("long").alias("row_count"),
-        )
+    """Per-file row counts for the committed snapshot ``df`` — the
+    per-partition lineage artifact required by BASELINE.json.  One row
+    per data file: the file list is the read's own metadata
+    (``inputFiles``) and each count comes from that file's parquet
+    footer, so no Spark job runs.  ``partition_id`` is the index of the
+    writer task that produced the file (the ``part-NNNNN-`` of Spark's
+    file name), not the read-back ``spark_partition_id``: a read may
+    pack several small files into one partition."""
+    rows = [
+        {
+            "table_name": table_name,
+            "checkpoint_epoch": epoch,
+            "run_name": run_name,
+            "partition_id": int(re.search(r"/part-(\d+)-[^/]*$", uri).group(1)),
+            "row_count": pq.read_metadata(uri).num_rows,
+        }
+        for uri in sorted(df.inputFiles())
+    ]
+    catalog.append(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(LINEAGE_SCHEMA)), LINEAGE_TABLE
     )
-    # written directly — no driver round-trip: at 100 TB this is one row
-    # per partition (~100k rows/stage) and bouncing them through
-    # collect()+createDataFrame serializes the whole artifact on the
-    # driver for no reason
-    catalog.append(lineage, LINEAGE_TABLE)
 
 
 def run_checkpoint(

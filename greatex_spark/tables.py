@@ -26,8 +26,11 @@ import os
 import shutil
 import tempfile
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -77,10 +80,18 @@ class Catalog:
         m["latest"] = max(m["committed_epochs"])
         self._commit_manifest(name, m)
 
-    def append(self, df: DataFrame, name: str) -> None:
-        """Append-only table (metrics / lineage): plain parquet append
-        under a single ``snapshot=0`` so readers need no manifest."""
-        df.write.mode("append").parquet(self._snapshot_dir(name, 0))
+    def append(self, table: pa.Table, name: str) -> None:
+        """Append ``table`` to the append-only table ``name`` as one
+        parquet file in ``snapshot=0``, written on the driver.  The file
+        is written under a dot-prefixed temp name, which Spark and
+        pyarrow readers skip, then renamed into place: an append is
+        atomic, and concurrent appends never share a path."""
+        snap = self._snapshot_dir(name, 0)
+        os.makedirs(snap, exist_ok=True)
+        part = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(snap, f".{part}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(snap, part))
         m = self._read_manifest(name)
         if 0 not in m["committed_epochs"]:
             m["committed_epochs"].append(0)
@@ -106,6 +117,14 @@ class Catalog:
         if latest is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshots")
         return self.read_snapshot(spark, name, latest)
+
+    def read_latest_arrow(self, name: str) -> pa.Table:
+        """Driver-side read of the latest snapshot of a small table (the
+        bookkeeping tables) with pyarrow — no Spark job."""
+        latest = self.latest_epoch(name)
+        if latest is None:
+            raise FileNotFoundError(f"table {name!r} has no committed snapshots")
+        return pq.read_table(self._snapshot_dir(name, latest))
 
     def compact(
         self,

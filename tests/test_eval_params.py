@@ -130,3 +130,28 @@ def test_parameters_persist_in_catalog(spark, tmp_path):
     # raw store rows are typed and readable
     tbl = catalog.read_latest(spark, PARAMS_TABLE)
     assert {"parameter_name", "value", "checkpoint_epoch"} <= set(tbl.columns)
+
+
+def test_corrupt_parameter_store_raises(spark, tmp_path):
+    """A committed store that cannot be read is an error, not ``{}``:
+    silently losing the parameters would unbind every marker suite."""
+    import os
+
+    from greatex_spark.expectations.params import PARAMS_TABLE, load_parameters
+
+    catalog = Catalog(str(tmp_path))
+    assert load_parameters(spark, catalog) == {}  # nothing committed yet
+    cp = Checkpoint("g", Suite.of("s", E("expect_table_row_count_to_be_between", min_value=1)))
+    run_checkpoint(spark, spark.range(3), cp, catalog=catalog, epoch=1)
+    assert load_parameters(spark, catalog)["s.element_count"] == 3.0
+    snap = os.path.join(str(tmp_path), PARAMS_TABLE, "snapshot=0")
+    with open(os.path.join(snap, "part-x.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        load_parameters(spark, catalog)
+    # the garbage file is all the committed store holds
+    for name in os.listdir(snap):
+        if name != "part-x.parquet":
+            os.remove(os.path.join(snap, name))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        load_parameters(spark, catalog)

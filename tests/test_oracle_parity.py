@@ -59,10 +59,3 @@ def test_entry_runs(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert df.columns == ["doc_id", "text", "lang", "n_tokens"]
-
-
-def test_rows_only_queries_run(spark):
-    for name, fn in QUERIES.items():
-        if name in ORACLES:
-            continue
-        assert fn(spark, SF_DIR).count() >= 0, name

@@ -3,6 +3,8 @@ scrub, idempotent re-run, kill-and-resume, metrics/lineage artifacts."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -117,11 +119,20 @@ def test_metrics_and_lineage_written(spark, completed):
     ln = lineage.where(F.col("run_name") == "r1")
     tables = {r.table_name for r in ln.select("table_name").distinct().collect()}
     assert {BRONZE, SILVER, KEPT, GOLD} <= tables
-    # lineage row counts must reconcile with the committed snapshots
-    gold_rows = (
-        ln.where(F.col("table_name") == GOLD).agg(F.sum("row_count")).collect()[0][0]
-    )
-    assert gold_rows == catalog.read_latest(spark, GOLD).count()
+    # lineage row counts must reconcile with every committed snapshot,
+    # one lineage row per data file, keyed by its writer task index
+    for table in (BRONZE, SILVER, KEPT, GOLD):
+        rows = ln.where(F.col("table_name") == table).collect()
+        assert sum(r.row_count for r in rows) == catalog.read_latest(spark, table).count()
+        snap = os.path.join(catalog.root, table, "snapshot=1")
+        data_files = [
+            f
+            for _, _, files in os.walk(snap)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        ]
+        assert len(rows) == len(data_files) > 0, table
+        assert all(r.partition_id is not None and r.checkpoint_epoch == 1 for r in rows)
 
 
 def test_idempotent_rerun(spark, completed, pages):

@@ -196,178 +196,32 @@ def events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization via Spark's NATIVE session_window
-    (operators/sessions.py) — per-user 30-minute-gap sessions with
-    start/end/count/value aggregates; the same expression runs in
-    Structured Streaming with a watermark."""
-    from greatex_spark.operators.sessions import session_stats
+def events_user_distinct_types(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Skew-proof exact distinct-count per key (two-phase: dedupe on
+    (key, value) spreads hot keys across reducers, then count) — the
+    salting-side answer to hot-domain skew the north rule requires."""
+    from greatex_spark.operators.skew import salted_count_distinct
 
     ev = _t(spark, sf_dir, "events")
-    return session_stats(ev, "user_id", "ts", "30 minutes", value_col="value")
+    return salted_count_distinct(ev, "user_id", "event_type", "n_distinct")
 
 
-def _events_sessionize_sql() -> str:
-    from greatex_spark.operators.sessions import sessionize_duckdb_sql
-
-    return sessionize_duckdb_sql("events", "user_id", "ts", 1800, value_col="value")
-
-
-def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-session event-type transition counts (the funnel kernel):
-    per-event session ids by lag+cumsum (one Window stage — same
-    boundary rule as session_window) then consecutive-pair counting."""
-    from greatex_spark.operators.sessions import session_transitions
-
-    ev = _t(spark, sf_dir, "events")
-    return session_transitions(ev, gap_seconds=1800)
-
-
-def _events_session_funnel_sql() -> str:
-    from greatex_spark.operators.sessions import session_transitions_duckdb_sql
-
-    return session_transitions_duckdb_sql("events", gap_seconds=1800)
-
-
-def events_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/asof.py): each purchase attributed to the
-    user's most recent click at-or-before it, within a 7-day
-    tolerance — the union-merge formulation (one key shuffle + one
-    running window, no join node; a theta join here would plan as
-    BroadcastNestedLoop).  Oracle is DuckDB's native ASOF LEFT JOIN."""
-    from greatex_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    out = asof_join(
-        ev.where(F.col("event_type") == "purchase").select(
-            "event_id", "user_id", "ts"
-        ),
-        ev.where(F.col("event_type") == "click"),
-        on="user_id",
-        right_payload=("event_id",),
-        prefix="click_",
-        tolerance_seconds=7 * 86400,
+def elt_clean_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's ELT transform chain in one projection (SURVEY.md
+    §2.B): conditional value→null replacement (B2,
+    /root/reference/dags/transformations.py:15), drop-null filter (B3,
+    :16), integer downcast (B4, :17), negative-clamp repair (B9,
+    /root/reference/source-data/clean_trial_dataset.py:8-20), and the
+    final column projection (B8)."""
+    c = _t(spark, sf_dir, "customer")
+    return c.where(F.col("c_acctbal").isNotNull()).select(
+        "c_custkey",
+        F.when(F.col("c_mktsegment") == "MACHINERY", F.lit(None))
+        .otherwise(F.col("c_mktsegment"))
+        .alias("mktsegment"),
+        F.greatest(F.col("c_acctbal"), F.lit(0.0)).alias("acctbal_clamped"),
+        F.col("c_nationkey").cast("smallint").alias("nation_small"),
     )
-    wait = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
-        F.col("click_ts").cast("timestamp")
-    )
-    # NULL timestamps (unmatched purchases) are NaT in the compare
-    # harness and NaT != NaT under its dtype-strict rule — project the
-    # match as (id, wait_us) instead; NULL longs normalize fine.
-    return out.select(
-        "event_id", "user_id", "ts", "click_event_id", wait.cast("long").alias("wait_us")
-    )
-
-
-def _events_asof_attribution_sql() -> str:
-    from greatex_spark.operators.asof import asof_join_duckdb_sql
-
-    inner = asof_join_duckdb_sql(
-        "(SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')",
-        "(SELECT * FROM events WHERE event_type = 'click')",
-        on="user_id",
-        left_cols=("event_id", "user_id", "ts"),
-        right_payload=("event_id",),
-        prefix="click_",
-        tolerance_seconds=7 * 86400,
-    )
-    return (
-        f"SELECT event_id, user_id, ts, click_event_id, "
-        f"CAST(epoch_us(ts) - epoch_us(click_ts) AS BIGINT) AS wait_us "
-        f"FROM ({inner})"
-    )
-
-
-def events_error_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Range join (operators/rangejoin.py): traffic inside the hour
-    after each error event — intervals explode to covered bins, points
-    bin once, broadcast equi-join on the bin + exact containment
-    filter (each pair meets in exactly one bin, so no dedup pass);
-    DECIMAL-accumulated value sum per the cross-engine contract."""
-    from greatex_spark.operators.rangejoin import range_join
-
-    ev = _t(spark, sf_dir, "events")
-    iv = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("iv_id"),
-        F.col("ts").alias("start"),
-        (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end"),
-    )
-    pts = ev.select("event_id", "ts", "user_id", "value")
-    return (
-        range_join(pts, iv, bin_seconds=3600)
-        .where(F.col("event_id") != F.col("iv_id"))
-        .groupBy("iv_id", "start")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-    )
-
-
-def _events_error_window_stats_sql() -> str:
-    from greatex_spark.operators.rangejoin import range_join_duckdb_sql
-
-    return range_join_duckdb_sql(
-        "(SELECT event_id, ts, user_id, value FROM events)",
-        "(SELECT event_id AS iv_id, ts AS start, ts + INTERVAL 1 HOUR AS \"end\""
-        " FROM events WHERE event_type = 'error')",
-        select=(
-            "__i.iv_id, __i.start, CAST(count(*) AS BIGINT) AS n_events, "
-            "CAST(count(DISTINCT __p.user_id) AS BIGINT) AS n_users, "
-            "CAST(sum(CAST(__p.value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value"
-        ),
-        where="__p.event_id != __i.iv_id",
-        group_by="__i.iv_id, __i.start",
-    )
-
-
-def doc_bigram_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters (operators/cms.py): corpus
-    bigrams with estimated count >= 40 — frequency estimation without
-    the vocabulary-wide GROUP BY (the sketch is one bounded d×w agg;
-    only the survivor superset reaches the distinct).  CMS never
-    underestimates, so this is a guaranteed superset of the true
-    >=40 set; the integer estimates hash-match the DuckDB replay."""
-    from greatex_spark.functions.textstats import normalize_for_fingerprint
-    from greatex_spark.operators.cms import cms_heavy_hitters
-
-    docs = _t(spark, sf_dir, "documents")
-    words = F.split(normalize_for_fingerprint(F.col("text")), " ")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(words) - 2, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(words, i + 1, 2), " "))
-    items = docs.select(F.explode(grams).alias("bigram"))
-    return cms_heavy_hitters(items, "bigram", threshold=40)
-
-
-def _doc_bigram_cms_heavy_sql() -> str:
-    from greatex_spark.operators.cms import cms_heavy_hitters_duckdb_sql
-    from greatex_spark.operators.dedup import _norm_sql
-
-    items = (
-        "SELECT unnest(list_transform(range(1, greatest(len(ws) - 2, 0) + 2), "
-        "i -> array_to_string(ws[i : i + 1], ' '))) AS bigram "
-        f"FROM (SELECT string_split({_norm_sql('text')}, ' ') AS ws FROM documents)"
-    )
-    return cms_heavy_hitters_duckdb_sql(items, "bigram", threshold=40)
-
-
-def doc_ngram_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL distinct-trigram sketch per source (operators/sketch.py):
-    COUNT(DISTINCT) without the distinct shuffle — 256 integer
-    registers per group, md5-derived bits, integer harmonic sum, so
-    the ESTIMATE itself hash-matches the DuckDB replay."""
-    from greatex_spark.operators.sketch import ngram_hll
-
-    return ngram_hll(_t(spark, sf_dir, "documents"))
-
-
-def _doc_ngram_hll_sql() -> str:
-    from greatex_spark.operators.sketch import ngram_hll_duckdb_sql
-
-    return ngram_hll_duckdb_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -645,34 +499,6 @@ def _gopher_gate_sql() -> str:
         for name, expr in rules.items()
     ]
     return "\nUNION ALL ".join(parts)
-
-
-def events_user_distinct_types(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-proof exact distinct-count per key (two-phase: dedupe on
-    (key, value) spreads hot keys across reducers, then count) — the
-    salting-side answer to hot-domain skew the north rule requires."""
-    from greatex_spark.operators.skew import salted_count_distinct
-
-    ev = _t(spark, sf_dir, "events")
-    return salted_count_distinct(ev, "user_id", "event_type", "n_distinct")
-
-
-def elt_clean_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's ELT transform chain in one projection (SURVEY.md
-    §2.B): conditional value→null replacement (B2,
-    /root/reference/dags/transformations.py:15), drop-null filter (B3,
-    :16), integer downcast (B4, :17), negative-clamp repair (B9,
-    /root/reference/source-data/clean_trial_dataset.py:8-20), and the
-    final column projection (B8)."""
-    c = _t(spark, sf_dir, "customer")
-    return c.where(F.col("c_acctbal").isNotNull()).select(
-        "c_custkey",
-        F.when(F.col("c_mktsegment") == "MACHINERY", F.lit(None))
-        .otherwise(F.col("c_mktsegment"))
-        .alias("mktsegment"),
-        F.greatest(F.col("c_acctbal"), F.lit(0.0)).alias("acctbal_clamped"),
-        F.col("c_nationkey").cast("smallint").alias("nation_small"),
-    )
 
 
 def orders_schema_suite() -> Suite:
@@ -2575,12 +2401,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "join_supplier_nation_region": join_supplier_nation_region,
         "events_hourly_rollup": events_hourly_rollup,
         "events_top_users": events_top_users,
-        "events_sessionize": events_sessionize,
-        "events_session_funnel": events_session_funnel,
-        "events_asof_attribution": events_asof_attribution,
-        "events_error_window_stats": events_error_window_stats,
-        "doc_ngram_hll": doc_ngram_hll,
-        "doc_bigram_cms_heavy": doc_bigram_cms_heavy,
         "events_user_distinct_types": events_user_distinct_types,
         "elt_clean_project": elt_clean_project,
         "suite_orders_schema_gate": suite_orders_schema_gate,
@@ -2690,12 +2510,6 @@ ranked AS (
 SELECT event_type, user_id, CAST(rnk AS INT) AS rnk, total_value
 FROM ranked WHERE rnk <= 3
 """,
-        "events_sessionize": _events_sessionize_sql(),
-        "events_session_funnel": _events_session_funnel_sql(),
-        "events_asof_attribution": _events_asof_attribution_sql(),
-        "events_error_window_stats": _events_error_window_stats_sql(),
-        "doc_ngram_hll": _doc_ngram_hll_sql(),
-        "doc_bigram_cms_heavy": _doc_bigram_cms_heavy_sql(),
         "events_user_distinct_types": """
 SELECT user_id, CAST(count(DISTINCT event_type) AS BIGINT) AS n_distinct
 FROM events GROUP BY user_id

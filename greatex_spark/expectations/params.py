@@ -207,7 +207,9 @@ def load_parameters(spark: SparkSession, catalog) -> dict[str, float]:
     store raises."""
     if catalog.latest_epoch(PARAMS_TABLE) is None:
         return {}
-    rows = catalog.read_latest_arrow(PARAMS_TABLE).to_pylist()
+    rows = catalog.read_latest_arrow(
+        PARAMS_TABLE, to_arrow_schema(PARAMS_SCHEMA)
+    ).to_pylist()
     best: dict[str, tuple] = {}
     for r in rows:
         key = r["parameter_name"]

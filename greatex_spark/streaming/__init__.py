@@ -9,11 +9,4 @@ exactly-once resume from the streaming checkpoint (files already
 committed to the checkpoint are never reprocessed).
 """
 
-from greatex_spark.streaming.ingest import (  # noqa: F401
-    gated_ingest,
-    windowed_page_counts,
-)
-from greatex_spark.streaming.stateful import (  # noqa: F401
-    running_lang_stats,
-    streaming_exact_dedup,
-)
+from greatex_spark.streaming.ingest import gated_ingest  # noqa: F401

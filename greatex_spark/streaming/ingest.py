@@ -87,21 +87,3 @@ def gated_ingest(
         .awaitTermination()
     )
 
-
-def windowed_page_counts(
-    pages: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Event-time windowed arrival counts with late-data watermark —
-    works on a stream (state bounded by the watermark) or a batch frame
-    (same code, no state)."""
-    return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "n_pages",
-        )
-    )

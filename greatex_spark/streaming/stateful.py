@@ -1,18 +1,15 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``.
+"""Cross-micro-batch exact dedup via ``applyInPandasWithState``.
 
-:func:`running_lang_stats` keeps per-language cumulative corpus
-statistics (pages, characters) in managed state across micro-batches —
-the streaming counterpart of a whole-history aggregate, and the
-pattern-template for any custom stateful quality monitor (per-domain
-drift counters, rolling keep-rates, …): state is an explicit typed
-tuple, updates arrive as Arrow batches, and the operator emits the
-refreshed state row for every group touched in the batch.
+:func:`streaming_exact_dedup` keeps one ``seen`` flag per content
+fingerprint in managed state, so a page whose normalized text already
+arrived in an earlier micro-batch is dropped: state is an explicit
+typed tuple, updates arrive as Arrow batches, and the operator emits
+only first-seen rows.
 
-Scale: state lives in the state store partitioned by the group key
-(lang → tiny cardinality here; per-domain keys shard across executors).
-Each micro-batch shuffles only that batch's rows by key; the state
-store is incremental (RocksDB-backed on a real cluster via
-``spark.sql.streaming.stateStore.providerClass``).
+Scale: state lives in the state store partitioned by the fingerprint
+key and shards across executors.  Each micro-batch shuffles only that
+batch's rows by key; the state store is incremental (RocksDB-backed on
+a real cluster via ``spark.sql.streaming.stateStore.providerClass``).
 """
 
 from __future__ import annotations
@@ -22,35 +19,6 @@ from collections.abc import Iterable
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "lang string, n_pages long, n_chars long"
-STATE_SCHEMA = "n_pages long, n_chars long"
-
-
-def _update_lang_stats(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    n_pages, n_chars = state.get if state.exists else (0, 0)
-    for pdf in pdfs:
-        n_pages += len(pdf)
-        n_chars += int(pdf["text"].str.len().fillna(0).sum())
-    state.update((n_pages, n_chars))
-    yield pd.DataFrame(
-        {"lang": [key[0]], "n_pages": [n_pages], "n_chars": [n_chars]}
-    )
-
-
-def running_lang_stats(pages: DataFrame) -> DataFrame:
-    """Cumulative (pages, chars) per language over the life of the
-    stream; emits the refreshed totals for every language seen in each
-    micro-batch (``update`` semantics)."""
-    return pages.select("lang", "text").groupBy("lang").applyInPandasWithState(
-        _update_lang_stats,
-        OUTPUT_SCHEMA,
-        STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
 
 
 DEDUP_OUTPUT_SCHEMA = "url string, text string, lang string"

@@ -118,13 +118,15 @@ class Catalog:
             raise FileNotFoundError(f"table {name!r} has no committed snapshots")
         return self.read_snapshot(spark, name, latest)
 
-    def read_latest_arrow(self, name: str) -> pa.Table:
+    def read_latest_arrow(self, name: str, schema: pa.Schema) -> pa.Table:
         """Driver-side read of the latest snapshot of a small table (the
-        bookkeeping tables) with pyarrow — no Spark job."""
+        bookkeeping tables) with pyarrow — no Spark job.  Every file is
+        read as ``schema``: Spark writes timestamps as INT96, which
+        pyarrow alone would surface as naive ``timestamp[ns]``."""
         latest = self.latest_epoch(name)
         if latest is None:
             raise FileNotFoundError(f"table {name!r} has no committed snapshots")
-        return pq.read_table(self._snapshot_dir(name, latest))
+        return pq.read_table(self._snapshot_dir(name, latest), schema=schema)
 
     def compact(
         self,

@@ -10,6 +10,7 @@ import sys
 import threading
 
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from greatex_spark.expectations.compiler import run_suite
 from greatex_spark.expectations.params import (
@@ -19,6 +20,7 @@ from greatex_spark.expectations.params import (
 )
 from greatex_spark.expectations.spec import E, Suite
 from greatex_spark.pipeline.checkpoint import (
+    LINEAGE_SCHEMA,
     METRICS_SCHEMA,
     METRICS_TABLE,
     store_metrics,
@@ -75,7 +77,8 @@ def test_stray_temp_file_is_invisible(spark, tmp_path):
     with open(os.path.join(snap, ".part-deadbeef.parquet.tmp"), "wb") as f:
         f.write(b"half-written")
     assert catalog.read_latest(spark, METRICS_TABLE).count() == len(vr.results)
-    assert catalog.read_latest_arrow(METRICS_TABLE).num_rows == len(vr.results)
+    arrow = catalog.read_latest_arrow(METRICS_TABLE, to_arrow_schema(METRICS_SCHEMA))
+    assert arrow.num_rows == len(vr.results)
 
 
 def test_driver_append_reads_back_with_spark_written_files(spark, tmp_path):
@@ -106,6 +109,20 @@ def test_driver_append_reads_back_with_spark_written_files(spark, tmp_path):
     schema = pq.read_schema(os.path.join(snap, mine))
     assert str(schema.field("run_time").type) == "timestamp[us, tz=UTC]"
     assert str(schema.field("evaluated_expectations").type) == "int32"
+    # the driver-side read returns exactly the Arrow twin for both
+    # writers' files: Spark's INT96 timestamps come back tz-aware
+    arrow_schema = to_arrow_schema(METRICS_SCHEMA)
+    arrow = catalog.read_latest_arrow(METRICS_TABLE, arrow_schema)
+    assert arrow.schema == arrow_schema
+    assert str(arrow.schema.field("run_time").type) == "timestamp[us, tz=UTC]"
+    arrow_rows = arrow.to_pylist()
+    arrow_by_epoch = {
+        e: sorted((r["expectation_name"], r["run_time"], r["end_time"])
+                  for r in arrow_rows if r["checkpoint_epoch"] == e)
+        for e in (1, 2)
+    }
+    assert len(arrow_by_epoch[1]) == len(rows)
+    assert arrow_by_epoch[1] == arrow_by_epoch[2]
 
 
 def test_bookkeeping_runs_no_spark_job(spark, tmp_path):
@@ -127,6 +144,8 @@ def test_bookkeeping_runs_no_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    lineage = catalog.read_latest_arrow("partition_lineage").to_pylist()
+    lineage = catalog.read_latest_arrow(
+        "partition_lineage", to_arrow_schema(LINEAGE_SCHEMA)
+    ).to_pylist()
     assert sum(r["row_count"] for r in lineage) == 100
     assert sorted(r["partition_id"] for r in lineage) == [0, 1, 2]

@@ -52,7 +52,7 @@ def test_compact_respects_target_size(spark, tmp_path):
 
 def test_streaming_dedup_across_batches(spark, tmp_path):
     from greatex_spark.sources.files import PAGE_SCHEMA
-    from greatex_spark.streaming import streaming_exact_dedup
+    from greatex_spark.streaming.stateful import streaming_exact_dedup
 
     landing = str(tmp_path / "landing")
     pages = generate_pages(spark, 60, seed=3).select(

@@ -1,5 +1,5 @@
 """Streaming ingest: gates per micro-batch, quarantine, file-granular
-resume, and windowed event-time aggregation."""
+resume, and a metrics store shared with the batch gates."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from greatex_spark.expectations.spec import E, Suite
 from greatex_spark.pages import generate_pages
 from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
-from greatex_spark.streaming import gated_ingest, windowed_page_counts
+from greatex_spark.streaming import gated_ingest
 from greatex_spark.tables import Catalog
 
 
@@ -107,86 +107,3 @@ def test_gated_ingest_metrics_share_batch_store(spark, tmp_path):
     assert all(
         r.batch_identifier == f"stream-batch-{r.checkpoint_epoch}" for r in rows
     )
-
-
-def test_running_lang_stats_stateful(spark, tmp_path):
-    """applyInPandasWithState keeps cumulative per-lang totals across
-    micro-batches: with one file per trigger, the final emission per
-    lang must equal the whole-corpus totals."""
-    from greatex_spark.streaming import running_lang_stats
-    from greatex_spark.sources.files import PAGE_SCHEMA
-
-    landing = str(tmp_path / "landing")
-    pages = generate_pages(spark, 80, seed=7)
-    _land(pages.where(F.col("url").endswith("0")), landing)
-    _land(pages.where(~F.col("url").endswith("0")), landing)
-
-    stream = (
-        spark.readStream.schema(PAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing)
-    )
-    emissions: list = []
-
-    def capture(batch_df, batch_id):
-        emissions.append((batch_id, {r.lang: (r.n_pages, r.n_chars) for r in batch_df.collect()}))
-
-    (
-        running_lang_stats(stream)
-        .writeStream.foreachBatch(capture)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    assert len(emissions) >= 2  # one per file
-    # fold emissions in batch order: the LAST emission per lang is the
-    # cumulative total, which must match the batch ground truth
-    final: dict = {}
-    for _, batch in sorted(emissions):
-        final.update(batch)
-    truth = {
-        r.lang: (r.n, r.c)
-        for r in pages.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.coalesce(F.length("text"), F.lit(0))).alias("c"),
-        )
-        .collect()
-    }
-    assert final == truth
-
-
-def test_windowed_page_counts_batch_parity(spark):
-    pages = generate_pages(spark, 500, seed=5)
-    out = windowed_page_counts(pages).agg(
-        F.sum("n_pages").alias("total"), F.count(F.lit(1)).alias("groups")
-    ).collect()[0]
-    assert out["total"] == 500
-    assert out["groups"] > 1
-
-
-def test_windowed_page_counts_streaming(spark, tmp_path):
-    landing = str(tmp_path / "landing")
-    generate_pages(spark, 300, seed=6).coalesce(2).write.parquet(landing)
-    from greatex_spark.sources.files import PAGE_SCHEMA
-
-    stream = spark.readStream.schema(PAGE_SCHEMA).parquet(landing)
-    q = (
-        windowed_page_counts(stream)
-        .writeStream.format("memory")
-        .queryName("wpc")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # append mode only emits windows the watermark has closed; totals of
-    # emitted windows must match the batch computation for those windows
-    emitted = spark.sql("select * from wpc")
-    batch = windowed_page_counts(generate_pages(spark, 300, seed=6))
-    j = emitted.alias("s").join(batch.alias("b"), ["window_start", "lang"])
-    mism = j.where(F.col("s.n_pages") != F.col("b.n_pages")).count()
-    assert mism == 0

@@ -3,9 +3,8 @@
 ``entry(spark)`` — flagship end-to-end quality-filter query at sf0.001.
 ``queries()``   — one callable per implemented operator (SURVEY.md §2).
 ``oracle_sql()`` — equivalent DuckDB SQL per query; every entry has one
-(the DSIR language models refit from the same parquet, and the pipeline
-entries replay from a committed bronze fixture parquet the SQL reads
-directly).
+(the pipeline entries replay from a committed bronze fixture parquet the
+SQL reads directly).
 
 Determinism contracts used throughout so Spark and DuckDB hash-match:
 
@@ -20,8 +19,7 @@ Determinism contracts used throughout so Spark and DuckDB hash-match:
   in both engines) with literal universal-hash permutation constants —
   see greatex_spark.operators.dedup;
 - sequential IEEE folds (list_reduce) replay Spark's F.aggregate
-  accumulation order for embedding cosines, the DSIR score and the
-  perplexity model;
+  accumulation order for the perplexity model;
 - regexes are restricted to the common java.util.regex / RE2 dialect
   (see greatex_spark.functions.pii);
 - rankings round scores to 6 decimals and tie-break on ids.
@@ -63,13 +61,6 @@ from greatex_spark.operators.dedup import (
     ngram_jaccard_dedup_duckdb_sql,
     simhash_dedup,
     simhash_dedup_duckdb_sql,
-)
-from greatex_spark.operators.embedding import (
-    brute_force_topk,
-    embedding_cosine_dedup,
-    embedding_cosine_dedup_duckdb_sql,
-    embedding_decontaminate,
-    embedding_decontaminate_duckdb_sql,
 )
 from greatex_spark.pipeline.stages import (
     PipelineConfig,
@@ -1079,18 +1070,6 @@ GROUP BY cluster_size
 """
 
 
-def doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: documents sharing any word-8-gram with
-    the pseudo-eval set (every 29th doc) are dropped — GPT-3-style
-    n-gram overlap hygiene, broadcast-benchmark design
-    (operators/decontaminate.py)."""
-    from greatex_spark.operators.decontaminate import decontaminate
-
-    docs = _t(spark, sf_dir, "documents")
-    benchmark = docs.where(F.col("doc_id") % 29 == 0)
-    return decontaminate(docs, benchmark, n=8).select("doc_id", "source", "n_chars")
-
-
 def doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic training-mix sampling: per-source keep fractions as
     a pure hash-of-id predicate — identical survivors under any
@@ -1244,28 +1223,6 @@ def _doc_domain_quota_sql() -> str:
     )
 
 
-def doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concatenate-and-chunk sequence packing: every document's (stream,
-    seq_id, seq_offset) in the training-sequence layout — one window
-    prefix-sum over uniform hash streams (operators/packing.py).
-    n_chars stands in for the token count."""
-    from greatex_spark.operators.packing import pack_sequences
-
-    docs = _t(spark, sf_dir, "documents")
-    return pack_sequences(
-        docs, "n_chars", max_tokens=4096, num_streams=8
-    ).select("doc_id", "stream", "seq_id", "seq_offset")
-
-
-def _doc_pack_sequences_sql() -> str:
-    from greatex_spark.operators.packing import pack_sequences_duckdb_sql
-
-    return pack_sequences_duckdb_sql(
-        "t.doc_id, t.stream", "documents", "n_chars",
-        max_tokens=4096, num_streams=8,
-    )
-
-
 def doc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental exact dedup: the odd-id half of documents arrives as
     a new batch and dedups against the committed fingerprint index of
@@ -1285,12 +1242,6 @@ def _doc_incremental_dedup_sql() -> str:
         new_pred="doc_id % 2 = 1",
         index_pred="doc_id % 2 = 0",
     )
-
-
-def _doc_decontaminate_sql() -> str:
-    from greatex_spark.operators.decontaminate import decontaminate_duckdb_sql
-
-    return decontaminate_duckdb_sql("t.doc_id, t.source, t.n_chars")
 
 
 def _doc_stratified_sample_sql() -> str:
@@ -1688,99 +1639,6 @@ WHERE a.doc_id < 200
 
 
 # ---------------------------------------------------------------------------
-# embedding operators
-
-
-def ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.where(F.col("vec_id") < 8)
-    return brute_force_topk(queries_df, emb, k=5)
-
-
-def _ann_brute_topk_sql() -> str:
-    dot = "list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[]))"
-    nq = "sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]), CAST(q.embedding AS DOUBLE[])))"
-    nc = "sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))"
-    cos = f"CASE WHEN {nq} * {nc} > 0 THEN {dot} / ({nq} * {nc}) ELSE 0.0 END"
-    return f"""
-WITH scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round({cos}, 6) AS score
-  FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-  WHERE q.vec_id < 8),
-ranked AS (
-  SELECT query_id, neighbor_id, score,
-         row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC)
-           AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, score
-FROM ranked WHERE rank <= 5
-"""
-
-
-def emb_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-duplicate removal: drop a row iff a lower-id row
-    in the same random-hyperplane bucket has cosine ≥ threshold.
-    Seeded-literal planes + sequential IEEE folds → the DuckDB oracle
-    replays the same drops."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_cosine_dedup(emb, dim=64, threshold=0.3).select(
-        "vec_id", "label"
-    )
-
-
-def emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space benchmark decontamination: drop corpus vectors
-    whose cosine vs ANY benchmark vector (the deterministic
-    vec_id % 31 eval slice) reaches the threshold — the semantic
-    complement of doc_decontaminate's 13-gram rule.  Broadcast
-    nested-loop semi join: the corpus never shuffles."""
-    emb = _t(spark, sf_dir, "embeddings")
-    bench = emb.where(F.col("vec_id") % 31 == 0)
-    return embedding_decontaminate(emb, bench, dim=64, threshold=0.35).select(
-        "vec_id", "label"
-    )
-
-
-def emb_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
-    first = F.element_at(F.col("embedding"), 1).cast("double")
-    return emb.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(first).alias("min_first"),
-        F.max(first).alias("max_first"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# data selection
-
-
-DSIR_BUCKETS = 1024
-DSIR_N = 100
-
-
-def doc_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style importance resampling (Xie et al. 2023): fit hashed
-    unigram+bigram LMs for the target (lang='en') and the raw corpus,
-    score every doc with the literal log-probability-ratio fold, and
-    Gumbel-top-k sample without replacement on the md5-uniform key.
-    Both LM fits, the fold, the key, and the selection replay exactly
-    in DuckDB (bit-identical literals: integer bucket counts +
-    driver-side math.log on both sides)."""
-    from greatex_spark.operators.dsir import dsir_sample, fit_hashed_lm
-
-    docs = _t(spark, sf_dir, "documents")
-    target = fit_hashed_lm(
-        docs.where(F.col("lang") == "en"), num_buckets=DSIR_BUCKETS
-    )
-    raw = fit_hashed_lm(docs, num_buckets=DSIR_BUCKETS)
-    return dsir_sample(
-        docs, target, raw, n=DSIR_N, num_buckets=DSIR_BUCKETS
-    ).select("doc_id", "lang", "source", "dsir_logw", "dsir_key")
-
-
-# ---------------------------------------------------------------------------
 # staged pipeline
 
 
@@ -1808,13 +1666,12 @@ def pipeline_pages_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     (heuristics + langid + perplexity UDF + scrub), filter, MinHash-
     dedup, project the gold contract.
 
-    Oracle configuration (the spec path — every stage SQL-replayable):
-    md5 dedup family, native Column features, string-gram duplicate
-    fractions.  The hot path (Arrow signals + xxhash64 family, pinned
-    semantically equal by the parity pytests) is what the pipeline
-    runner and ``perfbench/run.py`` measure."""
+    Oracle configuration: the production featurize (Arrow signals,
+    which the DuckDB twin replays) with the md5 dedup family.  The
+    xxhash64 family, pinned semantically equal by the parity pytests,
+    is what the pipeline runner and ``perfbench/run.py`` measure."""
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     return gold_projection(dedup(filter_kept(featurize(bronze, cfg)), cfg))
 
 
@@ -1896,7 +1753,7 @@ def pipeline_stage_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     no extra scans, no shuffles beyond the pipeline's own.  The handful
     of scalar counts is assembled driver-side (bounded: 5 rows)."""
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     feat = featurize(bronze, cfg)
     lang_ok = F.col("lang_pred") == F.lit(cfg.target_lang)
     c = feat.agg(
@@ -1933,7 +1790,7 @@ def _pipeline_stage_attrition_sql() -> str:
     """DuckDB twin of :func:`pipeline_stage_attrition`: the SAME staged
     CTEs as the gold oracle, with FILTERed counts replaying the four
     conditional counts and the identical IEEE drop_pct division."""
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     ctes = _pipeline_sql_ctes(cfg)
     return f"""
 WITH {ctes},
@@ -1976,7 +1833,7 @@ def corpus_domain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from greatex_spark.operators.urls import host_of, registered_domain
 
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     feat = featurize(bronze, cfg)
     dom = registered_domain(host_of(F.col("url")))
     return (
@@ -2014,7 +1871,7 @@ def _corpus_domain_report_sql() -> str:
     discipline."""
     from greatex_spark.operators.urls import host_of_sql, registered_domain_sql
 
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     ctes = _pipeline_sql_ctes(cfg, upto="feat")
     dom = registered_domain_sql(host_of_sql("url"))
     return f"""
@@ -2057,7 +1914,7 @@ def pipeline_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from greatex_spark.operators.sampling import sample_hash, top_n_per_group
 
     bronze = spark.read.parquet(_bronze_fixture(sf_dir))
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     feat = featurize(bronze, cfg)
     dropped = feat.where(~F.coalesce(F.col("keep"), F.lit(False))).select(
         drop_reason(cfg).alias("drop_reason"),
@@ -2083,7 +1940,7 @@ def _pipeline_drop_audit_sql() -> str:
     from greatex_spark.operators.dedup import md5_long_sql
     from greatex_spark.operators.sampling import DENOM
 
-    cfg = PipelineConfig(dedup_hash_family="md5", arrow_features=False)
+    cfg = PipelineConfig(dedup_hash_family="md5")
     ctes = _pipeline_sql_ctes(cfg, upto="feat")
     key = md5_long_sql("(url::VARCHAR || ':7')")
     return f"""
@@ -2106,13 +1963,11 @@ SELECT drop_reason, rank, url, n_tokens FROM __ranked WHERE rank <= 5
 
 def _lineage_config() -> "PipelineConfig":
     """Spec config for the lineage-metrics oracle run: md5 dedup family
-    + string grams + native features (every stage SQL-replayable), and
-    a keep-fraction corridor that admits both committed fixtures (the
+    (every stage SQL-replayable), and a keep-fraction corridor that admits both committed fixtures (the
     n1500 fixture keeps 23.3% — the default 25% floor is calibrated to
     the larger corpora the pipeline actually runs on)."""
     return PipelineConfig(
         dedup_hash_family="md5",
-        arrow_features=False,
         keep_fraction_band=(0.2, 0.8),
     )
 
@@ -2327,38 +2182,6 @@ FROM __rows
 """
 
 
-def _doc_dsir_oracle() -> dict[str, str]:
-    """DuckDB twin of :func:`doc_dsir_sample` — refits both hashed LMs
-    from the same parquet (identical integer counts → identical
-    driver-side math.log literals) and replays the fold + Gumbel key.
-    The LMs refit on sf0.01 unless ``SPARK_GRAFT_ORACLE_SF_DIR`` names
-    another corpus (the pytest parity suite sets sf0.001).  If the
-    fixture is unavailable the entry is omitted."""
-    import os
-
-    from greatex_spark.operators.dsir import (
-        dsir_sample_duckdb_sql,
-        hashed_lm_from_parquet,
-        log_diff,
-    )
-
-    sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    path = f"{sf_dir}/documents.parquet"
-    try:
-        target = hashed_lm_from_parquet(path, "lang = 'en'", num_buckets=DSIR_BUCKETS)
-        raw = hashed_lm_from_parquet(path, num_buckets=DSIR_BUCKETS)
-    except Exception:
-        return {}
-    return {
-        "doc_dsir_sample": dsir_sample_duckdb_sql(
-            "doc_id, lang, source, dsir_logw, dsir_key",
-            log_diff(target, raw),
-            DSIR_N,
-            num_buckets=DSIR_BUCKETS,
-        )
-    }
-
-
 # ---------------------------------------------------------------------------
 # driver contract
 
@@ -2430,14 +2253,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dup_clusters": doc_dup_clusters,
         "dedup_cluster_stats": dedup_cluster_stats,
         "doc_pair_jaccard": doc_pair_jaccard,
-        "doc_decontaminate": doc_decontaminate,
         "doc_stratified_sample": doc_stratified_sample,
         "doc_top_tokens": doc_top_tokens,
         "doc_html_extract": doc_html_extract,
         "doc_toxicity": doc_toxicity,
         "doc_domain_quota": doc_domain_quota,
         "doc_incremental_dedup": doc_incremental_dedup,
-        "doc_pack_sequences": doc_pack_sequences,
         "doc_quality_score": doc_quality_score,
         "doc_token_budget": doc_token_budget,
         "doc_line_dedup": doc_line_dedup,
@@ -2447,11 +2268,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_canonicalize": url_canonicalize,
         "url_dedup_domains": url_dedup_domains,
         "url_quality_filter": url_quality_filter,
-        "ann_brute_topk": ann_brute_topk,
-        "emb_cosine_dedup": emb_cosine_dedup,
-        "emb_decontaminate": emb_decontaminate,
-        "emb_label_stats": emb_label_stats,
-        "doc_dsir_sample": doc_dsir_sample,
         "pipeline_pages_gold": pipeline_pages_gold,
         "pipeline_lineage_metrics": pipeline_lineage_metrics,
         "pipeline_stage_attrition": pipeline_stage_attrition,
@@ -2559,14 +2375,12 @@ QUALIFY row_number() OVER (
         "doc_dup_clusters": _doc_dup_clusters_sql(),
         "dedup_cluster_stats": _dedup_cluster_stats_sql(),
         "doc_pair_jaccard": _doc_pair_jaccard_sql(),
-        "doc_decontaminate": _doc_decontaminate_sql(),
         "doc_stratified_sample": _doc_stratified_sample_sql(),
         "doc_top_tokens": _doc_top_tokens_sql(),
         "doc_html_extract": _doc_html_extract_sql(),
         "doc_toxicity": _doc_toxicity_sql(),
         "doc_domain_quota": _doc_domain_quota_sql(),
         "doc_incremental_dedup": _doc_incremental_dedup_sql(),
-        "doc_pack_sequences": _doc_pack_sequences_sql(),
         "doc_quality_score": _doc_quality_score_sql(),
         "doc_token_budget": _doc_token_budget_sql(),
         "doc_line_dedup": _doc_line_dedup_sql(),
@@ -2576,20 +2390,6 @@ QUALIFY row_number() OVER (
         "url_canonicalize": _url_canonicalize_sql(),
         "url_dedup_domains": _url_dedup_domains_sql(),
         "url_quality_filter": _url_quality_filter_sql(),
-        "ann_brute_topk": _ann_brute_topk_sql(),
-        "emb_cosine_dedup": embedding_cosine_dedup_duckdb_sql(
-            "t.vec_id, t.label", threshold=0.3
-        ),
-        "emb_decontaminate": embedding_decontaminate_duckdb_sql(
-            "t.vec_id, t.label", threshold=0.35
-        ),
-        "emb_label_stats": """
-SELECT label, count(*) AS n,
-  min(CAST(embedding[1] AS DOUBLE)) AS min_first,
-  max(CAST(embedding[1] AS DOUBLE)) AS max_first
-FROM embeddings GROUP BY label
-""",
-        **_doc_dsir_oracle(),
         "pipeline_pages_gold": _pipeline_pages_gold_sql(),
         # the metrics/lineage plane, replayed per-expectation from the
         # same staged CTEs as the gold data path (run-scoped columns —

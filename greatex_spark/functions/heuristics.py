@@ -204,9 +204,8 @@ def gopher_keep_duckdb_sql(
     ``max(n,1)`` ratio denominators, same int→double divisions).
 
     The duplicate-n-gram twin counts distinct gram *strings*, as the
-    native spec :func:`quality_struct` does; run the pipeline with
-    ``PipelineConfig(arrow_features=False)`` when this expression is
-    the oracle."""
+    native spec :func:`quality_struct` and the pipeline's Arrow twin
+    (``functions/heuristics_arrow.py``) do."""
     t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
     c = text_expr
     words = f"regexp_extract_all({c}, '\\S+')"

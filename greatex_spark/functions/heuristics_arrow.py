@@ -7,9 +7,9 @@ oracle.  But Spark evaluates higher-order functions interpreted
 large JIT variance.  This module computes the IDENTICAL features in an
 Arrow-batched pandas UDF (one JVM↔Python crossing per batch, compiled
 ``re`` + str ops inside), the same execution model as the langid /
-perplexity model stages.  ~10-30× cheaper per doc; the pipeline uses it
-as the hot path (``PipelineConfig.arrow_features``), and a parity test
-asserts equality against the native spec on every fixture class.
+perplexity model stages.  ~10-30× cheaper per doc; the pipeline's
+featurize stage runs it, and a parity test asserts equality against the
+native spec on every fixture class.
 
 Semantics mirrored exactly:
 - words = ``\\s+`` split, empties dropped;

@@ -130,8 +130,7 @@ def with_langid(
 
 # ---------------------------------------------------------------------------
 # real-model seam: swap in an actual fastText .bin without touching the
-# pipeline — the same one-constructor-arg pattern as
-# ``PipelineConfig.arrow_features``.
+# pipeline — one constructor arg (``PipelineConfig.langid_model``).
 
 # per-executor-process model cache: the model object is NEVER pickled
 # into the task closure (a real lid.176.bin is ~130 MB); each Python

@@ -238,9 +238,9 @@ def exact_dedup_incremental(
     :func:`content_fingerprint_index` of everything already ingested —
     a 100 TB corpus is never re-read, only its (distinct-fingerprint)
     index shuffles.  Fingerprints are uniform 60-bit hashes, so the
-    anti-join keys have no skew by construction; at steady state,
-    bucket the index on ``fingerprint`` (tables.write_bucketed) and the
-    exchange on the index side disappears."""
+    anti-join keys have no skew by construction; an index persisted
+    bucketed on ``fingerprint`` (Spark ``bucketBy``) would also drop the
+    exchange on the index side."""
     fp = md5_long(normalize_for_fingerprint(text_col)).alias("__fp")
     w = Window.partitionBy("__fp").orderBy(F.col(id_col).asc())
     batch_kept = (
@@ -770,7 +770,7 @@ def shingles_select_sql(table: str, id_col: str, text_col: str, k: int) -> str:
     """SELECT body producing ``({id_col}, h)`` where ``h`` is the
     distinct md5-family word-k-shingle hash list — the DuckDB twin of
     :func:`shingle_hashes` with ``family="md5"`` (shared by the minhash
-    oracle and the decontamination oracle)."""
+    dedup and minhash accuracy oracles)."""
     words = f"string_split({_norm_sql(text_col)}, ' ')"
     shingle = _compose_hash_sql([f"wh[i + {j}]" for j in range(k)])
     return (

@@ -203,9 +203,9 @@ def token_budget_select(
     quantize ``score`` into ``n_buckets`` order-consistent buckets
     (same score → same bucket, bucket order respects score order), agg
     per-bucket token totals (ONE map-side-combinable shuffle of ≤
-    ``n_buckets`` rows), collect them (bounded driver memory, like
-    DSIR's 4,096 LM counts), and broadcast each bucket's *offset* (sum
-    of all strictly-higher buckets) back as a literal map.  Buckets
+    ``n_buckets`` rows), collect them (bounded driver memory), and
+    broadcast each bucket's *offset* (sum of all strictly-higher
+    buckets) back as a literal map.  Buckets
     whose offset already exceeds the budget are dropped by a pushed
     filter BEFORE any sort; surviving buckets run parallel per-bucket
     cumulative windows (corpus/n_buckets rows per task — the scale

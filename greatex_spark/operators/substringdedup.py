@@ -58,7 +58,7 @@ from greatex_spark.operators.dedup import (
     md5_long_sql,
 )
 
-DEFAULT_K = 13  # same shingle width as benchmark decontamination
+DEFAULT_K = 13  # the 13-gram width of GPT-3-style benchmark decontamination
 
 
 def _word_hashes(text, family: str):

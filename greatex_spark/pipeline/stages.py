@@ -7,9 +7,10 @@ each hop.  Here the hops are bronze → silver → kept → gold snapshots
 of the page table, and each stage is a single Spark projection/filter
 — no driver-side loops, no RDDs:
 
-- **featurize**: ONE projection computing every quality feature
-  (native exprs), the two model scores (Arrow pandas UDFs), the
-  language decision, the PII-scrubbed text and the final keep flag.
+- **featurize**: ONE projection computing every quality feature, the
+  language decision and the token count (one Arrow pandas UDF), the
+  perplexity score (Arrow pandas UDF), the PII-scrubbed text and the
+  final keep flag.
 - **filter_kept**: predicate on the precomputed flags.
 - **dedup**: MinHash-LSH near-duplicate removal keyed by url.
 - **gold_projection**: the public 5-column contract, scrubbed text
@@ -24,14 +25,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from greatex_spark.functions.heuristics import DEFAULT_THRESHOLDS, quality_struct
+from greatex_spark.functions.heuristics import DEFAULT_THRESHOLDS
+from greatex_spark.functions.heuristics_arrow import page_signals_arrow
 from greatex_spark.functions.perplexity import make_log_perplexity_udf
 from greatex_spark.functions.pii import scrub_pii
-from greatex_spark.functions.textstats import (
-    bpe_token_count,
-    detect_lang,
-    fingerprint64,
-)
+from greatex_spark.functions.textstats import fingerprint64
 
 
 @dataclass
@@ -47,10 +45,6 @@ class PipelineConfig:
     # the oracle-replayable spec family (same decisions up to hash
     # collisions) — see operators/dedup.py
     dedup_hash_family: str = "xxhash64"
-    # heuristic features: Arrow-batched pandas UDF (hot path; identical
-    # semantics, ~10-30x cheaper than the interpreted-HOF native spec —
-    # see functions/heuristics_arrow.py) vs native Column expressions
-    arrow_features: bool = True
     # real-model seam: paths to a fastText .bin / KenLM .arpa swap the
     # deterministic stand-ins for real models (lazily loaded once per
     # executor; see functions/langid.py, functions/perplexity.py).  The
@@ -122,35 +116,21 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
         ext_lang = make_langid_udf(config.langid_model, config.langid_loader)(
             F.col("text")
         )["lang"]
-    if config.arrow_features:
-        # one Arrow crossing for heuristics + langid + token count
-        from greatex_spark.functions.heuristics_arrow import page_signals_arrow
-
-        sig = page_signals_arrow(F.col("text"))
-        step1 = df.select(
-            "*",
-            sig.alias("__qs"),
-            ppl_udf(F.col("text")).alias("log_ppl"),
-            scrubbed().alias("text_scrubbed"),
-            fingerprint64("text").alias("fingerprint"),
-        ).withColumns(
-            {
-                "lang_pred": (
-                    ext_lang if ext_lang is not None else F.col("__qs.lang_pred")
-                ),
-                "n_tokens": F.col("__qs.n_bpe_tokens"),
-            }
-        )
-    else:
-        step1 = df.select(
-            "*",
-            quality_struct(F.col("text")).alias("__qs"),
-            (ext_lang if ext_lang is not None else detect_lang("text")).alias("lang_pred"),
-            ppl_udf(F.col("text")).alias("log_ppl"),
-            scrubbed().alias("text_scrubbed"),
-            fingerprint64("text").alias("fingerprint"),
-            bpe_token_count("text").alias("n_tokens"),
-        )
+    # one Arrow crossing for heuristics + langid + token count
+    step1 = df.select(
+        "*",
+        page_signals_arrow(F.col("text")).alias("__qs"),
+        ppl_udf(F.col("text")).alias("log_ppl"),
+        scrubbed().alias("text_scrubbed"),
+        fingerprint64("text").alias("fingerprint"),
+    ).withColumns(
+        {
+            "lang_pred": (
+                ext_lang if ext_lang is not None else F.col("__qs.lang_pred")
+            ),
+            "n_tokens": F.col("__qs.n_bpe_tokens"),
+        }
+    )
     f = F.col("__qs")
     keep_quality = (
         (f["n_chars"] >= t["min_chars"])

@@ -224,37 +224,3 @@ class Catalog:
             shutil.rmtree(path, ignore_errors=True)
             removed.append(epoch)
         return sorted(removed)
-
-
-# ---------------------------------------------------------------------------
-# Bucketed (co-located) tables — the shuffle-elimination layout for keys
-# joined or grouped repeatedly.  Spark's bucketing metadata lives in the
-# session catalog (saveAsTable), not in parquet, so these helpers manage
-# session-catalog tables next to the snapshot Catalog: write each side
-# bucketed by the join key once, and every subsequent equi-join or
-# groupBy on that key runs with ZERO Exchange (plan-asserted in
-# tests/test_plans.py).  At 100 TB this turns the repeated url-keyed
-# joins of the staged pipeline (silver⋈kept⋈gold reconciliations,
-# dedup-survivor application) from full-shuffle SortMergeJoins into
-# partition-local merges.
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str = "url",
-    num_buckets: int = 32,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` as a session-catalog table bucketed (and
-    optionally sorted) by ``bucket_col``.  Overwrites the table."""
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table_name)
-
-
-def read_table(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a bucketed session-catalog table (bucketing metadata
-    attached, so joins/groupBys on the bucket key skip their Exchange)."""
-    return spark.table(table_name)

@@ -1,5 +1,5 @@
-"""Snapshot compaction (Catalog.compact) and cross-micro-batch
-streaming exact dedup (streaming_exact_dedup)."""
+"""Snapshot compaction (Catalog.compact), snapshot expiry and orphan
+removal."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import glob
 
 from pyspark.sql import functions as F
 
-from greatex_spark.pages import generate_pages
 from greatex_spark.tables import Catalog
 
 
@@ -48,52 +47,6 @@ def test_compact_respects_target_size(spark, tmp_path):
     catalog.compact(spark, "t", target_file_bytes=target)
     n = len(_parquet_files(catalog, "t", 1))
     assert 2 <= n <= 8  # ~4 files of ~target bytes (coalesce granularity)
-
-
-def test_streaming_dedup_across_batches(spark, tmp_path):
-    from greatex_spark.sources.files import PAGE_SCHEMA
-    from greatex_spark.streaming.stateful import streaming_exact_dedup
-
-    landing = str(tmp_path / "landing")
-    pages = generate_pages(spark, 60, seed=3).select(
-        "url", "warc_ts", "html", "text", "lang"
-    )
-    # batch 1: first 30 pages; batch 2: SAME texts under new urls + 5 fresh
-    b1 = pages.where(F.col("url").rlike("[0-2].$|^.*[0-2]$") | (F.length("url") > 0)).limit(30)
-    b1.coalesce(1).write.parquet(f"{landing}/f1")
-    dup = b1.withColumn("url", F.concat(F.lit("dup-"), F.col("url"))).limit(25)
-    fresh = pages.subtract(b1).limit(5)
-    dup.unionByName(fresh).coalesce(1).write.parquet(f"{landing}/f2")
-
-    stream = (
-        spark.readStream.schema(PAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{landing}/*")
-    )
-    emitted: list = []
-
-    def capture(batch_df, batch_id):
-        emitted.extend(
-            (batch_id, r["url"], r["text"]) for r in batch_df.collect()
-        )
-
-    (
-        streaming_exact_dedup(stream)
-        .writeStream.foreachBatch(capture)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    texts = [t for (_, _, t) in emitted]
-    # every distinct text emitted exactly once across the whole stream
-    assert len(texts) == len(set(texts))
-    # batch-2 re-sends of batch-1 content were all suppressed
-    urls = [u for (_, u, _) in emitted]
-    assert not any(u.startswith("dup-") for u in urls)
-    # the 5 genuinely fresh pages did come through
-    assert len(texts) >= 30
 
 
 def test_expire_snapshots_retention(spark, tmp_path):

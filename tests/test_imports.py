@@ -1,7 +1,7 @@
 """The pipeline imports only what it runs: loading the runner and the
 MinHash dedup module must stay inside an explicit list of pipeline-path
-modules, and the streaming package must load only the gated ingest, not
-the rest of the catalogue through package re-exports."""
+modules, and the streaming package must stay inside the gated ingest's
+own import closure."""
 
 from __future__ import annotations
 
@@ -43,6 +43,23 @@ PIPELINE_MODULES = frozenset(
     )
 )
 
+# Every module ``import greatex_spark.streaming`` may load: the package,
+# the gated ingest and what they import.
+STREAMING_MODULES = frozenset(
+    "greatex_spark." + m
+    for m in (
+        "expectations",
+        "expectations.compiler",
+        "expectations.spec",
+        "session",
+        "sources",
+        "sources.files",
+        "streaming",
+        "streaming.ingest",
+        "tables",
+    )
+)
+
 
 def _loaded_after(*modules: str) -> set[str]:
     code = "import json, sys\n" + "".join(f"import {m}\n" for m in modules) + (
@@ -66,7 +83,7 @@ def test_pipeline_does_not_load_unused_operators():
 def test_streaming_package_loads_only_the_gated_ingest():
     loaded = _loaded_after("greatex_spark.streaming")
     assert "greatex_spark.streaming.ingest" in loaded
-    assert "greatex_spark.streaming.stateful" not in loaded
+    assert loaded <= STREAMING_MODULES, sorted(loaded - STREAMING_MODULES)
     assert not any(m.startswith("greatex_spark.operators") for m in loaded), sorted(
         loaded
     )

@@ -85,16 +85,6 @@ def test_pipeline_config_model_seam(spark):
     ).collect()[0]
     assert (agg.nl, agg.lang, agg.kept) == (1, "tlh", 0)
     assert agg.lo is not None
-    # both arrow and native feature paths honor the seam
-    out2 = featurize(
-        pages,
-        PipelineConfig(
-            arrow_features=False,
-            langid_model="/models/lid.176.bin",
-            langid_loader=FAKE_FT_LOADER,
-        ),
-    )
-    assert out2.where(F.col("lang_pred") != "tlh").count() == 0
 
 
 def test_real_fasttext_bin_through_seam_end_to_end(spark, tmp_path):

@@ -1,10 +1,8 @@
 """Tests for the dedup operators (exact, MinHash, SimHash, n-gram
-Jaccard, embedding-cosine, n-gram decontamination), exact cosine
-top-k, stratified sampling and salted repartitioning."""
+Jaccard), stratified sampling and salted repartitioning."""
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,10 +14,6 @@ from greatex_spark.operators.dedup import (
     ngram_jaccard_dedup,
     simhash64,
     simhash_dedup,
-)
-from greatex_spark.operators.embedding import (
-    brute_force_topk,
-    embedding_cosine_dedup,
 )
 
 BASE = (
@@ -132,62 +126,6 @@ def test_hot_bucket_candidates_bounded(spark):
     assert kept_exact == [0, n + 1]
 
 
-def test_brute_force_topk_vs_duckdb(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50).cache()
-    got = brute_force_topk(emb, emb, k=3).orderBy("query_id", "rank").collect()
-    con = duckdb.connect()
-    want = con.execute(
-        f"""
-        WITH e AS (SELECT vec_id, embedding FROM
-                   (SELECT * FROM read_parquet('{sf_dir}/embeddings.parquet')
-                    ORDER BY vec_id LIMIT 50)),
-        s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     round(list_cosine_similarity(q.embedding::DOUBLE[],
-                                                  c.embedding::DOUBLE[]), 6) AS score
-              FROM e q JOIN e c ON q.vec_id != c.vec_id),
-        r AS (SELECT *, row_number() OVER
-                 (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-              FROM s)
-        SELECT query_id, neighbor_id, rank, score FROM r WHERE rank <= 3
-        ORDER BY query_id, rank
-        """
-    ).fetchall()
-    got_t = [(r.query_id, r.neighbor_id, r.rank, r.score) for r in got]
-    # limit(50) on Spark side is order-dependent; both sides take vec_id<50 set
-    assert len(got_t) == len(want)
-    mismatches = [
-        (g, w) for g, w in zip(got_t, want) if g[:3] != w[:3] or abs(g[3] - w[3]) > 1e-6
-    ]
-    assert not mismatches, mismatches[:5]
-
-
-def test_brute_force_topk_arrow_parity(spark, sf_dir):
-    from greatex_spark.operators.embedding import brute_force_topk_arrow
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
-    q = emb.where(F.col("vec_id") < 16)
-    spec = {(r.query_id, r.neighbor_id): r.score
-            for r in brute_force_topk(q, emb, k=5).collect()}
-    arrow = {(r.query_id, r.neighbor_id): r.score
-             for r in brute_force_topk_arrow(q, emb, k=5).collect()}
-    assert set(spec) == set(arrow)
-    for pair, s in spec.items():
-        assert abs(s - arrow[pair]) <= 1e-6, (pair, s, arrow[pair])
-
-
-def test_embedding_cosine_dedup(spark):
-    base = [float(i) for i in range(8)]
-    near = [float(i) + (0.001 if i == 0 else 0.0) for i in range(8)]
-    far = [1.0, -2.0, 3.0, -4.0, 5.0, -6.0, 7.0, -8.0]
-    df = spark.createDataFrame(
-        [(0, base), (1, near), (2, far)], "vec_id long, embedding array<double>"
-    )
-    kept = sorted(
-        r.vec_id for r in embedding_cosine_dedup(df, dim=8, num_bits=4).collect()
-    )
-    assert kept == [0, 2]
-
-
 def test_salted_repartition_balances_hot_domains(spark):
     from pyspark.sql import functions as F
 
@@ -268,31 +206,6 @@ def test_salted_repartition_salt_col_spreads_repeated_hot_key(spark):
 
     assert n_nonempty(plain) == 1  # documented: key-only hash cannot spread
     assert n_nonempty(salted) >= 4
-
-
-def test_decontaminate_drops_ngram_overlap(spark):
-    from greatex_spark.operators.decontaminate import (
-        contaminated_ids,
-        decontaminate,
-    )
-
-    secret = "the quick brown fox jumps over the lazy dog tonight"  # 10 words
-    clean = "completely different words about weather patterns in coastal regions today"
-    corpus = spark.createDataFrame(
-        [
-            (0, f"prefix words here {secret} suffix words here"),  # contaminated
-            (1, clean),  # clean
-            (2, f"another doc quoting {secret} verbatim in the middle"),  # contaminated
-        ],
-        "doc_id long, text string",
-    )
-    benchmark = spark.createDataFrame(
-        [(100, f"eval question: {secret}?")], "doc_id long, text string"
-    )
-    bad = sorted(r.doc_id for r in contaminated_ids(corpus, benchmark, n=8).collect())
-    assert bad == [0, 2]
-    kept = sorted(r.doc_id for r in decontaminate(corpus, benchmark, n=8).collect())
-    assert kept == [1]
 
 
 def test_stratified_sample_semantics(spark):

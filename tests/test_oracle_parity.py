@@ -20,14 +20,14 @@ sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 SF_DIR = "/root/testdata/sf0.001"
-# corpus-dependent oracles (DSIR LM literals) must refit on the SAME
-# corpus this suite runs against — set before oracle_sql() is called
+# the fixture-reading oracles must pick the bronze fixture of the SAME
+# scale this suite runs against — set before oracle_sql() is called
 os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = SF_DIR
 
 import __spark_entry__ as entrymod  # noqa: E402
 from check_oracle import TABLES, compare  # noqa: E402
 
-# built once per module: oracle_sql() refits the DSIR LMs on every call
+# built once per module
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
 

@@ -97,38 +97,6 @@ def test_dedup_survivor_selection_streams(spark):
     assert plan.count("Join") <= 4
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two tables bucketed on the same key join and aggregate with ZERO
-    shuffle — the co-located-join layout for repeatedly-joined keys."""
-    from pyspark.sql import functions as F
-
-    from greatex_spark.pages import generate_pages
-    from greatex_spark.tables import read_table, write_bucketed
-
-    # spark.sql.warehouse.dir is static per-session; tables land in the
-    # default ./spark-warehouse and are dropped (files included) below
-    pages = generate_pages(spark, 500, seed=21).localCheckpoint()
-    write_bucketed(pages.select("url", "lang"), "bk_left", "url", num_buckets=8)
-    write_bucketed(
-        pages.select("url", F.length("text").alias("n")), "bk_right", "url", num_buckets=8
-    )
-    left, right = read_table(spark, "bk_left"), read_table(spark, "bk_right")
-    # disable broadcast so the join would otherwise be a shuffled SMJ
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = left.join(right, "url")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 500
-        grouped = left.groupBy("url").agg(F.count(F.lit(1)).alias("c"))
-        assert "Exchange" not in _plan(grouped)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bk_left")
-        spark.sql("DROP TABLE IF EXISTS bk_right")
-
-
 def test_unique_expectation_fuses_into_single_agg(spark):
     """expect_column_values_to_be_unique must not spawn an auxiliary
     groupBy job: the compiled metric list is one agg over the frame."""
@@ -159,15 +127,6 @@ def test_domain_quota_broadcasts_counts_and_prunes_scan(spark):
     # the corpus side reads only the columns the query projects + key
     read_schema = plan.split("ReadSchema")[1].splitlines()[0]
     assert "text" not in read_schema
-
-
-def test_pack_sequences_single_exchange_on_stream(spark):
-    plan = _plan(entrymod.doc_pack_sequences(spark, SF_DIR))
-    # one hash exchange (the stream window partition); no extra shuffle
-    assert plan.count("Exchange") <= 2  # AQE prints initial+final
-    assert "Window" in plan
-    read_schema = plan.split("ReadSchema")[1].splitlines()[0]
-    assert "text" not in read_schema  # packing never reads document text
 
 
 def test_incremental_dedup_is_anti_join_no_corpus_rescan(spark):

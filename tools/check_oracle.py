@@ -30,7 +30,7 @@ from greatex_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("GREATEX_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 
 
@@ -95,9 +95,9 @@ def compare(name: str, spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[st
 
 def main() -> int:
     only = set(sys.argv[1:])
-    # The oracle-SQL builders in __spark_entry__ (bronze fixture path,
-    # DSIR LM literals) size themselves from SPARK_GRAFT_ORACLE_SF_DIR
-    # when oracle_sql() runs.  Propagate this harness's scale factor
+    # The oracle-SQL builders in __spark_entry__ that read the committed
+    # bronze fixture pick its size from SPARK_GRAFT_ORACLE_SF_DIR when
+    # oracle_sql() runs.  Propagate this harness's scale factor
     # first, or a second-scale run silently compares a Spark query at
     # sf0.1 against a DuckDB twin built for sf0.01.  Setting it here,
     # not at import, keeps ``compare`` importable without side effects.

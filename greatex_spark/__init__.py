@@ -11,9 +11,10 @@ perplexity, Gopher/C4 heuristics, MinHash dedup, regex PII scrub).
 Architecture is Spark-first: every expectation compiles to Column
 expressions fused into ONE ``df.agg(...)`` pass per suite; filters and
 scrubbers are pure ``DataFrame -> DataFrame`` functions built from
-``pyspark.sql.functions``; the only Python-side execution is two
-Arrow-batched pandas UDF model stages (langid, perplexity).  No RDDs,
-no per-row Python UDFs anywhere.
+``pyspark.sql.functions``; the only Python-side execution is Arrow
+UDF batch kernels (featurize's page signals and perplexity, the
+xxhash64 MinHash) and the pandas-UDF langid scorer.  No RDDs, no
+per-row Python UDFs anywhere.
 """
 
 __version__ = "0.1.0"

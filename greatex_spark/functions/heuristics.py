@@ -33,6 +33,13 @@ from greatex_spark.expectations.spec import E, Expectation, Suite
 # English function words; this fixed set is our engine's spec).
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
+# Java's ``$`` (the spec's rlike engine) matches at the end of the input
+# AND before a final line terminator: ``\n``, ``\r``, ``\r\n``,
+# ``\u0085``, ``\u2028`` or ``\u2029``.  Python's ``$`` only skips a
+# final ``\n`` and RE2's skips nothing, so the Arrow kernel and the DuckDB
+# twin spell the rule out: append this RE2 suffix instead of a bare ``$``.
+JAVA_LINE_END = r"(?:\r\n|[\n\r\x{85}\x{2028}\x{2029}])?$"
+
 DEFAULT_THRESHOLDS: dict[str, float] = {
     "min_words": 50,
     "max_words": 100_000,
@@ -201,10 +208,11 @@ def gopher_keep_duckdb_sql(
     """DuckDB boolean expression replaying the 13-condition
     ``keep_quality`` conjunction of :func:`gopher_keep_condition` /
     ``pipeline.stages.featurize`` exactly (same tokenization, same
-    ``max(n,1)`` ratio denominators, same int→double divisions).
+    ``max(n,1)`` ratio denominators, same int→double divisions, same
+    Java line-end rule via :data:`JAVA_LINE_END`).
 
     The duplicate-n-gram twin counts distinct gram *strings*, as the
-    native spec :func:`quality_struct` and the pipeline's Arrow twin
+    native spec :func:`quality_struct` and the pipeline's Arrow kernel
     (``functions/heuristics_arrow.py``) do."""
     t = {**DEFAULT_THRESHOLDS, **(thresholds or {})}
     c = text_expr
@@ -248,7 +256,7 @@ def gopher_keep_duckdb_sql(
         ),
         (
             f"(len(list_filter({lines}, ln -> regexp_matches(trim(ln), "
-            f"'(\\.\\.\\.|…)$'))) / CAST({n_lines} AS BIGINT))"
+            f"'(\\.\\.\\.|…){JAVA_LINE_END}'))) / CAST({n_lines} AS BIGINT))"
             f" <= {t['max_ellipsis_line_fraction']}"
         ),
         (

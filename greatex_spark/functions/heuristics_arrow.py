@@ -1,47 +1,69 @@
-"""Arrow-batched twin of the heuristic feature struct.
+"""Page signals as one Arrow batch kernel.
 
-:func:`greatex_spark.functions.heuristics.quality_struct` is the
+:func:`greatex_spark.functions.heuristics.quality_struct`,
+:func:`~greatex_spark.functions.textstats.detect_lang` and
+:func:`~greatex_spark.functions.textstats.bpe_token_count` are the
 engine's *spec*: pure Column expressions, replayable by the DuckDB
-oracle.  But Spark evaluates higher-order functions interpreted
-(CodegenFallback) — measured ~11 core-ms/doc for the full struct, with
-large JIT variance.  This module computes the IDENTICAL features in an
-Arrow-batched pandas UDF (one JVM↔Python crossing per batch, compiled
-``re`` + str ops inside), the same execution model as the langid /
-perplexity model stages.  ~10-30× cheaper per doc; the pipeline's
-featurize stage runs it, and a parity test asserts equality against the
-native spec on every fixture class.
+oracle, but evaluated by interpreted higher-order functions
+(CodegenFallback).  This module computes the identical 17 fields in one
+``arrow_udf`` over whole Arrow batches, with no per-row Python:
 
-Semantics mirrored exactly:
-- words = ``\\s+`` split, empties dropped;
-- symbol count = non-overlapping matches of ``(#|\\.\\.\\.|…)``;
-- bullet/ellipsis line rules use the same regexes on trimmed lines;
-- dup-n-gram fraction = 1 − distinct/total over word n-grams;
-- all ratios double-precision, same div-by-zero guards.
+- the text is split into words once (``ascii_split_whitespace`` splits
+  on exactly Java's ASCII ``\\s``) and the words are dictionary-encoded;
+- length, ``[A-Za-z]``, stopword, BPE token count and language-marker
+  hits are computed once per *distinct* word and summed per page with
+  ``np.bincount``.  Letter tokens and BPE tokens never cross ASCII
+  whitespace, so the per-word sums equal the spec's per-text counts;
+- the duplicate n-gram fractions count distinct factorised
+  (page, gram) keys; word ids stand in for the joined gram strings,
+  which is exact because a word holds no whitespace;
+- lines, symbols, CJK share and the flags are ``pyarrow.compute``
+  kernels.
+
+Line ends follow Java's ``$`` (the spec's regex engine): it matches at
+the end of the input and also before a final ``\\n``, ``\\r``,
+``\\r\\n``, ``\\u0085``, ``\\u2028`` or ``\\u2029``.  So a CRLF line
+ending in ``...`` is an ellipsis line, and ``"Done.\\r\\n"`` ends with
+terminal punctuation, here as in the spec.  Parity tests pin every
+field against the spec on the fixture classes and on edge cases.
 """
 
 from __future__ import annotations
 
-import re
-
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
-from greatex_spark.functions.heuristics import GOPHER_STOPWORDS
+from greatex_spark.functions.heuristics import (
+    FEATURE_NAMES,
+    GOPHER_STOPWORDS,
+    JAVA_LINE_END,
+)
+from greatex_spark.functions.textstats import (
+    BPE_TOKEN_REGEX,
+    CJK_REGEX,
+    LANG_PROFILES,
+)
 
-# re.ASCII where java.util.regex classes are ASCII-bound (\s, \d):
-# a NBSP must NOT split words here, exactly as in the JVM spec
-_WS = re.compile(r"\s+", re.ASCII)
-_SYMBOL = re.compile(r"(#|\.\.\.|…)")
-_ALPHA = re.compile(r"[A-Za-z]")
-_BULLET = re.compile(r"^([\*\-•▪●]|\d+[\.\)])", re.ASCII)
-_ELLIPSIS = re.compile(r"(\.\.\.|…)$")
-_TERMINAL = re.compile(r'[.!?"”]$')
-_STOP = frozenset(GOPHER_STOPWORDS)
+_SYMBOL = r"#|\.\.\.|…"
+_BULLET = r"^([\*\-•▪●]|\d+[\.\)])"
+_ELLIPSIS = r"(\.\.\.|…)" + JAVA_LINE_END
+_TERMINAL = r'[.!?"”]' + JAVA_LINE_END
+_STOP = pa.array(GOPHER_STOPWORDS)
+_LANGS = tuple(LANG_PROFILES)
+_MARKERS = [pa.array(m) for m in LANG_PROFILES.values()]
+_MARKER_SETS = [frozenset(m) for m in LANG_PROFILES.values()]
+# lang_pred codes: one per profile, then "und" and "zh"
+_LANG_NAMES = pa.array(_LANGS + ("und", "zh"))
+_UND, _ZH = len(_LANGS), len(_LANGS) + 1
 
-QUALITY_STRUCT_TYPE = T.StructType(
+PAGE_SIGNALS_TYPE = T.StructType(
     [
         T.StructField("n_chars", T.LongType()),
         T.StructField("n_words", T.LongType()),
@@ -58,134 +80,173 @@ QUALITY_STRUCT_TYPE = T.StructType(
         T.StructField("has_brace", T.BooleanType()),
         T.StructField("has_lorem_ipsum", T.BooleanType()),
         T.StructField("has_javascript", T.BooleanType()),
-    ]
-)
-
-# Spark SQL F.trim removes ONLY the space character — the native spec
-# uses it for the terminal-punct and bullet/ellipsis line rules, so the
-# Python twin must strip ' ' alone (stripping all chars <= U+0020 made
-# tab-padded lines diverge from the oracle-checked spec)
-_SPARK_TRIM = " "
-
-
-def _features_one(text: str | None) -> tuple:
-    if text is None:
-        return (None,) * 15
-    words = [w for w in _WS.split(text) if w]
-    nw = len(words) or 1
-    lines = text.split("\n")
-    nl = len(lines) or 1
-    # duplicate-n-gram fractions via zip views (identical sets to the
-    # slice-tuple construction, far fewer allocations)
-    n2 = len(words) - 1
-    dup2 = float(n2 - len(set(zip(words, words[1:])))) / n2 if n2 > 0 else 0.0
-    n3 = len(words) - 2
-    dup3 = (
-        float(n3 - len(set(zip(words, words[1:], words[2:])))) / n3 if n3 > 0 else 0.0
-    )
-    # one pass over words for length / stopword / alpha accumulators
-    word_chars = 0
-    stop_count = 0
-    alpha_count = 0
-    alpha_search = _ALPHA.search
-    for w in words:
-        word_chars += len(w)
-        if w.lower() in _STOP:
-            stop_count += 1
-        if alpha_search(w):
-            alpha_count += 1
-    # one strip per line, both line rules on the stripped value
-    bullet_count = 0
-    ellipsis_count = 0
-    for ln in lines:
-        sln = ln.strip(_SPARK_TRIM)
-        if _BULLET.search(sln):
-            bullet_count += 1
-        if _ELLIPSIS.search(sln):
-            ellipsis_count += 1
-    lower = text.lower()
-    trimmed = text.strip(_SPARK_TRIM)
-    return (
-        len(text),
-        len(words),
-        len(lines),
-        float(word_chars) / nw,
-        float(len(_SYMBOL.findall(text))) / nw,
-        stop_count,
-        float(alpha_count) / nw,
-        float(bullet_count) / nl,
-        float(ellipsis_count) / nl,
-        dup2,
-        dup3,
-        bool(_TERMINAL.search(trimmed)),
-        "{" in text,
-        "lorem ipsum" in lower,
-        "javascript" in lower,
-    )
-
-
-@pandas_udf(QUALITY_STRUCT_TYPE)
-def quality_struct_arrow_udf(texts: pd.Series) -> pd.DataFrame:
-    rows = [_features_one(t) for t in texts]
-    return pd.DataFrame(rows, columns=[f.name for f in QUALITY_STRUCT_TYPE.fields])
-
-
-def quality_struct_arrow(text: Column) -> Column:
-    return quality_struct_arrow_udf(text)
-
-
-# ---------------------------------------------------------------------------
-# combined per-page signal struct: quality features + langid + BPE-ish
-# token count in ONE Arrow crossing (the pipeline's featurize hot path —
-# one batch transfer instead of three).
-
-from greatex_spark.functions.textstats import (  # noqa: E402
-    BPE_TOKEN_REGEX,
-    CJK_REGEX,
-    LANG_PROFILES,
-)
-
-_BPE = re.compile(BPE_TOKEN_REGEX, re.ASCII)
-_CJK = re.compile(CJK_REGEX)
-# java [^\p{L}]+ split ≡ python letter-run findall; [^\W\d_] = alphabetic
-_LETTERS = re.compile(r"[^\W\d_]+")
-_PROFILES = [(lang, frozenset(m)) for lang, m in LANG_PROFILES.items()]
-
-PAGE_SIGNALS_TYPE = T.StructType(
-    list(QUALITY_STRUCT_TYPE.fields)
-    + [
         T.StructField("n_bpe_tokens", T.LongType()),
         T.StructField("lang_pred", T.StringType()),
     ]
 )
+_ARROW_FIELDS = list(to_arrow_type(PAGE_SIGNALS_TYPE))
 
 
-def _detect_lang_one(text: str, min_hits: int = 2) -> str:
-    """Exact replica of textstats.detect_lang (same profiles, first-wins
-    tie-break, CJK codepoint-fraction override)."""
-    if len(_CJK.findall(text)) / max(len(text), 1) > 0.25:
-        return "zh"
-    tokens = _LETTERS.findall(text.lower())
-    best_lang, best_score = "und", min_hits - 1
-    for lang, markers in _PROFILES:
-        s = sum(1 for t in tokens if t in markers)
-        if s > best_score:
-            best_lang, best_score = lang, s
-    return best_lang
+def _np(arr: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    return arr.to_numpy(zero_copy_only=False)
 
 
-@pandas_udf(PAGE_SIGNALS_TYPE)
-def page_signals_arrow_udf(texts: pd.Series) -> pd.DataFrame:
-    rows = []
-    for t in texts:
-        if t is None:
-            rows.append((None,) * 15 + (None, None))
-        else:
-            rows.append(
-                _features_one(t) + (len(_BPE.findall(t)), _detect_lang_one(t))
-            )
-    return pd.DataFrame(rows, columns=[f.name for f in PAGE_SIGNALS_TYPE.fields])
+def _per_page(page: np.ndarray, ids: np.ndarray, per_word: np.ndarray, n: int) -> np.ndarray:
+    """Per-page sums of a count held per distinct word, touching only the
+    word occurrences where it is non-zero (most counts are sparse)."""
+    hit = per_word[ids] != 0
+    out = np.bincount(page[hit], weights=per_word[ids[hit]], minlength=n)
+    return out.astype(np.int64)
+
+
+def _marker_hits(words: pa.Array) -> np.ndarray:
+    """(distinct words × languages) counts of marker tokens.  The spec
+    lower-cases the text and splits it on runs of non-letters; on an
+    ASCII word that is ``[^a-z]+`` after ``ascii_lower``, and the rare
+    non-ASCII words take the same rule in Python (``str.isalpha`` is
+    the Unicode letter class ``\\p{L}``)."""
+    hits = np.zeros((len(words), len(_LANGS)), np.int64)
+    is_ascii = _np(pc.string_is_ascii(words))
+    asc = np.flatnonzero(is_ascii)
+    if len(asc):
+        toks = pc.split_pattern_regex(pc.ascii_lower(words.take(asc)), "[^a-z]+")
+        owner = asc[_np(pc.list_parent_indices(toks))]
+        flat = pc.list_flatten(toks)
+        for j, markers in enumerate(_MARKERS):
+            hit = _np(pc.is_in(flat, markers))
+            hits[:, j] = np.bincount(owner[hit], minlength=len(words))
+    for i in np.flatnonzero(~is_ascii):
+        low = words[int(i)].as_py().lower()
+        toks = "".join(c if c.isalpha() else " " for c in low).split()
+        for j, markers in enumerate(_MARKER_SETS):
+            hits[i, j] = sum(t in markers for t in toks)
+    return hits
+
+
+def _distinct_grams(page: np.ndarray, ids: np.ndarray, n: int, n_pages: int) -> np.ndarray:
+    """Distinct word n-grams per page.  ``ids`` are the page-ordered word
+    ids and ``page`` their owners.  A gram's key is its word ids read as
+    digits in base ``width`` (the vocabulary size) under a leading page
+    digit; where that could pass 2⁶³ the partial gram is first
+    factorised to a dense id below ``m``."""
+    m = len(ids) - n + 1
+    if m <= 0:
+        return np.zeros(n_pages, np.int64)
+    width = int(ids.max()) + 1
+    gram, span = ids[:m], width
+    for j in range(1, n):
+        if span * width >= 2**63:
+            gram, span = pd.factorize(gram)[0], m
+        gram, span = gram * width + ids[j : m + j], span * width
+    one_page = page[:m] == page[n - 1 :]
+    gram, owner = gram[one_page], page[:m][one_page]
+    if n_pages * span >= 2**63:
+        gram, span = pd.factorize(gram)[0], m
+    return np.bincount(pd.unique(owner * span + gram) // span, minlength=n_pages)
+
+
+def _ratio(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    return num.astype(np.float64) / den.astype(np.float64)
+
+
+def page_signals_batch(texts: pa.Array) -> pa.StructArray:
+    """The 17 page signals of every text in one Arrow batch (NULL text →
+    all fields NULL)."""
+    n = len(texts)
+    valid = _np(texts.is_valid())
+
+    # words: split once, properties per distinct word, sums per page.
+    # Symbols, CJK characters, "{" and "javascript" never hold ASCII
+    # whitespace, so their per-text counts are per-word sums too
+    words = pc.ascii_split_whitespace(texts)
+    page = _np(pc.list_parent_indices(words)).astype(np.int64)
+    enc = pc.dictionary_encode(pc.list_flatten(words))
+    vocab, ids = enc.dictionary, _np(enc.indices).astype(np.int64)
+    wlen = _np(pc.utf8_length(vocab)).astype(np.int64)
+    nonempty = wlen[ids] > 0  # split leaves "" at leading/trailing space
+    page, ids = page[nonempty], ids[nonempty]
+    n_words = np.bincount(page, minlength=n)
+    nw = np.maximum(n_words, 1)
+    lower = pc.ascii_lower(vocab)
+
+    def per_page(per_word: pa.Array | np.ndarray) -> np.ndarray:
+        if isinstance(per_word, (pa.Array, pa.ChunkedArray)):
+            per_word = _np(per_word).astype(np.int64)
+        return _per_page(page, ids, per_word, n)
+
+    word_chars = per_page(wlen)
+    alpha = n_words - per_page(pc.invert(pc.match_substring_regex(vocab, "[A-Za-z]")))
+    stop = per_page(pc.is_in(lower, _STOP))
+    bpe = per_page(pc.count_substring_regex(vocab, BPE_TOKEN_REGEX))
+    symbols = per_page(pc.count_substring_regex(vocab, _SYMBOL))
+    cjk = per_page(pc.count_substring_regex(vocab, CJK_REGEX))
+    brace = per_page(pc.match_substring(vocab, "{")) > 0
+    javascript = per_page(pc.match_substring(lower, "javascript")) > 0
+    hits = _marker_hits(vocab)
+    scores = [per_page(hits[:, j]) for j in range(len(_LANGS))]
+
+    total2, total3 = np.maximum(n_words - 1, 0), np.maximum(n_words - 2, 0)
+    dup2 = total2 - _distinct_grams(page, ids, 2, n)
+    dup3 = total3 - _distinct_grams(page, ids, 3, n)
+
+    # lines: Spark's trim strips only the space character
+    lines = pc.split_pattern(texts, "\n")
+    n_lines = _np(pc.list_value_length(lines).fill_null(0)).astype(np.int64)
+    line_page = _np(pc.list_parent_indices(lines))
+    trimmed = pc.utf8_trim(pc.list_flatten(lines), " ")
+    bullets = np.bincount(line_page[_np(pc.match_substring_regex(trimmed, _BULLET))], minlength=n)
+    ellipses = np.bincount(line_page[_np(pc.match_substring_regex(trimmed, _ELLIPSIS))], minlength=n)
+    nl = np.maximum(n_lines, 1)
+    n_chars = _np(pc.utf8_length(texts).fill_null(0)).astype(np.int64)
+
+    # langid argmax: strict '>' in declaration order, first wins ties
+    lang = np.full(n, _UND, np.int64)
+    best = np.ones(n, np.int64)  # min_hits - 1
+    for j, s in enumerate(scores):
+        better = s > best
+        lang[better], best[better] = j, s[better]
+    lang[_ratio(cjk, np.maximum(n_chars, 1)) > 0.25] = _ZH
+
+    invalid = ~valid
+
+    def col(values: np.ndarray, type_: pa.DataType) -> pa.Array:
+        return pa.array(values, type=type_, mask=invalid)
+
+    i64, f64 = pa.int64(), pa.float64()
+    arrays = [
+        col(n_chars, i64),
+        col(n_words, i64),
+        col(n_lines, i64),
+        col(_ratio(word_chars, nw), f64),
+        col(_ratio(symbols, nw), f64),
+        col(stop, i64),
+        col(_ratio(alpha, nw), f64),
+        col(_ratio(bullets, nl), f64),
+        col(_ratio(ellipses, nl), f64),
+        col(np.where(total2 > 0, _ratio(dup2, np.maximum(total2, 1)), 0.0), f64),
+        col(np.where(total3 > 0, _ratio(dup3, np.maximum(total3, 1)), 0.0), f64),
+        pc.match_substring_regex(pc.utf8_trim(texts, " "), _TERMINAL),
+        col(brace, pa.bool_()),
+        pc.match_substring(pc.ascii_lower(texts), "lorem ipsum"),
+        col(javascript, pa.bool_()),
+        col(bpe, i64),
+        pc.take(_LANG_NAMES, col(lang, i64)),
+    ]
+    return pa.StructArray.from_arrays(arrays, fields=_ARROW_FIELDS)
+
+
+@arrow_udf(PAGE_SIGNALS_TYPE)
+def page_signals_arrow_udf(texts: pa.Array) -> pa.Array:
+    return page_signals_batch(texts)
 
 
 def page_signals_arrow(text: Column) -> Column:
+    """All 17 page signals as one struct Column (one Arrow crossing)."""
     return page_signals_arrow_udf(text)
+
+
+def quality_struct_arrow(text: Column) -> Column:
+    """The 15 :func:`~greatex_spark.functions.heuristics.quality_struct`
+    fields, projected from the one page-signals kernel."""
+    signals = page_signals_arrow(text)
+    return F.struct(*[signals[name].alias(name) for name in FEATURE_NAMES])

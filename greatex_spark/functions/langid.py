@@ -23,10 +23,11 @@ import zlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 
 N_BUCKETS = 1 << 12
 
@@ -161,23 +162,28 @@ def make_langid_udf(model_path: str | None = None, loader=None):
         return langid_udf
     load = loader or _fasttext_loader
 
-    @pandas_udf(LANGID_SCHEMA)
-    def external_langid_udf(texts: pd.Series) -> pd.DataFrame:
+    # an Arrow UDF so featurize keeps one Python crossing next to the
+    # page-signals kernel (see perplexity.log_perplexity_udf)
+    @arrow_udf(LANGID_SCHEMA)
+    def external_langid_udf(texts: pa.Array) -> pa.Array:
         model = _EXTERNAL_MODELS.get(model_path)
         if model is None:
             model = load(model_path)
             _EXTERNAL_MODELS[model_path] = model
-        mask = texts.notna().to_numpy()
-        clean = [
-            str(t).replace("\n", " ")[:2000] for t in texts[mask]
-        ]  # fastText rejects newlines; same scoring cap as the stand-in
-        langs: list[str | None] = [None] * len(texts)
-        confs: list[float | None] = [None] * len(texts)
+        rows = texts.to_pylist()
+        present = [i for i, t in enumerate(rows) if t is not None]
+        # fastText rejects newlines; same scoring cap as the stand-in
+        clean = [rows[i].replace("\n", " ")[:2000] for i in present]
+        langs: list[str | None] = [None] * len(rows)
+        confs: list[float | None] = [None] * len(rows)
         if clean:
             labels, probs = model.predict(clean, k=1)
-            for pos, lab, pr in zip(np.flatnonzero(mask), labels, probs):
+            for pos, lab, pr in zip(present, labels, probs):
                 langs[pos] = lab[0].removeprefix("__label__")
                 confs[pos] = float(pr[0])
-        return pd.DataFrame({"lang": langs, "confidence": confs})
+        return pa.StructArray.from_arrays(
+            [pa.array(langs, pa.string()), pa.array(confs, pa.float64())],
+            names=["lang", "confidence"],
+        )
 
     return external_langid_udf

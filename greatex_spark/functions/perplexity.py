@@ -1,4 +1,4 @@
-"""KenLM-style perplexity scoring as an Arrow-batched pandas UDF.
+"""KenLM-style perplexity scoring as an Arrow UDF.
 
 KenLM (Heafield 2011) binaries/models are not available in this
 environment, so the scorer is a deterministic stand-in with the same
@@ -25,10 +25,11 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from greatex_spark.functions.langid import SEED_TEXT
 
@@ -253,9 +254,12 @@ def _score_batch(texts, max_chars: int = MAX_SCORED_CHARS) -> list[float | None]
     return out
 
 
-@pandas_udf(T.DoubleType())
-def log_perplexity_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series(_score_batch(texts.tolist()), index=texts.index)
+# an Arrow UDF, like the page-signals kernel next to it in featurize:
+# one eval type lets Spark fuse both into a single ArrowEvalPython node
+# (one text crossing, one Python worker per task)
+@arrow_udf(T.DoubleType())
+def log_perplexity_udf(texts: pa.Array) -> pa.Array:
+    return pa.array(_score_batch(texts.to_pylist()), type=pa.float64())
 
 
 def with_perplexity(
@@ -294,8 +298,8 @@ def make_log_perplexity_udf(model_path: str | None = None, loader=None):
         return log_perplexity_udf
     load = loader or _kenlm_loader
 
-    @pandas_udf(T.DoubleType())
-    def external_ppl_udf(texts: pd.Series) -> pd.Series:
+    @arrow_udf(T.DoubleType())
+    def external_ppl_udf(texts: pa.Array) -> pa.Array:
         model = _EXTERNAL_MODELS.get(model_path)
         if model is None:
             model = load(model_path)
@@ -310,7 +314,7 @@ def make_log_perplexity_udf(model_path: str | None = None, loader=None):
                 return None
             return round(-model.score(s, bos=True, eos=True) * _LN10 / (n + 1), 6)
 
-        return texts.map(score)
+        return pa.array([score(t) for t in texts.to_pylist()], type=pa.float64())
 
     return external_ppl_udf
 

@@ -1,6 +1,6 @@
 """Deduplication operators for web-scale training-data pipelines.
 
-Four families, all shuffle-conscious and 100%-JVM in the hot path:
+Four families, all shuffle-conscious:
 
 - **exact**: hash-groupBy on a normalized-content fingerprint
   (one shuffle, map-side partial dedup via the window min).
@@ -21,9 +21,11 @@ Hash families (``family=`` on every operator):
   (``*_duckdb_sql`` generators below).  MinHash permutations are
   Carter-Wegman arithmetic ``(a·(h mod p) + b) mod p``, ``p = 2³¹−1``,
   with seeded literal constants — overflow-free in both engines' BIGINT.
-- ``"xxhash64"``: Spark-native, numerically-composed (no shingle
-  strings materialized) — the faster hot path for the pipeline, not
-  oracle-replayable (DuckDB has no xxhash64).
+- ``"xxhash64"``: Spark-native word hashes, numerically-composed (no
+  shingle strings materialized) — the faster hot path for the pipeline,
+  not oracle-replayable (DuckDB has no xxhash64).  MinHash signatures
+  and band keys of this family come from one numpy Arrow batch kernel
+  (:func:`minhash_batch`) that replays Spark's XxHash64 bit for bit.
 
 Both are deterministic across partitions, cluster sizes, and Spark
 versions.
@@ -33,15 +35,20 @@ exchange, whose width is ``num_bands × docs`` small rows (doc_id +
 two longs), and (b) the per-doc min-reduction — both key-partitioned
 with AQE skew splitting enabled (hot buckets from boilerplate text
 are real; see ``session.py``).  Signatures are computed in one
-projection; shingling never materializes more than one doc's shingle
-array at a time.
+projection; md5 shingling never materializes more than one doc's
+shingle array at a time, and the xxhash64 kernel holds one Arrow
+batch's shingle hashes (one long each) and permutes them in blocks.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.functions import arrow_udf
 
 from greatex_spark.functions.textstats import normalize_for_fingerprint
 
@@ -336,6 +343,142 @@ def shingle_hashes(text: Column | str, k: int = 5, family: str = "xxhash64") -> 
     return let(F.transform(words, word_hash), grams)
 
 
+# ---------------------------------------------------------------------------
+# xxhash64 family: one numpy batch kernel per Arrow batch.
+#
+# The word hashes stay ``F.xxhash64`` in the JVM; everything after them
+# (k-word shingles, ``num_perm`` permutation minima, band keys) is
+# Spark's XxHash64 replayed on uint64 arrays.  Spark folds each argument
+# of ``xxhash64(a, b, ...)`` into a running hash that starts at seed 42:
+# an int through ``hashInt``, a long through ``hashLong``, a NULL not at
+# all.  So shingle i of a document is ``xxhash64(w_i, ..., w_{i+k-1})``
+# (a window past the last word folds only the words it has), permutation
+# p is ``xxhash64(int p, shingle)`` and band b is
+# ``xxhash64(int b, s_{br}, ..., s_{br+r-1})`` over the signed-min
+# signature.  The tests pin the signatures bit-equal to those Spark
+# expressions.
+
+_XXH_SEED = 42
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+# shingles per kernel block: keeps the (num_perm × block) work arrays
+# cache-resident (the permutation step ran 1.9× faster than with 8192
+# on a 4-vCPU x86 host)
+_BLOCK = 2048
+
+
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(h: np.ndarray) -> np.ndarray:
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
+
+
+def xxh64_int(value: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """Spark ``XXH64.hashInt`` on uint64 arrays (wrap-around arithmetic)."""
+    with np.errstate(over="ignore"):
+        h = seed + _P5 + np.uint64(4)
+        h = h ^ ((value & np.uint64(0xFFFFFFFF)) * _P1)
+        return _fmix(_rotl(h, 23) * _P2 + _P3)
+
+
+def _long_term(value: np.ndarray) -> np.ndarray:
+    # the seed-independent half of hashLong: shared by every permutation
+    with np.errstate(over="ignore"):
+        return _rotl(value * _P2, 31) * _P1
+
+
+def _long_with_term(term: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    with np.errstate(over="ignore"):
+        h = (seed + _P5 + np.uint64(8)) ^ term
+        return _fmix(_rotl(h, 27) * _P1 + _P4)
+
+
+def xxh64_long(value: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """Spark ``XXH64.hashLong`` on uint64 arrays (wrap-around arithmetic)."""
+    return _long_with_term(_long_term(value), seed)
+
+
+def _int_seeds(count: int) -> np.ndarray:
+    """``xxhash64(int i)`` for i < count: the running hash after the int."""
+    return xxh64_int(
+        np.arange(count, dtype=np.uint64), np.full(count, _XXH_SEED, np.uint64)
+    )
+
+
+def _shingles(word_hashes: pa.Array, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """(shingle hashes, first-shingle offset per document).  A document
+    of n words has max(n - k, 0) + 1 shingles; a NULL word array counts
+    as no words, exactly like the Spark expression."""
+    n_words = word_hashes.value_lengths().fill_null(0).to_numpy().astype(np.int64)
+    words = pc.list_flatten(word_hashes).to_numpy().view(np.uint64)
+    term = _long_term(words if len(words) else np.zeros(1, np.uint64))
+    word_end = np.cumsum(n_words)
+    n_sh = np.maximum(n_words - k, 0) + 1
+    sh_off = np.concatenate([[0], np.cumsum(n_sh)])
+    doc = np.repeat(np.arange(len(n_words)), n_sh)
+    first = (word_end - n_words)[doc] + (np.arange(sh_off[-1]) - sh_off[doc])
+    end = word_end[doc]
+    h = np.full(len(doc), _XXH_SEED, np.uint64)
+    for j in range(k):
+        pos = first + j
+        h = np.where(pos < end, _long_with_term(term[np.minimum(pos, len(term) - 1)], h), h)
+    return h, sh_off
+
+
+def minhash_batch(
+    word_hashes: pa.Array, num_perm: int, k: int, num_bands: int | None = None
+) -> pa.Array:
+    """MinHash signatures (``num_bands=None``) or LSH band keys of one
+    Arrow batch of per-document ``xxhash64`` word-hash arrays."""
+    shingles, sh_off = _shingles(word_hashes, k)
+    term = _long_term(shingles)
+    perm_seeds = _int_seeds(num_perm)[:, None]
+    sig = np.empty((len(sh_off) - 1, num_perm), np.int64)
+    # blocks end on document boundaries, so each reduceat segment is one
+    # document's shingles; the min is signed, as Spark's array_min
+    d0 = 0
+    while d0 < len(sig):
+        d1 = max(int(np.searchsorted(sh_off, sh_off[d0] + _BLOCK, "right")) - 1, d0 + 1)
+        lo, hi = sh_off[d0], sh_off[d1]
+        perms = _long_with_term(term[None, lo:hi], perm_seeds).view(np.int64)
+        sig[d0:d1] = np.minimum.reduceat(perms, sh_off[d0:d1] - lo, axis=1).T
+        d0 = d1
+    if num_bands is None:
+        out = sig
+    else:
+        r = num_perm // num_bands
+        h = np.broadcast_to(_int_seeds(num_bands), (len(sig), num_bands))
+        bands = sig.view(np.uint64).reshape(len(sig), num_bands, r)
+        for j in range(r):
+            h = xxh64_long(bands[:, :, j], h)
+        out = h.view(np.int64)
+    return pa.FixedSizeListArray.from_arrays(pa.array(out.ravel()), out.shape[1]).cast(
+        pa.list_(pa.int64())
+    )
+
+
+def _minhash_udf(num_perm: int, k: int, num_bands: int | None):
+    @arrow_udf(T.ArrayType(T.LongType()))
+    def minhash_xxhash64(word_hashes: pa.Array) -> pa.Array:
+        return minhash_batch(word_hashes, num_perm, k, num_bands)
+
+    return minhash_xxhash64
+
+
+def _xxhash64_word_hashes(text: Column | str) -> Column:
+    c = F.col(text) if isinstance(text, str) else text
+    return F.transform(F.split(normalize_for_fingerprint(c), " "), lambda w: F.xxhash64(w))
+
+
 def minhash_signature(
     text: Column | str,
     num_perm: int = 64,
@@ -343,54 +486,43 @@ def minhash_signature(
     family: str = "xxhash64",
 ) -> Column:
     """Array of ``num_perm`` min-hashes.  Permutation *i* is
-    ``xxhash64(lit(i), shingle_hash)`` for the xxhash64 family, or the
-    literal Carter-Wegman map ``(aᵢ·(h mod p) + bᵢ) mod p`` with
-    ``p = 2³¹−1`` for the md5 family (see :func:`perm_constants` for
-    why the modulus must equal the coefficient range) — independent
-    hash functions from one seeded family, evaluated entirely in JVM
-    expressions.
+    ``xxhash64(int i, shingle_hash)`` for the xxhash64 family (computed
+    by the Arrow batch kernel :func:`minhash_batch`), or the literal
+    Carter-Wegman map ``(aᵢ·(h mod p) + bᵢ) mod p`` with ``p = 2³¹−1``
+    for the md5 family (see :func:`perm_constants` for why the modulus
+    must equal the coefficient range), evaluated in JVM expressions.
 
-    The base shingle-hash array is **let-bound** (see
+    md5: the base shingle-hash array is **let-bound** (see
     :mod:`greatex_spark.functions.exprs`): it is evaluated once per row,
     and the ``num_perm`` permutations only re-hash cheap longs.  Without
     this, Catalyst inlines the shingle expression into every permutation
     lambda — a measured ~50× blowup."""
     from greatex_spark.functions.exprs import let
 
-    base = shingle_hashes(text, shingle_k, family)
-    if family == "md5":
-        # constants as literal arrays indexed per permutation: ONE nested
-        # transform instead of num_perm unrolled subtrees — the unrolled
-        # form was a measured ~3× slowdown from sheer interpreted-plan
-        # size, with identical values
-        consts = perm_constants(num_perm)
-        arr_a = F.array(*[F.lit(a).cast("long") for a, _ in consts])
-        arr_b = F.array(*[F.lit(b).cast("long") for _, b in consts])
-        return let(
-            base,
-            lambda bh: F.transform(
-                F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                lambda i: F.array_min(
-                    F.transform(
-                        bh,
-                        lambda h: (
-                            F.element_at(arr_a, i + 1) * (h % F.lit(MOD31))
-                            + F.element_at(arr_b, i + 1)
-                        )
-                        % F.lit(MOD31),
+    if family != "md5":
+        return _minhash_udf(num_perm, shingle_k, None)(_xxhash64_word_hashes(text))
+    # constants as literal arrays indexed per permutation: ONE nested
+    # transform instead of num_perm unrolled subtrees — the unrolled
+    # form was a measured ~3× slowdown from sheer interpreted-plan
+    # size, with identical values
+    consts = perm_constants(num_perm)
+    arr_a = F.array(*[F.lit(a).cast("long") for a, _ in consts])
+    arr_b = F.array(*[F.lit(b).cast("long") for _, b in consts])
+    return let(
+        shingle_hashes(text, shingle_k, family),
+        lambda bh: F.transform(
+            F.sequence(F.lit(0), F.lit(num_perm - 1)),
+            lambda i: F.array_min(
+                F.transform(
+                    bh,
+                    lambda h: (
+                        F.element_at(arr_a, i + 1) * (h % F.lit(MOD31))
+                        + F.element_at(arr_b, i + 1)
                     )
-                ),
-            ),
-        )
-    return F.element_at(
-        F.transform(
-            F.array(base),
-            lambda bh: F.transform(
-                F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                lambda i: F.array_min(F.transform(bh, lambda b: F.xxhash64(i, b))),
+                    % F.lit(MOD31),
+                )
             ),
         ),
-        1,
     )
 
 
@@ -401,38 +533,29 @@ def band_hashes(
     shingle_k: int = 5,
     family: str = "xxhash64",
 ) -> Column:
-    """LSH band-bucket hashes: the signature is let-bound (see
-    :func:`minhash_signature`) so it is computed once, not per band."""
+    """LSH band-bucket hashes.  xxhash64: numeric band keys
+    ``xxhash64(int b, s_1, ..., s_r)`` straight from the Arrow kernel
+    (one crossing for shingles, signature and bands).  md5: the
+    signature is let-bound (see :func:`minhash_signature`) so it is
+    computed once, not per band."""
     from greatex_spark.functions.exprs import let
 
+    if family != "md5":
+        return _minhash_udf(num_perm, shingle_k, num_bands)(_xxhash64_word_hashes(text))
     r = num_perm // num_bands
-    sig = minhash_signature(text, num_perm, shingle_k, family)
-    if family == "md5":
-        return let(
-            sig,
-            lambda s: F.array(
-                *[
-                    md5_long(
-                        F.array_join(
-                            F.transform(
-                                F.slice(s, b * r + 1, r), lambda x: x.cast("string")
-                            ),
-                            ",",
-                        )
+    return let(
+        minhash_signature(text, num_perm, shingle_k, family),
+        lambda s: F.array(
+            *[
+                md5_long(
+                    F.array_join(
+                        F.transform(F.slice(s, b * r + 1, r), lambda x: x.cast("string")),
+                        ",",
                     )
-                    for b in range(num_bands)
-                ]
-            ),
-        )
-    return F.element_at(
-        F.transform(
-            F.array(sig),
-            lambda s: F.transform(
-                F.sequence(F.lit(0), F.lit(num_bands - 1)),
-                lambda b: F.xxhash64(b, F.array_join(F.slice(s, b * r + 1, r), ",")),
-            ),
+                )
+                for b in range(num_bands)
+            ]
         ),
-        1,
     )
 
 

@@ -8,11 +8,15 @@ of the page table, and each stage is a single Spark projection/filter
 — no driver-side loops, no RDDs:
 
 - **featurize**: ONE projection computing every quality feature, the
-  language decision and the token count (one Arrow pandas UDF), the
-  perplexity score (Arrow pandas UDF), the PII-scrubbed text and the
-  final keep flag.
+  language decision and the token count (the page-signals Arrow batch
+  kernel), the perplexity score, the PII-scrubbed text and the final
+  keep flag.  Every Python scorer in it is an ``arrow_udf``, so Spark
+  fuses them into one ArrowEvalPython node: the text crosses to Python
+  once per batch.
 - **filter_kept**: predicate on the precomputed flags.
-- **dedup**: MinHash-LSH near-duplicate removal keyed by url.
+- **dedup**: MinHash-LSH near-duplicate removal keyed by url (word
+  hashes in the JVM, shingles, signatures and band keys in one numpy
+  Arrow batch kernel).
 - **gold_projection**: the public 5-column contract, scrubbed text
   swapped in (the reference's 8→6-column final projection,
   ``transform_load_retail_warehouse.sql:25-32``, recast).
@@ -116,7 +120,8 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
         ext_lang = make_langid_udf(config.langid_model, config.langid_loader)(
             F.col("text")
         )["lang"]
-    # one Arrow crossing for heuristics + langid + token count
+    # heuristics + langid + token count, the perplexity score and any
+    # external model: all Arrow UDFs, evaluated in one Arrow crossing
     step1 = df.select(
         "*",
         page_signals_arrow(F.col("text")).alias("__qs"),

@@ -1,5 +1,6 @@
-"""The Arrow-batched heuristic twin must agree with the native Column
-spec feature-by-feature on every planted fixture class."""
+"""The Arrow page-signals kernel must agree with the native Column spec
+feature-by-feature on every planted fixture class and on edge cases,
+including Java's line-terminator rule for ``$``."""
 
 from __future__ import annotations
 
@@ -68,6 +69,15 @@ def test_arrow_matches_native_edge_cases(spark):
         "ends with tab then period.\t",
         "line ends in dots...\t\nreal terminal.",
         "\x0b vertical tab lead\n- bullet",
+        # Java's $ also matches before a final \r, \r\n, \n, \u0085,
+        # \u2028 or \u2029: CRLF and NEL line ends count as line ends
+        "dots...\r\nnext line",
+        "Done.\r\n",
+        "wait...\x85",
+        "Done.\n",
+        "two ends.\n\n",
+        "para end…\u2028",
+        "crlf twice...\r\r",
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
     native = df.select("i", quality_struct(F.col("text")).alias("q"))
@@ -80,3 +90,42 @@ def test_arrow_matches_native_edge_cases(spark):
                 assert math.isclose(nv, av, rel_tol=0, abs_tol=1e-12), (row["i"], f, nv, av)
             else:
                 assert nv == av, (row["i"], f, nv, av)
+
+
+# 52 distinct words plus stopwords: passes every keep rule except the
+# ellipsis-line one, which flips on how the line terminator is read
+_NATO = (
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo "
+    "lima mike november oscar papa quebec romeo sierra tango uniform "
+    "victor whiskey xray yankee zulu"
+).split()
+_PROSE = [" ".join(_NATO[:13]) + " and the", " ".join(_NATO[13:]) + " of the",
+          " ".join(w + "s" for w in _NATO) + " with that."]
+
+
+def test_native_and_duckdb_keep_agree_on_line_terminators(spark):
+    """``ellipsis_line_fraction`` is part of ``keep_quality``: a CRLF or
+    NEL page whose lines end in dots must be an ellipsis-heavy drop in
+    the DuckDB twin exactly as in the native spec."""
+    import duckdb
+
+    from greatex_spark.functions.heuristics import (
+        gopher_keep_condition,
+        gopher_keep_duckdb_sql,
+    )
+
+    texts = [
+        "\n".join(_PROSE),  # control: kept by both
+        "...\r\n".join(_PROSE[:2]) + "...\r\n" + _PROSE[2],
+        "…\x85\n".join(_PROSE[:2]) + "…\x85\n" + _PROSE[2],
+        "...\u2028\n".join(_PROSE[:2]) + "...\u2028\n" + _PROSE[2],
+        "...\n".join(_PROSE[:2]) + "...\n" + _PROSE[2],
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    native = [r.k for r in df.orderBy("i").select(gopher_keep_condition().alias("k")).collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (i BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(texts)))
+    duck = [r[0] for r in con.execute(f"SELECT {gopher_keep_duckdb_sql('text')} FROM t ORDER BY i").fetchall()]
+    assert native == [True, False, False, False, False]
+    assert duck == native

@@ -68,6 +68,31 @@ def test_quality_features_prune_to_text_column(spark):
         assert col not in read_schema
 
 
+def test_featurize_crosses_to_python_once(spark):
+    """The page-signals kernel, the perplexity scorer and the external
+    model seams are all Arrow UDFs, so featurize's executed plan holds
+    exactly one ArrowEvalPython node: the text crosses to Python once
+    per batch and one Python worker runs per task (a pandas UDF next to
+    an Arrow UDF would split it into two nodes)."""
+    from greatex_spark.pages import generate_pages
+    from greatex_spark.pipeline.stages import PipelineConfig, featurize
+    from test_model_seam import FAKE_FT_LOADER, FAKE_KENLM_LOADER
+
+    pages = generate_pages(spark, 50, seed=11)
+    fake_models = PipelineConfig(
+        langid_model="/models/lid.176.bin",
+        langid_loader=FAKE_FT_LOADER,
+        perplexity_model="/models/en.arpa",
+        perplexity_loader=FAKE_KENLM_LOADER,
+    )
+    for cfg in (PipelineConfig(), fake_models):
+        out = featurize(pages, cfg)
+        out.write.format("noop").mode("overwrite").save()
+        executed = out._jdf.queryExecution().executedPlan().toString()
+        assert executed.count("ArrowEvalPython") == 1, executed
+        assert "BatchEvalPython" not in executed
+
+
 def test_dedup_semi_join_prunes_columns(spark):
     from greatex_spark.operators.dedup import minhash_lsh_dedup
 

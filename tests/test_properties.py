@@ -1,7 +1,6 @@
 """Property-based tests (hypothesis) for the pure-Python kernels whose
 Spark twins are asserted elsewhere: the evaluation-parameter expression
-evaluator and the toxicity scrub; plus a pure-Python model of the
-sequence-packing layout rule, which no library module computes now.
+evaluator and the toxicity scrub.
 
 These run driver-side only (no SparkSession) so hypothesis can afford
 hundreds of examples."""
@@ -67,21 +66,3 @@ def test_toxicity_scrub_is_idempotent_and_complete(tokens):
     # complete: no blocklist word survives as a standalone token
     pat = re.compile(toxicity_pattern(DEFAULT_BLOCKLIST))
     assert not pat.search(scrubbed)
-
-
-@given(
-    counts=st.lists(st.integers(min_value=0, max_value=5000), min_size=1, max_size=200),
-    max_tokens=st.integers(min_value=1, max_value=4096),
-)
-@settings(max_examples=200, deadline=None)
-def test_packing_layout_rule_pure_python_model(counts, max_tokens):
-    """The packing layout is an exclusive prefix sum chunked by
-    max_tokens: offsets stay in range and consecutive docs advance by
-    exactly the token count."""
-    pos = 0
-    for c in counts:
-        seq, off = pos // max_tokens, pos % max_tokens
-        assert 0 <= off < max_tokens
-        assert seq * max_tokens + off == pos
-        pos += c
-    assert pos == sum(counts)

@@ -18,14 +18,19 @@ expectations add one shuffle — flag ``approx=True`` in kwargs to use
 ``approx_count_distinct`` (HLL, shuffle-free partials) on huge tables.
 Partial-unexpected collection only scans on failure and is bounded by
 ``distinct().orderBy().limit(20)``.
+
+Every metric carries a key, its expression text, so a value computed
+elsewhere can stand in for it: :func:`run_suite` takes a ``known`` map
+(the metrics a stage write observed, see ``tables.Catalog``) and
+aggregates only what is missing from it.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import uuid
+from collections.abc import Mapping
 from dataclasses import dataclass, field
-from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -262,10 +267,41 @@ def _between_success(observed: Any, min_value: Any, max_value: Any) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Column], dict[int, dict[str, Any]]]:
-    """Build the fused metric expression list plus a per-expectation plan
-    map used by :func:`run_suite` to finalize results."""
-    metrics: list[Column] = [F.count(F.lit(1)).alias("__element_count")]
+ELEMENT_COUNT = "count(1)"  # the key of F.count(F.lit(1)), every suite's first metric
+
+
+@dataclass(frozen=True, eq=False)
+class Metric:
+    """One aggregate of the fused agg.  ``key`` is the expression text
+    without an alias, so it does not depend on where the metric sits in
+    the suite, and a changed bound is a different key.  ``observable``
+    is False for DISTINCT aggregates, which Spark rejects in
+    ``DataFrame.observe``; they are never taken from a ``known`` map.
+    Their text drops the DISTINCT flag (``count(DISTINCT x)`` prints
+    as ``count(x)``), so their key is prefixed ``distinct:``."""
+
+    key: str
+    column: Column  # aliased to ``key``
+    observable: bool = True
+
+
+def _metric(expr: Column, observable: bool = True) -> Metric:
+    key = expr._jc.toString() if observable else f"distinct:{expr._jc.toString()}"
+    return Metric(key, expr.alias(key), observable)
+
+
+def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Metric], dict[int, dict[str, Any]]]:
+    """Build the fused metric list (deduplicated by key) plus a
+    per-expectation plan map used by :func:`run_suite` to finalize
+    results; a plan's ``metric`` is a metric key."""
+    by_key: dict[str, Metric] = {}
+
+    def add(expr: Column, observable: bool = True) -> str:
+        m = _metric(expr, observable)
+        by_key.setdefault(m.key, m)
+        return m.key
+
+    add(F.count(F.lit(1)))
     plan: dict[int, dict[str, Any]] = {}
     columns = set(df.columns)
     for i, exp in enumerate(suite.expectations):
@@ -303,15 +339,15 @@ def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Column], dict[int, 
                 "stdev": F.stddev_samp,  # sample stddev, like GE / SQL STDDEV
             }[stat]
             col = F.col(k["column"])
-            if stat == "sum" and dict(df.dtypes).get(k["column"]) in (
+            integral = stat == "sum" and dict(df.dtypes).get(k["column"]) in (
                 "tinyint", "smallint", "int", "bigint"
-            ):
+            )
+            if integral:
                 # int64 sum over ~10^12 rows overflows (job-killing under
                 # ANSI); accumulate exactly in DECIMAL(38,0) — finalize
                 # converts the Decimal back to an exact Python int
                 col = col.cast("decimal(38,0)")
-            metrics.append(fn(col).alias(f"e{i}_observed"))
-            plan[i] = {"kind": "aggregate", "metric": f"e{i}_observed"}
+            plan[i] = {"kind": "aggregate", "metric": add(fn(col)), "integral": integral}
         elif t == "expect_column_quantile_to_be_between":
             # exact interpolated percentile (SQL PERCENTILE_CONT semantics);
             # for huge tables pass approx=True → approx_percentile partials
@@ -320,14 +356,13 @@ def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Column], dict[int, 
                 expr = F.percentile_approx(F.col(k["column"]), F.lit(q))
             else:
                 expr = F.percentile(F.col(k["column"]), F.lit(q))
-            metrics.append(expr.alias(f"e{i}_observed"))
-            plan[i] = {"kind": "aggregate", "metric": f"e{i}_observed"}
+            plan[i] = {"kind": "aggregate", "metric": add(expr)}
         elif t == "expect_column_unique_value_count_to_be_between":
-            agg_fn = (
-                F.approx_count_distinct if k.get("approx") else F.count_distinct
-            )
-            metrics.append(agg_fn(F.col(k["column"])).alias(f"e{i}_observed"))
-            plan[i] = {"kind": "aggregate", "metric": f"e{i}_observed"}
+            if k.get("approx"):
+                key = add(F.approx_count_distinct(F.col(k["column"])))
+            else:
+                key = add(F.count_distinct(F.col(k["column"])), observable=False)
+            plan[i] = {"kind": "aggregate", "metric": key}
         elif t == "expect_column_values_to_be_unique" and k.get("exact"):
             # opt-in GE-EXACT semantics: unexpected = every member of a
             # duplicate group (GE counts all rows whose value occurs
@@ -352,32 +387,29 @@ def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Column], dict[int, 
             # huge tables; the greatest(0, ·) clamp guards the HLL
             # overestimate case, where count−approx_distinct can go
             # negative and a negative percent would silently pass.)
-            agg_fn = (
-                F.approx_count_distinct if k.get("approx") else F.count_distinct
-            )
+            approx = bool(k.get("approx"))
+            agg_fn = F.approx_count_distinct if approx else F.count_distinct
             col = F.col(k["column"])
-            metrics.append(
-                F.greatest(F.count(col) - agg_fn(col), F.lit(0))
-                .cast("long")
-                .alias(f"e{i}_unexpected")
+            key = add(
+                F.greatest(F.count(col) - agg_fn(col), F.lit(0)).cast("long"),
+                observable=approx,
             )
-            plan[i] = {"kind": "unique_fused", "metric": f"e{i}_unexpected"}
+            plan[i] = {"kind": "unique_fused", "metric": key}
         elif exp.is_row_level:
             try:
                 cond, value_col = _row_level_condition(exp, df)
             except Exception as ex:
                 plan[i] = {"kind": "compile_error", "message": f"{type(ex).__name__}: {ex}"}
                 continue
-            metrics.append(F.sum(cond.cast("long")).alias(f"e{i}_unexpected"))
             plan[i] = {
                 "kind": "row_level",
-                "metric": f"e{i}_unexpected",
+                "metric": add(F.sum(cond.cast("long"))),
                 "cond": cond,
                 "value_col": value_col,
             }
         else:
             raise ValueError(f"cannot compile expectation type {t}")
-    return metrics, plan
+    return list(by_key.values()), plan
 
 
 def run_suite(
@@ -387,15 +419,25 @@ def run_suite(
     batch_identifier: str = "",
     partial_unexpected_limit: int = 20,
     collect_partial_unexpected: bool = True,
+    known: Mapping[str, Any] | None = None,
 ) -> ValidationResult:
     """Validate ``df`` against ``suite`` — the EP2 query-executor recast
-    (``/root/reference/dags/validation.py:12-53`` →  one library call)."""
+    (``/root/reference/dags/validation.py:12-53`` →  one library call).
+
+    ``known`` maps metric keys to values already computed over exactly
+    the rows of ``df`` (the observed metrics of the write that produced
+    it).  Only the metrics missing from it are aggregated, in one job;
+    when none is missing, no job runs."""
     run_time = _dt.datetime.now(_dt.timezone.utc)
     run_name = run_name or f"run-{uuid.uuid4().hex[:12]}"
     metrics, plan = compile_suite(df, suite)
 
-    agg_row = df.agg(*metrics).collect()[0].asDict()
-    element_count = int(agg_row["__element_count"])
+    known = known or {}
+    agg_row = {m.key: known[m.key] for m in metrics if m.observable and m.key in known}
+    missing = [m.column for m in metrics if m.key not in agg_row]
+    if missing:
+        agg_row.update(df.agg(*missing).collect()[0].asDict())
+    element_count = int(agg_row[ELEMENT_COUNT])
     dtypes = dict(df.dtypes)
 
     results: list[ExpectationResult] = []
@@ -432,7 +474,7 @@ def run_suite(
                 res = {"observed_value": element_count}
             elif p["kind"] == "aggregate":
                 observed = agg_row[p["metric"]]
-                if isinstance(observed, Decimal):
+                if p.get("integral") and observed is not None:
                     observed = int(observed)  # exact decimal(38,0) sum
                 success = _between_success(
                     observed, k.get("min_value"), k.get("max_value")

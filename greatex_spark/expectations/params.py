@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import ast
 from collections.abc import Mapping
+from decimal import Decimal
 from typing import Any
 
 import pyarrow as pa
@@ -167,7 +168,7 @@ def validation_parameters(validation) -> dict[str, float]:
             out[f"{suite}.element_count"] = float(res["element_count"])
             out[f"{key}.unexpected_count"] = float(res.get("unexpected_count") or 0)
         ov = res.get("observed_value")
-        if isinstance(ov, (int, float)):
+        if isinstance(ov, (int, float, Decimal)):
             out[f"{key}.observed_value"] = float(ov)
             if etype == "expect_table_row_count_to_be_between":
                 out[f"{suite}.element_count"] = float(ov)

@@ -589,6 +589,9 @@ def minhash_lsh_dedup(
     buffers whole buckets (hot boilerplate buckets stream through the
     partial min).
 
+    A NULL text has no shingles, so its row lands in no bucket: it is
+    nobody's near-duplicate and always survives.
+
     ``survivor_join`` picks how survivors rejoin the full rows:
 
     - ``"semi"`` (default, the spec): ``df ⋉ survivors`` — one hash
@@ -604,11 +607,14 @@ def minhash_lsh_dedup(
     """
     if num_perm % num_bands:
         raise ValueError("num_perm must be divisible by num_bands")
-    rows_per_band = num_perm // num_bands
+    text = F.col(text_col)
     banded = df.select(
         F.col(id_col).alias("__id"),
         F.posexplode(
-            band_hashes(F.col(text_col), num_perm, num_bands, shingle_k, family)
+            F.when(
+                text.isNotNull(),
+                band_hashes(text, num_perm, num_bands, shingle_k, family),
+            )
         ).alias("__band", "__bucket"),
     )
     reps = (
@@ -620,7 +626,7 @@ def minhash_lsh_dedup(
         .select(F.col("__bmin").alias(id_col))
     )
     if survivor_join == "anti":
-        # ids − survivors: long-only columns end to end; the final anti
+        # ids − survivors: long-only columns end to end; the final
         # join's build side is the (small) drop set, so the wide rows
         # stream through map-side only.  The broadcast HINT (not AQE) is
         # load-bearing: AQE's runtime SMJ→BHJ conversion happens only
@@ -632,9 +638,21 @@ def minhash_lsh_dedup(
         drops = (
             df.select(F.col(id_col)).distinct()
             .join(reps, on=id_col, how="left_anti")
+            .select(F.col(id_col).alias("__match"))
         )
-        return df.join(F.broadcast(drops), on=id_col, how="left_anti")
-    return df.join(reps, on=id_col, how="left_semi")
+        matched = F.broadcast(drops)
+        keep = F.col("__match").isNull()
+    else:
+        matched = reps.select(F.col(id_col).alias("__match"))
+        keep = F.col("__match").isNotNull()
+    # left joins (not semi/anti joins), so that bucketless rows, which are
+    # in no bucket-min set, are kept either way; the predicate reads the
+    # text the returned rows carry anyway
+    return (
+        df.join(matched, F.col(id_col) == F.col("__match"), how="left")
+        .where(keep | text.isNull())
+        .drop("__match")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -953,8 +971,9 @@ def minhash_lsh_dedup_duckdb_sql(
 ) -> str:
     """Oracle for :func:`minhash_lsh_dedup` (md5 family): a row survives
     iff it is the bucket min in exactly ``num_bands`` buckets (⟺ min of
-    every bucket it lands in)."""
-    ctes = _minhash_ctes_sql(table, id_col, text_col, num_perm, num_bands, shingle_k)
+    every bucket it lands in), or its text is NULL (no buckets)."""
+    texts = f"(SELECT * FROM {table} WHERE {text_col} IS NOT NULL)"
+    ctes = _minhash_ctes_sql(texts, id_col, text_col, num_perm, num_bands, shingle_k)
     return f"""
 WITH {ctes},
 __mins AS (
@@ -962,7 +981,8 @@ __mins AS (
 __reps AS (
   SELECT bmin FROM __mins GROUP BY bmin HAVING count(*) = {num_bands})
 SELECT {select_cols} FROM {table} t
-JOIN __reps r ON t.{id_col} = r.bmin
+LEFT JOIN __reps r ON t.{id_col} = r.bmin
+WHERE r.bmin IS NOT NULL OR t.{text_col} IS NULL
 """
 
 

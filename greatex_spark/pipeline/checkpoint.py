@@ -148,6 +148,28 @@ def store_partition_lineage(
     )
 
 
+def resolve_checkpoint_suite(
+    spark: SparkSession,
+    checkpoint: Checkpoint,
+    catalog: Catalog | None = None,
+    evaluation_parameters: dict | None = None,
+) -> Suite:
+    """D4: the checkpoint's suite with its ``{"$PARAMETER": ...}`` kwargs
+    bound — an explicit mapping wins, else the latest committed values
+    from the catalog parameter store (loaded only when the suite
+    actually uses markers)."""
+    from greatex_spark.expectations.params import (
+        load_parameters,
+        resolve_suite,
+        suite_has_markers,
+    )
+
+    params = evaluation_parameters
+    if params is None and catalog is not None and suite_has_markers(checkpoint.suite):
+        params = load_parameters(spark, catalog)
+    return resolve_suite(checkpoint.suite, params)
+
+
 def run_checkpoint(
     spark: SparkSession,
     df: DataFrame,
@@ -157,28 +179,24 @@ def run_checkpoint(
     run_name: str | None = None,
     batch_identifier: str = "",
     evaluation_parameters: dict | None = None,
+    known: dict | None = None,
 ) -> ValidationResult:
+    """Gate ``df``.  ``known`` holds metric values already computed over
+    exactly these rows (a snapshot's commit record); the suite scans
+    only for the rest (see :func:`run_suite`)."""
     from greatex_spark.expectations.params import (
-        load_parameters,
-        resolve_suite,
         store_parameters,
-        suite_has_markers,
         validation_parameters,
     )
 
-    # D4: bind {"$PARAMETER": ...} kwargs — explicit mapping wins, else
-    # the latest committed values from the catalog parameter store
-    # (loaded only when the suite actually uses markers)
-    params = evaluation_parameters
-    if params is None and catalog is not None and suite_has_markers(checkpoint.suite):
-        params = load_parameters(spark, catalog)
-    suite = resolve_suite(checkpoint.suite, params)
+    suite = resolve_checkpoint_suite(spark, checkpoint, catalog, evaluation_parameters)
     validation = run_suite(
         df,
         suite,
         run_name=run_name,
         batch_identifier=batch_identifier or checkpoint.name,
         collect_partial_unexpected=checkpoint.collect_partial_unexpected,
+        known=known,
     )
     if catalog is not None:
         store_metrics(spark, catalog, validation, epoch)

@@ -21,22 +21,28 @@ the last committed snapshot.  Re-running a completed epoch is
 idempotent: snapshots are replaced, not appended (the reference's
 DROP-and-recreate idempotency, without losing history).
 
-Gates validate the *committed* parquet (read back), not the in-memory
-plan — what was validated is exactly what the next stage reads.
+Gates validate the rows handed to the writer: each stage write
+observes its suite's metrics (``DataFrame.observe``) and commits them
+with the snapshot, and the gate reads them from that commit record.
+Only the exact-distinct metrics (url uniqueness) scan the committed
+files.  The parquet round trip is lossless for the stage tables' column
+types, so what was validated is exactly what the next stage reads.  A
+resume gates the same way, from the record of the committed snapshot.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greatex_spark.expectations.compiler import ValidationResult
+from greatex_spark.expectations.compiler import ValidationResult, compile_suite
 from greatex_spark.pipeline.checkpoint import (
     Checkpoint,
+    resolve_checkpoint_suite,
     run_checkpoint,
     store_partition_lineage,
 )
@@ -75,7 +81,7 @@ class PipelineResult:
         }
 
 
-def _stage(
+def _gated_stage(
     spark: SparkSession,
     catalog: Catalog,
     result: PipelineResult,
@@ -84,15 +90,28 @@ def _stage(
     resume: bool,
     compute,
     run_name: str,
+    checkpoint: Checkpoint,
 ) -> DataFrame:
-    """Write-or-skip one stage, then return the committed snapshot (read
-    once: lineage and the gate both use that read)."""
+    """Write-or-skip one stage, gate it and return the committed snapshot.
+
+    The suite is resolved before the write, which observes the suite's
+    observable metrics and records them with the snapshot.  A fresh run
+    and a resume then gate alike: the recorded values plus one scan of
+    the committed snapshot for whatever the record lacks."""
+    checkpoint = replace(checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog))
     if resume and catalog.has_epoch(table, epoch):
         result.skipped.append(table)
-        return catalog.read_snapshot(spark, table, epoch)
-    catalog.write_snapshot(compute(), table, epoch)
-    committed = catalog.read_snapshot(spark, table, epoch)
-    store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
+        committed = catalog.read_snapshot(spark, table, epoch)
+    else:
+        df = compute()
+        metrics, _ = compile_suite(df, checkpoint.suite)
+        catalog.write_snapshot(df, table, epoch, [m.column for m in metrics if m.observable])
+        committed = catalog.read_snapshot(spark, table, epoch)
+        store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
+    result.validations[checkpoint.name] = run_checkpoint(
+        spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
+        known=catalog.snapshot_metrics(table, epoch),
+    )
     return committed
 
 
@@ -137,55 +156,37 @@ def run_pipeline(
     result = PipelineResult(run_name=run_name, epoch=epoch)
 
     # -- bronze ----------------------------------------------------------
-    bronze = _stage(
+    bronze = _gated_stage(
         spark, catalog, result, BRONZE, epoch, resume,
         lambda: _bronze_source(source_df, epoch, config), run_name,
-    )
-    result.validations["source"] = run_checkpoint(
-        spark, bronze,
-        Checkpoint(
-            "source",
-            S.source_suite(html_extracted=config.extract_from_html),
-        ),
-        catalog, epoch,
-        run_name, f"{BRONZE}@{epoch}",
+        Checkpoint("source", S.source_suite(html_extracted=config.extract_from_html)),
     )
     n_bronze = result.counts[BRONZE] = result.validations["source"].results[1].result[
         "observed_value"
     ]
 
     # -- silver ----------------------------------------------------------
-    silver = _stage(
+    silver = _gated_stage(
         spark, catalog, result, SILVER, epoch, resume,
         lambda: featurize(bronze, config), run_name,
-    )
-    result.validations["silver"] = run_checkpoint(
-        spark, silver, Checkpoint("silver", S.silver_suite()), catalog, epoch,
-        run_name, f"{SILVER}@{epoch}",
+        Checkpoint("silver", S.silver_suite()),
     )
 
     # -- kept (filter + dedup) --------------------------------------------
     lo = int(n_bronze * config.keep_fraction_band[0])
     hi = int(n_bronze * config.keep_fraction_band[1])
-    kept = _stage(
+    kept = _gated_stage(
         spark, catalog, result, KEPT, epoch, resume,
         lambda: trim_substrings(dedup(filter_kept(silver), config), config),
-        run_name,
-    )
-    result.validations["kept"] = run_checkpoint(
-        spark, kept, Checkpoint("kept", S.kept_suite(lo, hi)), catalog, epoch,
-        run_name, f"{KEPT}@{epoch}",
+        run_name, Checkpoint("kept", S.kept_suite(lo, hi)),
     )
     result.counts[KEPT] = result.validations["kept"].results[0].result["observed_value"]
 
     # -- gold --------------------------------------------------------------
-    gold = _stage(
+    _gated_stage(
         spark, catalog, result, GOLD, epoch, resume,
         lambda: gold_projection(kept), run_name,
-    )
-    result.validations["gold"] = run_checkpoint(
-        spark, gold, Checkpoint("gold", S.gold_suite(config.target_lang)), catalog,
-        epoch, run_name, f"{GOLD}@{epoch}",
+        Checkpoint("gold", S.gold_suite(config.target_lang)),
     )
     result.counts[GOLD] = result.validations["gold"].results[1].result.get(
         "element_count", result.counts[KEPT]

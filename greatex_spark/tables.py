@@ -17,21 +17,92 @@ Guarantees used by the pipeline runner:
   snapshot directory and re-commits the same manifest entry.
 - **resume**: ``has_epoch`` lets the runner skip stages whose output
   epoch is already committed.
+- **commit record**: each snapshot directory holds a ``_commit.json``
+  with the Spark schema, the data file names and the metrics the write
+  observed (``DataFrame.observe``), written before the manifest flip.
+  Reads use the recorded schema, so no schema-inference job runs, and a
+  gate takes the recorded metrics instead of scanning for them.  A
+  record whose file list differs from the directory, or a missing one,
+  is ignored: the read infers the schema and the gate scans.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
 import tempfile
 import time
 import uuid
+from collections.abc import Sequence
 from dataclasses import dataclass
+from decimal import Decimal
+from typing import Any
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import types as T
+
+COMMIT_RECORD = "_commit.json"
+
+
+def _replace_json(path: str, obj: Any) -> None:
+    """Write ``obj`` to ``path`` atomically: a dot-prefixed temp file in
+    the same directory (invisible to Spark readers), then ``os.replace``."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".json.tmp")
+    with os.fdopen(fd, "w") as f:
+        json.dump(obj, f, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def _as_nullable(t: T.DataType) -> T.DataType:
+    """``t`` with every field, element and value nullable: the schema a
+    parquet read of data written as ``t`` reports."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
+
+
+# metric values JSON cannot hold exactly travel as tagged strings
+_TAGGED = {
+    "decimal": (Decimal, str, Decimal),
+    "timestamp": (dt.datetime, dt.datetime.isoformat, dt.datetime.fromisoformat),
+    "date": (dt.date, dt.date.isoformat, dt.date.fromisoformat),
+}
+_PLAIN = (type(None), bool, int, float, str)
+
+
+def _encode_metrics(values: dict[str, Any]) -> dict[str, Any]:
+    """Encode for JSON; a value of any other type is left out, so a gate
+    computes that metric by a scan."""
+    out: dict[str, Any] = {}
+    for k, v in values.items():
+        if isinstance(v, _PLAIN):
+            out[k] = v  # floats round-trip exactly through their repr
+            continue
+        for tag, (cls, enc, _) in _TAGGED.items():
+            if isinstance(v, cls):
+                out[k] = {tag: enc(v)}
+                break
+    return out
+
+
+def _decode_metrics(values: dict[str, Any]) -> dict[str, Any]:
+    out: dict[str, Any] = {}
+    for k, v in values.items():
+        if isinstance(v, dict):
+            ((tag, text),) = v.items()
+            v = _TAGGED[tag][2](text)
+        out[k] = v
+    return out
 
 
 @dataclass
@@ -56,29 +127,59 @@ class Catalog:
 
     def _commit_manifest(self, name: str, manifest: dict) -> None:
         os.makedirs(self._table_dir(name), exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self._table_dir(name), suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True)
-        os.replace(tmp, self._manifest_path(name))  # atomic pointer flip
+        _replace_json(self._manifest_path(name), manifest)  # atomic pointer flip
+
+    @staticmethod
+    def _data_files(snap: str) -> list[str]:
+        """The files a Spark read of ``snap`` scans (it skips ``_`` and
+        ``.`` names)."""
+        return sorted(f for f in os.listdir(snap) if not f.startswith(("_", ".")))
+
+    def _commit_record(self, name: str, epoch: int) -> dict | None:
+        """The snapshot's commit record; ``None`` when it is missing (a
+        snapshot written before records existed) or its file list no
+        longer matches the directory."""
+        snap = self._snapshot_dir(name, epoch)
+        try:
+            with open(os.path.join(snap, COMMIT_RECORD)) as f:
+                record = json.load(f)
+        except FileNotFoundError:
+            return None
+        return record if record["files"] == self._data_files(snap) else None
 
     # ------------------------------------------------------------------
 
     def write_snapshot(
-        self, df: DataFrame, name: str, epoch: int, partition_by: list[str] | None = None
-    ) -> None:
-        """Replace snapshot ``epoch`` of ``name`` and commit it."""
+        self, df: DataFrame, name: str, epoch: int, observe: Sequence[Column] = ()
+    ) -> dict[str, Any]:
+        """Replace snapshot ``epoch`` of ``name`` and commit it.
+
+        ``observe`` holds aggregate columns, each aliased to the key it
+        is recorded under; the write computes them over the rows it
+        writes (``DataFrame.observe``), with no extra scan.  Returns
+        their values, which the commit record keeps."""
         snap = self._snapshot_dir(name, epoch)
         if os.path.exists(snap):
             shutil.rmtree(snap)  # re-run of a committed epoch: replace
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(snap)
+        observation = Observation() if observe else None
+        if observation is not None:
+            df = df.observe(observation, *observe)
+        df.write.mode("overwrite").parquet(snap)
+        values = observation.get if observation is not None else {}
+        _replace_json(
+            os.path.join(snap, COMMIT_RECORD),
+            {
+                "schema": _as_nullable(df.schema).jsonValue(),
+                "files": self._data_files(snap),
+                "metrics": _encode_metrics(values),
+            },
+        )
         m = self._read_manifest(name)
         if epoch not in m["committed_epochs"]:
             m["committed_epochs"] = sorted(m["committed_epochs"] + [epoch])
         m["latest"] = max(m["committed_epochs"])
         self._commit_manifest(name, m)
+        return values
 
     def append(self, table: pa.Table, name: str) -> None:
         """Append ``table`` to the append-only table ``name`` as one
@@ -107,7 +208,17 @@ class Catalog:
     def read_snapshot(self, spark: SparkSession, name: str, epoch: int) -> DataFrame:
         if not self.has_epoch(name, epoch):
             raise FileNotFoundError(f"table {name!r} has no committed epoch {epoch}")
-        return spark.read.parquet(self._snapshot_dir(name, epoch))
+        record = self._commit_record(name, epoch)
+        reader = spark.read
+        if record is not None:
+            reader = reader.schema(T.StructType.fromJson(record["schema"]))
+        return reader.parquet(self._snapshot_dir(name, epoch))
+
+    def snapshot_metrics(self, name: str, epoch: int) -> dict[str, Any]:
+        """The metric values the write of snapshot ``epoch`` observed;
+        ``{}`` when its commit record is missing or stale."""
+        record = self._commit_record(name, epoch)
+        return {} if record is None else _decode_metrics(record["metrics"])
 
     def read_latest(self, spark: SparkSession, name: str) -> DataFrame:
         """The ``index: -1`` latest-batch selection of the reference

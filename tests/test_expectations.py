@@ -250,6 +250,34 @@ def test_integer_sum_expectation_survives_int64_overflow(spark):
     assert vr.results[0].result["observed_value"] == 4 * big  # exact int
 
 
+def test_decimal_aggregates_keep_their_exact_value(spark):
+    """Only the decimal(38,0) integral sum converts to int: min, max,
+    mean and quantile of a decimal column keep the exact Decimal."""
+    df = spark.createDataFrame(
+        [(Decimal("10.70"),), (Decimal("3.20"),)], "d decimal(8,2)"
+    )
+    vr = run_suite(
+        df,
+        Suite.of(
+            "dec",
+            E("expect_column_max_to_be_between", column="d", max_value=10.5),
+            E("expect_column_mean_to_be_between", column="d", min_value=6.9),
+            E("expect_column_min_to_be_between", column="d", min_value=3.1),
+            E("expect_column_sum_to_be_between", column="d", max_value=13.9),
+            E("expect_column_quantile_to_be_between", column="d", quantile=1.0,
+              approx=True, max_value=10.5),
+        ),
+    )
+    observed = [r.result["observed_value"] for r in vr.results]
+    assert observed == [Decimal("10.70"), Decimal("6.950000"), Decimal("3.20"),
+                        Decimal("13.90"), Decimal("10.70")]
+    assert [r.success for r in vr.results] == [False, True, True, True, False]
+    from greatex_spark.expectations.params import validation_parameters
+
+    params = validation_parameters(vr)
+    assert params["dec.expect_column_mean_to_be_between.d.observed_value"] == 6.95
+
+
 def test_values_to_be_unique_exact_matches_ge_semantics(spark):
     """exact=True computes GE's unexpected_count: EVERY member of a
     duplicate group.  Planted frame: 'a'x3 + 'b'x2 + 'c','d' unique +

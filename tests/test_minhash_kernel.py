@@ -85,7 +85,7 @@ def test_kernel_matches_spark_on_edge_texts(spark):
     rows = _assert_kernel_matches(df)
     # NULL text reads as zero words, as in the Spark expression: one
     # shingle that is the bare seed 42, so its band keys are not NULL
-    # and all NULL-text rows share one bucket per band.  "" is one empty
+    # (minhash_lsh_dedup gives NULL-text rows no buckets).  "" is one empty
     # word, a different shingle.
     assert rows[1].bands is not None
     assert rows[1].sig != rows[2].sig == rows[3].sig

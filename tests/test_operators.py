@@ -264,6 +264,32 @@ def test_dedup_families_handle_short_documents(spark):
     assert duck == [1, 2, 3, 4]
 
 
+def test_minhash_dedup_keeps_every_null_text_row(spark):
+    """A NULL text lands in no LSH bucket, so NULL-text rows are not
+    near-duplicates of each other: all three survive in both hash
+    families and both survivor joins, and the md5 oracle agrees."""
+    import duckdb
+
+    from greatex_spark.operators.dedup import (
+        minhash_lsh_dedup,
+        minhash_lsh_dedup_duckdb_sql,
+    )
+
+    text = "the same six words in here"
+    rows = [(1, None), (2, text), (3, None), (4, text), (5, None), (6, "")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for fam in ("md5", "xxhash64"):
+        for join in ("semi", "anti"):
+            kept = minhash_lsh_dedup(df, family=fam, survivor_join=join)
+            assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 5, 6], (fam, join)
+            assert kept.columns == df.columns
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    duck = con.execute(minhash_lsh_dedup_duckdb_sql("t.doc_id")).fetchall()
+    assert sorted(r[0] for r in duck) == [1, 2, 3, 5, 6]
+
+
 def test_minhash_dedup_anti_join_parity(spark, sf_dir):
     """survivor_join='anti' (drop-set broadcast path) must select the
     exact same survivor rows as the spec semi join, including on frames

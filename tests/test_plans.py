@@ -109,7 +109,7 @@ def test_dedup_survivor_selection_streams(spark):
     """Survivor selection must be one aggregation chain: no window
     buffering whole buckets, no self-join of the banded side, and the
     expensive signature projection scanned exactly once (two scans
-    total in the semi-join plan: the original frame + the banded
+    total in the survivor-join plan: the original frame + the banded
     subtree)."""
     from greatex_spark.operators.dedup import minhash_lsh_dedup
 
@@ -118,7 +118,7 @@ def test_dedup_survivor_selection_streams(spark):
     assert "Window" not in plan
     # "formatted" prints each node once in the tree + once in details
     assert plan.count("Scan parquet") == 4  # 2 distinct scans × 2 prints
-    # exactly one join: the final left-semi against the survivor ids
+    # exactly one join: the final one against the survivor ids
     assert plan.count("Join") <= 4
 
 
@@ -136,7 +136,7 @@ def test_unique_expectation_fuses_into_single_agg(spark):
     )
     metrics, plan_map = compile_suite(docs, suite)
     assert plan_map[1]["kind"] == "unique_fused"
-    agg_plan = _plan(docs.agg(*metrics))
+    agg_plan = _plan(docs.agg(*(m.column for m in metrics)))
     # one scan feeding one (expand-based distinct) aggregate tree — no
     # join, no window, no second FileScan ("formatted" prints each node
     # once in the tree and once in the detail block → one scan == 2 hits)

@@ -290,7 +290,10 @@ def _metric(expr: Column, observable: bool = True) -> Metric:
     return Metric(key, expr.alias(key), observable)
 
 
-def compile_suite(df: DataFrame, suite: Suite) -> tuple[list[Metric], dict[int, dict[str, Any]]]:
+Compiled = tuple[list[Metric], dict[int, dict[str, Any]]]
+
+
+def compile_suite(df: DataFrame, suite: Suite) -> Compiled:
     """Build the fused metric list (deduplicated by key) plus a
     per-expectation plan map used by :func:`run_suite` to finalize
     results; a plan's ``metric`` is a metric key."""
@@ -420,6 +423,7 @@ def run_suite(
     partial_unexpected_limit: int = 20,
     collect_partial_unexpected: bool = True,
     known: Mapping[str, Any] | None = None,
+    compiled: Compiled | None = None,
 ) -> ValidationResult:
     """Validate ``df`` against ``suite`` — the EP2 query-executor recast
     (``/root/reference/dags/validation.py:12-53`` →  one library call).
@@ -427,10 +431,15 @@ def run_suite(
     ``known`` maps metric keys to values already computed over exactly
     the rows of ``df`` (the observed metrics of the write that produced
     it).  Only the metrics missing from it are aggregated, in one job;
-    when none is missing, no job runs."""
+    when none is missing, no job runs.
+
+    ``compiled`` is ``compile_suite(other, suite)`` for a frame ``other``
+    with the same column names and types as ``df``: a caller that gates
+    many frames of one schema (a stage's write and its committed
+    snapshot, the micro-batches of a stream) compiles once."""
     run_time = _dt.datetime.now(_dt.timezone.utc)
     run_name = run_name or f"run-{uuid.uuid4().hex[:12]}"
-    metrics, plan = compile_suite(df, suite)
+    metrics, plan = compiled or compile_suite(df, suite)
 
     known = known or {}
     agg_row = {m.key: known[m.key] for m in metrics if m.observable and m.key in known}

@@ -27,7 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from greatex_spark.expectations.compiler import GateFailed, ValidationResult, run_suite
+from greatex_spark.expectations.compiler import (
+    Compiled,
+    GateFailed,
+    ValidationResult,
+    run_suite,
+)
 from greatex_spark.expectations.spec import Suite
 from greatex_spark.tables import Catalog
 
@@ -110,10 +115,14 @@ def store_metrics(
     catalog: Catalog,
     validation: ValidationResult,
     epoch: int,
+    key: str | None = None,
 ) -> None:
+    """Append the validation's metrics rows; a ``key`` replaces the rows
+    an earlier call stored under the same key (see :meth:`Catalog.append`)."""
     rows = [r | {"checkpoint_epoch": epoch} for r in validation.to_metrics_rows()]
     catalog.append(
-        pa.Table.from_pylist(rows, schema=to_arrow_schema(METRICS_SCHEMA)), METRICS_TABLE
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(METRICS_SCHEMA)), METRICS_TABLE,
+        key=key,
     )
 
 
@@ -180,10 +189,12 @@ def run_checkpoint(
     batch_identifier: str = "",
     evaluation_parameters: dict | None = None,
     known: dict | None = None,
+    compiled: Compiled | None = None,
 ) -> ValidationResult:
     """Gate ``df``.  ``known`` holds metric values already computed over
     exactly these rows (a snapshot's commit record); the suite scans
-    only for the rest (see :func:`run_suite`)."""
+    only for the rest.  ``compiled`` is the resolved suite already
+    compiled against ``df``'s schema (see :func:`run_suite`)."""
     from greatex_spark.expectations.params import (
         store_parameters,
         validation_parameters,
@@ -197,6 +208,7 @@ def run_checkpoint(
         batch_identifier=batch_identifier or checkpoint.name,
         collect_partial_unexpected=checkpoint.collect_partial_unexpected,
         known=known,
+        compiled=compiled,
     )
     if catalog is not None:
         store_metrics(spark, catalog, validation, epoch)

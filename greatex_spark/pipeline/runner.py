@@ -97,20 +97,25 @@ def _gated_stage(
     The suite is resolved before the write, which observes the suite's
     observable metrics and records them with the snapshot.  A fresh run
     and a resume then gate alike: the recorded values plus one scan of
-    the committed snapshot for whatever the record lacks."""
+    the committed snapshot for whatever the record lacks.  A fresh run
+    compiles the suite once: the committed snapshot has the schema of
+    the frame it was written from."""
     checkpoint = replace(checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog))
+    compiled = None
     if resume and catalog.has_epoch(table, epoch):
         result.skipped.append(table)
         committed = catalog.read_snapshot(spark, table, epoch)
     else:
         df = compute()
-        metrics, _ = compile_suite(df, checkpoint.suite)
-        catalog.write_snapshot(df, table, epoch, [m.column for m in metrics if m.observable])
+        compiled = compile_suite(df, checkpoint.suite)
+        catalog.write_snapshot(
+            df, table, epoch, [m.column for m in compiled[0] if m.observable]
+        )
         committed = catalog.read_snapshot(spark, table, epoch)
         store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
     result.validations[checkpoint.name] = run_checkpoint(
         spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
-        known=catalog.snapshot_metrics(table, epoch),
+        known=catalog.snapshot_metrics(table, epoch), compiled=compiled,
     )
     return committed
 
@@ -171,6 +176,9 @@ def run_pipeline(
         lambda: featurize(bronze, config), run_name,
         Checkpoint("silver", S.silver_suite()),
     )
+    # every silver expectation is row-level: its element_count is the
+    # row count, recorded by the write, so counting runs no job
+    result.counts[SILVER] = result.validations["silver"].results[0].result["element_count"]
 
     # -- kept (filter + dedup) --------------------------------------------
     lo = int(n_bronze * config.keep_fraction_band[0])

@@ -19,7 +19,9 @@ of the page table, and each stage is a single Spark projection/filter
   Arrow batch kernel).
 - **gold_projection**: the public 5-column contract, scrubbed text
   swapped in (the reference's 8→6-column final projection,
-  ``transform_load_retail_warehouse.sql:25-32``, recast).
+  ``transform_load_retail_warehouse.sql:25-32``, recast).  Silver and
+  kept store ``text_scrubbed`` only where the scrub changed the text
+  (:func:`scrubbed_text`).
 """
 
 from __future__ import annotations
@@ -162,7 +164,9 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
         keep_quality.alias("keep_quality"),
         "lang_pred",
         "log_ppl",
-        "text_scrubbed",
+        # the text is stored once: the scrubbed copy only where scrubbing
+        # changed it, NULL elsewhere (readers take scrubbed_text())
+        F.nullif(F.col("text_scrubbed"), F.col("text")).alias("text_scrubbed"),
         "fingerprint",
         "n_tokens",
         (
@@ -172,6 +176,14 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
             & (F.col("log_ppl") <= F.lit(config.ppl_threshold))
         ).alias("keep"),
     )
+
+
+def scrubbed_text() -> Column:
+    """The scrubbed text of a silver or kept row.  ``text_scrubbed`` is
+    NULL where scrubbing left the text unchanged; snapshots written
+    before that layout hold the full scrubbed text, which this returns
+    as is."""
+    return F.coalesce(F.col("text_scrubbed"), F.col("text"))
 
 
 def filter_kept(df: DataFrame) -> DataFrame:
@@ -216,7 +228,9 @@ def dedup(df: DataFrame, config: PipelineConfig) -> DataFrame:
 def trim_substrings(df: DataFrame, config: PipelineConfig) -> DataFrame:
     """Opt-in ExactSubstr rewrite over the deduped kept set: the
     scrubbed text is rewritten with duplicated spans cut (canonical
-    copy kept) and ``n_tokens`` becomes the post-trim token count.
+    copy kept) and ``n_tokens`` becomes the post-trim token count.  The
+    rewritten text is stored like featurize stores the scrub: NULL
+    where it equals ``text``.
     Payload columns ride the trim's base projection, so the extra
     shuffles stay (id, pos, hash)-only exactly as in the standalone
     operator."""
@@ -230,7 +244,7 @@ def trim_substrings(df: DataFrame, config: PipelineConfig) -> DataFrame:
         c for c in df.columns if c not in ("url", "text_scrubbed", "n_tokens")
     ]
     out = trim_duplicate_substrings(
-        df,
+        df.withColumn("text_scrubbed", scrubbed_text()),
         text_col="text_scrubbed",
         id_col="url",
         k=config.substring_trim_k,
@@ -240,7 +254,7 @@ def trim_substrings(df: DataFrame, config: PipelineConfig) -> DataFrame:
     return out.select(
         *payload,
         F.col("url"),
-        F.col("clean_text").alias("text_scrubbed"),
+        F.nullif(F.col("clean_text"), F.col("text")).alias("text_scrubbed"),
         (F.col("n_tokens") - F.col("removed_tokens")).alias("n_tokens"),
     )
 
@@ -255,7 +269,7 @@ def gold_projection(df: DataFrame) -> DataFrame:
     return df.select(
         F.col("url"),
         F.col("warc_ts"),
-        F.col("text_scrubbed").alias("text"),
+        scrubbed_text().alias("text"),
         F.col("lang_pred").alias("lang"),
         F.col("n_tokens"),
     )

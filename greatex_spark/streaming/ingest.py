@@ -14,20 +14,28 @@ dynamic-overwrites its own ``__batch_id`` partition, so a replayed
 batch lands on top of itself — effective exactly-once output.
 
 Scale notes: the file source lists the landing dir incrementally
-(``maxFilesPerTrigger`` caps batch width); the gate is the same ONE
-fused agg per suite as the batch path, so per-batch overhead is a
-single extra pass over the micro-batch.
+(``maxFilesPerTrigger`` caps batch width).  The suite is compiled once
+per query (the page schema is fixed) and the gate is the same fused agg
+per suite as the batch path, one extra pass over the micro-batch; with
+adaptive execution the exact ``count(DISTINCT url)`` of the uniqueness
+check splits it into about three Spark jobs per micro-batch.  The
+gate metrics of a batch are stored under a name keyed by (checkpoint
+location, suite, batch id), so a replayed batch replaces its metrics
+rows as its output replaces its rows.
 """
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greatex_spark.expectations.compiler import run_suite
+from greatex_spark.expectations.compiler import compile_suite, run_suite
 from greatex_spark.expectations.spec import Suite
 from greatex_spark.sources.files import PAGE_SCHEMA
-from greatex_spark.tables import Catalog
+from greatex_spark.tables import SNAPSHOT_CODEC, Catalog
 
 
 def gated_ingest(
@@ -51,6 +59,13 @@ def gated_ingest(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(landing_dir)
+    # every micro-batch has the stream's schema
+    compiled = compile_suite(stream, suite)
+    # this query's metrics files: a second stream on the same catalog
+    # has another checkpoint location, so another prefix
+    stream_key = hashlib.sha1(
+        f"{os.path.abspath(checkpoint_dir)}\0{suite.name}".encode()
+    ).hexdigest()[:16]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         vr = run_suite(
@@ -58,13 +73,17 @@ def gated_ingest(
             suite,
             batch_identifier=f"stream-batch-{batch_id}",
             collect_partial_unexpected=False,
+            compiled=compiled,
         )
         if catalog is not None:
             # same typed store as the batch gates — one metrics table
-            # for the whole lake, streaming epochs keyed by batch_id
+            # for the whole lake, streaming epochs keyed by batch_id; a
+            # replay of the batch replaces its file
             from greatex_spark.pipeline.checkpoint import store_metrics
 
-            store_metrics(spark, catalog, vr, epoch=batch_id)
+            store_metrics(
+                spark, catalog, vr, epoch=batch_id, key=f"stream-{stream_key}-{batch_id}"
+            )
         target = bronze_dir if vr.success else quarantine_dir
         # idempotent write: foreachBatch is at-least-once — a crash
         # between the write and the checkpoint commit replays the batch.
@@ -74,6 +93,7 @@ def gated_ingest(
         (
             batch_df.withColumn("__batch_id", F.lit(batch_id))
             .write.mode("overwrite")
+            .option("compression", SNAPSHOT_CODEC)
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("__batch_id")
             .parquet(target)

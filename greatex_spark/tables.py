@@ -46,6 +46,10 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 COMMIT_RECORD = "_commit.json"
+# parquet codec of every snapshot (stage tables and compactions); the
+# driver-written bookkeeping appends keep pyarrow's default, because on
+# their ~10-row files zstd makes them larger, not smaller
+SNAPSHOT_CODEC = "zstd"
 
 
 def _replace_json(path: str, obj: Any) -> None:
@@ -164,7 +168,7 @@ class Catalog:
         observation = Observation() if observe else None
         if observation is not None:
             df = df.observe(observation, *observe)
-        df.write.mode("overwrite").parquet(snap)
+        df.write.mode("overwrite").option("compression", SNAPSHOT_CODEC).parquet(snap)
         values = observation.get if observation is not None else {}
         _replace_json(
             os.path.join(snap, COMMIT_RECORD),
@@ -181,15 +185,20 @@ class Catalog:
         self._commit_manifest(name, m)
         return values
 
-    def append(self, table: pa.Table, name: str) -> None:
+    def append(self, table: pa.Table, name: str, key: str | None = None) -> None:
         """Append ``table`` to the append-only table ``name`` as one
         parquet file in ``snapshot=0``, written on the driver.  The file
         is written under a dot-prefixed temp name, which Spark and
         pyarrow readers skip, then renamed into place: an append is
-        atomic, and concurrent appends never share a path."""
+        atomic, and concurrent appends never share a path.
+
+        ``key`` names the file instead of a fresh uuid: a second append
+        under the same key replaces the first one, so a writer that may
+        repeat itself (a replayed micro-batch) keys its rows by what it
+        is repeating."""
         snap = self._snapshot_dir(name, 0)
         os.makedirs(snap, exist_ok=True)
-        part = f"part-{uuid.uuid4().hex}.parquet"
+        part = f"part-{key or uuid.uuid4().hex}.parquet"
         tmp = os.path.join(snap, f".{part}.tmp")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(snap, part))

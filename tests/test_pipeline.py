@@ -47,6 +47,17 @@ def test_all_gates_pass(completed):
     assert result.counts[KEPT] > 0
 
 
+def test_counts_cover_every_stage(spark, completed):
+    """Each stage's row count is in the result and the run report; the
+    silver count comes from the silver gate, so it costs no job."""
+    catalog, result = completed
+    for table in (BRONZE, SILVER, KEPT, GOLD):
+        assert result.counts[table] == catalog.read_latest(spark, table).count(), table
+    with open(os.path.join(catalog.root, "reports", "run-1-r1.md")) as f:
+        report = f.read()
+    assert f"- `{SILVER}`: {result.counts[SILVER]:,}" in report
+
+
 def test_keep_drop_f1(spark, completed, labeled):
     catalog, _ = completed
     gold = catalog.read_latest(spark, GOLD)

@@ -6,11 +6,14 @@ from __future__ import annotations
 import os
 from collections import Counter
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from greatex_spark.expectations.spec import E, Suite
 from greatex_spark.pages import generate_pages
 from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
+from greatex_spark.pipeline.suites import source_suite
 from greatex_spark.streaming import gated_ingest
 from greatex_spark.tables import Catalog
 
@@ -107,3 +110,57 @@ def test_gated_ingest_metrics_share_batch_store(spark, tmp_path):
     assert all(
         r.batch_identifier == f"stream-batch-{r.checkpoint_epoch}" for r in rows
     )
+
+
+def _metrics_per_batch(catalog: Catalog) -> dict[int, int]:
+    rows = catalog.read_latest_arrow(METRICS_TABLE, to_arrow_schema(METRICS_SCHEMA))
+    return dict(sorted(Counter(rows.column("checkpoint_epoch").to_pylist()).items()))
+
+
+def test_replayed_batch_replaces_its_metrics(spark, tmp_path):
+    """A micro-batch replayed after a crash (its commit entry lost)
+    rewrites its output partition and replaces its gate metrics instead
+    of storing a second copy; a second stream on the same catalog keeps
+    its own.  Bronze and quarantine files are zstd."""
+    landing = str(tmp_path / "landing")
+    bronze, quarantine = str(tmp_path / "bronze"), str(tmp_path / "quarantine")
+    ckpt = str(tmp_path / "ckpt")
+    catalog = Catalog(str(tmp_path / "lake"))
+    suite = source_suite()
+    n_exp = len(suite.expectations)
+
+    pages = generate_pages(spark, 120, seed=5)
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    _land(pages.where(part == 0), landing)
+    _land(pages.where(part == 1), landing)
+    dirty = pages.where(part == 2)
+    _land(dirty.unionByName(dirty.limit(1)), landing)  # a repeated url
+
+    def drain(landing_dir, ckpt_dir):
+        gated_ingest(spark, landing_dir, bronze, quarantine, ckpt_dir, suite,
+                     max_files_per_trigger=1, catalog=catalog)
+
+    drain(landing, ckpt)
+    rows = (spark.read.parquet(bronze).count(), spark.read.parquet(quarantine).count())
+    assert sum(rows) == 121 and _metrics_per_batch(catalog) == {0: n_exp, 1: n_exp, 2: n_exp}
+
+    for name in ("2", ".2.crc"):  # the commit entry and its checksum file
+        os.remove(os.path.join(ckpt, "commits", name))
+    drain(landing, ckpt)
+    assert (spark.read.parquet(bronze).count(), spark.read.parquet(quarantine).count()) == rows
+    assert _metrics_per_batch(catalog) == {0: n_exp, 1: n_exp, 2: n_exp}
+
+    other = str(tmp_path / "landing2")
+    _land(generate_pages(spark, 20, seed=6), other)
+    drain(other, str(tmp_path / "ckpt2"))
+    assert _metrics_per_batch(catalog) == {0: 2 * n_exp, 1: n_exp, 2: n_exp}
+
+    for d in (bronze, quarantine):
+        for f in (os.path.join(r, n) for r, _, fs in os.walk(d) for n in fs):
+            if f.endswith(".parquet"):
+                meta = pq.read_metadata(f)
+                assert {
+                    meta.row_group(g).column(c).compression
+                    for g in range(meta.num_row_groups)
+                    for c in range(meta.num_columns)
+                } <= {"ZSTD"}, f

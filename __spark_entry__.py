@@ -17,7 +17,7 @@ Determinism contracts used throughout so Spark and DuckDB hash-match:
   dtype-sensitive hash then rejects);
 - the dedup hash family derives 60-bit hashes from md5 (identical
   in both engines) with literal universal-hash permutation constants —
-  see greatex_spark.operators.dedup;
+  see greatex_spark.operators.minhash;
 - sequential IEEE folds (list_reduce) replay Spark's F.aggregate
   accumulation order for the perplexity model;
 - regexes are restricted to the common java.util.regex / RE2 dialect
@@ -54,13 +54,11 @@ from greatex_spark.operators.dedup import (
     exact_dedup,
     exact_dedup_incremental,
     exact_dedup_incremental_duckdb_sql,
+    ngram_jaccard,
+)
+from greatex_spark.operators.minhash import (
     minhash_lsh_dedup,
     minhash_lsh_dedup_duckdb_sql,
-    ngram_jaccard,
-    ngram_jaccard_dedup,
-    ngram_jaccard_dedup_duckdb_sql,
-    simhash_dedup,
-    simhash_dedup_duckdb_sql,
 )
 from greatex_spark.pipeline.stages import (
     PipelineConfig,
@@ -742,11 +740,10 @@ def _doc_repetition_signals_sql() -> str:
 
 
 def doc_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ExactSubstr-style duplicated-substring stats (Lee et al. 2021),
-    seventh dedup family: k-token shingle hashes → corpus-global
-    count>1 rule → per-doc span-union coverage.  md5 spec family (the
-    DuckDB twin replays every hash); ``family='xxhash64'`` is the
-    production hot path."""
+    """ExactSubstr-style duplicated-substring stats (Lee et al. 2021):
+    k-token shingle hashes → corpus-global count>1 rule → per-doc
+    span-union coverage.  md5 spec family (the DuckDB twin replays
+    every hash); ``family='xxhash64'`` is the production hot path."""
     from greatex_spark.operators.substringdedup import substring_dup_stats
 
     docs = _t(spark, sf_dir, "documents")
@@ -996,22 +993,6 @@ def doc_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return simhash_dedup(docs, "text", "doc_id", family="md5").select(
-        "doc_id", "n_chars"
-    )
-
-
-def doc_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidates + exact n-gram-Jaccard verification at 0.8; text
-    never enters a shuffle (verification runs on n-gram hash sets)."""
-    docs = _t(spark, sf_dir, "documents")
-    return ngram_jaccard_dedup(
-        docs, "text", "doc_id", n=3, threshold=0.8, family="md5"
-    ).select("doc_id", "n_chars")
-
-
 def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive duplicate clustering: verified LSH+Jaccard pair edges
     closed into connected components (path-doubling min-label
@@ -1023,7 +1004,7 @@ def doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     return duplicate_clusters(
-        docs, "text", "doc_id", n=3, threshold=0.5, family="md5"
+        docs, "text", "doc_id", n=3, threshold=0.5
     )
 
 
@@ -1046,7 +1027,7 @@ def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     clusters = duplicate_clusters(
-        docs, "text", "doc_id", n=3, threshold=0.5, family="md5"
+        docs, "text", "doc_id", n=3, threshold=0.5
     )
     return (
         clusters.groupBy("cluster_size")
@@ -1331,7 +1312,7 @@ _URL_NOISE = (
 
 
 def _dirty_url_col():
-    from greatex_spark.operators.dedup import md5_long
+    from greatex_spark.operators.minhash import md5_long
 
     shout = F.regexp_replace(F.col("url"), r"^https://", "HTTPS://WWW.")
     variant = (md5_long(F.col("url")) % F.lit(len(_URL_NOISE))).cast("int")
@@ -1340,7 +1321,7 @@ def _dirty_url_col():
 
 
 def _dirty_url_sql(url: str = "url") -> str:
-    from greatex_spark.operators.dedup import md5_long_sql
+    from greatex_spark.operators.minhash import md5_long_sql
 
     shout = f"regexp_replace({url}, '^https://', 'HTTPS://WWW.')"
     cases = " ".join(
@@ -1687,7 +1668,7 @@ def _pipeline_sql_ctes(cfg: "PipelineConfig", upto: str = "gold") -> str:
     import os
 
     from greatex_spark.functions.heuristics import gopher_keep_duckdb_sql
-    from greatex_spark.operators.dedup import _minhash_ctes_sql
+    from greatex_spark.operators.minhash import _minhash_ctes_sql
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
     fixture = _bronze_fixture(sf_dir)
@@ -1938,7 +1919,7 @@ def _pipeline_drop_audit_sql() -> str:
     selection collapsed to its semantic spec — ONE row_number window
     per reason (equal by construction: top-n of per-salt top-ns under
     a total order is the global top-n)."""
-    from greatex_spark.operators.dedup import md5_long_sql
+    from greatex_spark.operators.minhash import md5_long_sql
     from greatex_spark.operators.sampling import DENOM
 
     cfg = PipelineConfig(dedup_hash_family="md5")
@@ -2249,8 +2230,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_dup_ngrams": doc_dup_ngrams,
         "doc_exact_dedup": doc_exact_dedup,
         "doc_minhash_dedup": doc_minhash_dedup,
-        "doc_simhash_dedup": doc_simhash_dedup,
-        "doc_jaccard_dedup": doc_jaccard_dedup,
         "doc_dup_clusters": doc_dup_clusters,
         "dedup_cluster_stats": dedup_cluster_stats,
         "doc_pair_jaccard": doc_pair_jaccard,
@@ -2371,8 +2350,6 @@ QUALIFY row_number() OVER (
   ORDER BY doc_id ASC) = 1
 """,
         "doc_minhash_dedup": minhash_lsh_dedup_duckdb_sql("t.doc_id, t.n_chars"),
-        "doc_simhash_dedup": simhash_dedup_duckdb_sql("t.doc_id, t.n_chars"),
-        "doc_jaccard_dedup": ngram_jaccard_dedup_duckdb_sql("t.doc_id, t.n_chars"),
         "doc_dup_clusters": _doc_dup_clusters_sql(),
         "dedup_cluster_stats": _dedup_cluster_stats_sql(),
         "doc_pair_jaccard": _doc_pair_jaccard_sql(),

@@ -9,7 +9,7 @@ model is a deterministic stand-in *trained at import time* on the fixed
 seed corpus in :mod:`greatex_spark.functions.langid`:
 
 - feature = ``md5_long(token) % N_BUCKETS`` (the oracle-replayable hash
-  family from :mod:`greatex_spark.operators.dedup`),
+  family from :mod:`greatex_spark.operators.minhash`),
 - weight(bucket) = ``round(ln(1 + seed_count[bucket]), 6)`` — tokens
   common in the fluent seed corpus pull the score up,
 - score = ``sigmoid(mean_token_weight + bias)``, rounded to 6 decimals.
@@ -87,7 +87,7 @@ def quality_score(
     let-bound); the weight fold is sequential left-to-right so the
     DuckDB oracle replays it bit-identically.  Empty documents score
     ``sigmoid(bias)``."""
-    from greatex_spark.operators.dedup import md5_long
+    from greatex_spark.operators.minhash import md5_long
 
     w = _WEIGHTS if weights is None else weights
     c = F.col(col) if isinstance(col, str) else col
@@ -128,7 +128,7 @@ def quality_score_duckdb_sql(
     """DuckDB twin of :func:`quality_score` — same tokenization, same
     map-literal lookups, same sequential fold (``list_reduce`` guarded
     for the empty-token case, which DuckDB's reduce rejects)."""
-    from greatex_spark.operators.dedup import md5_long_sql
+    from greatex_spark.operators.minhash import md5_long_sql
 
     w = _WEIGHTS if weights is None else weights
     keys = ", ".join(str(int(b)) for b in w)

@@ -15,5 +15,5 @@ def let(value: Column, body) -> Column:
     expensive subtree referenced N times is evaluated N times.  Wrapping
     it as ``element_at(transform(array(value), body), 1)`` forces single
     evaluation — measured ~10-50× on tokenize-heavy passes (see
-    ``operators/dedup.py`` minhash notes)."""
+    ``operators/minhash.py``)."""
     return F.element_at(F.transform(F.array(value), body), 1)

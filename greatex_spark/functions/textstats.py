@@ -5,8 +5,9 @@ All native Column expressions (JVM-side):
 - token counting: whitespace tokens and a BPE-ish subword estimate
   (regex token classes, the common ``~4 chars/token`` heuristic is NOT
   used — we count actual regex token matches).
-- document fingerprinting: 64-bit content fingerprint over normalized
-  text (xxhash64), plus a prefix fingerprint for clustering.
+- document fingerprinting: the normalized form exact-duplicate
+  detection hashes, and a rolling polynomial fingerprint over its
+  words (oracle-replayable).
 - language-ID: an n-gram/stopword-profile heuristic scored per
   language with argmax — fully SQL-expressible so the DuckDB oracle
   can replay it (the fastText-style vectorized scorer lives in
@@ -40,23 +41,16 @@ def normalize_for_fingerprint(col: Column | str) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def fingerprint64(col: Column | str) -> Column:
-    """64-bit content fingerprint of the normalized text.  Stands in for
-    a rolling hash: xxhash64 is seeded, stable across Spark versions,
-    and computed JVM-side."""
-    return F.xxhash64(normalize_for_fingerprint(col))
-
-
 def rolling_fingerprint64(col: Column | str) -> Column:
     """True rolling (polynomial) document fingerprint, oracle-replayable:
     each normalized word is hashed (md5 → 60-bit), then two independent
     31-bit polynomial states fold over the word stream in order and
-    concatenate to a 62-bit value.  Unlike :func:`fingerprint64` the
-    fold is order-sensitive word-by-word (a rolling hash proper) and
-    every step is exact BIGINT arithmetic in both Spark and DuckDB
+    concatenate to a 62-bit value.  The fold is order-sensitive
+    word-by-word (a rolling hash proper) and every step is exact
+    BIGINT arithmetic in both Spark and DuckDB
     (:func:`rolling_fingerprint64_duckdb_sql`)."""
     from greatex_spark.functions.exprs import let
-    from greatex_spark.operators.dedup import MOD31, _POLY_C1, _POLY_C2, md5_long
+    from greatex_spark.operators.minhash import MOD31, _POLY_C1, _POLY_C2, md5_long
 
     c = F.col(col) if isinstance(col, str) else col
     words = F.split(normalize_for_fingerprint(c), " ")
@@ -78,7 +72,7 @@ def rolling_fingerprint64_duckdb_sql(text_expr: str) -> str:
     """DuckDB twin of :func:`rolling_fingerprint64` — ``list_reduce``
     folds left-to-right with the first element as the seed, which equals
     Spark's zero-seeded fold because step(0, m₀) = m₀."""
-    from greatex_spark.operators.dedup import MOD31, _POLY_C1, _POLY_C2, md5_long_sql
+    from greatex_spark.operators.minhash import MOD31, _POLY_C1, _POLY_C2, md5_long_sql
 
     norm = f"trim(regexp_replace(lower({text_expr}), '\\s+', ' ', 'g'))"
     mods = (

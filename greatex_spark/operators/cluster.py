@@ -1,9 +1,9 @@
 """Duplicate clustering: transitive closure over near-duplicate pair
 edges (connected components), DataFrame-only.
 
-The dedup operators in :mod:`greatex_spark.operators.dedup` drop a row
-when it verifies against a lower-id bucket representative — a local
-rule.  Web-scale pipelines (CCNet / RefinedWeb style) often instead
+The pipeline's MinHash dedup (:mod:`greatex_spark.operators.minhash`)
+drops a row when a lower-id document shares one of its LSH buckets — a
+local rule.  Web-scale pipelines (CCNet / RefinedWeb style) often instead
 want one survivor per *transitive* duplicate cluster: if A~B and B~C
 then A,B,C form one cluster even when A and C never share a bucket.
 This module closes the verified pair edges into components.
@@ -78,7 +78,6 @@ def connected_components(
     dst: str = "dst",
     max_iters: int = 25,
     checkpoint_dir: str | None = None,
-    on_round=None,
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges`` — returns
     ``(node, component)`` where ``component`` is the minimum node id
@@ -92,13 +91,7 @@ def connected_components(
     ``checkpoint_dir`` switches per-round lineage truncation from
     executor-local ``localCheckpoint`` to reliable ``checkpoint()``
     into that directory (survives executor loss — see
-    :func:`_checkpointer`).
-
-    ``on_round`` (optional ``Callable[[int], None]``) fires after each
-    round's labels are materialized (checkpoint + convergence probe
-    both complete), with the 1-based round index — a measurement seam
-    for per-round wall/shuffle instrumentation; the final converged
-    round (the no-change probe round) fires too."""
+    :func:`_checkpointer`)."""
     ckpt = _checkpointer(checkpoint_dir)
     e = (
         edges.select(F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b"))
@@ -122,7 +115,7 @@ def connected_components(
     prev_sum = label_sum(labels)
     if prev_sum is None:  # no edges at all
         return labels.select("node", F.col("label").alias("component"))
-    for _round in range(1, max_iters + 1):
+    for _ in range(max_iters):
         # propagate min labels through graph edges AND current label
         # links (both directions) — the label links are the doubling
         links = e.unionByName(
@@ -140,8 +133,6 @@ def connected_components(
             .agg(F.min("label").alias("label"))
         )
         new_sum = label_sum(labels)
-        if on_round is not None:
-            on_round(_round)
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -156,7 +147,6 @@ def duplicate_clusters(
     threshold: float = 0.8,
     num_perm: int = 16,
     num_bands: int = 8,
-    family: str = "md5",
     candidate_cap: int | None = 64,
     max_iters: int = 25,
     checkpoint_dir: str | None = None,
@@ -171,7 +161,7 @@ def duplicate_clusters(
     ``checkpoint_dir`` → reliable iteration checkpoints (cluster mode);
     default is executor-local (see :func:`connected_components`)."""
     pairs = ngram_jaccard_pairs(
-        df, text_col, id_col, n, threshold, num_perm, num_bands, family, candidate_cap
+        df, text_col, id_col, n, threshold, num_perm, num_bands, candidate_cap
     )
     cc = connected_components(pairs, "__ida", "__idb", max_iters, checkpoint_dir)
     assigned = (

@@ -30,7 +30,7 @@ At 100 TB the heavy operand is the exploded line table; both exchanges
 carry each surviving line exactly once and the aggregation state per
 key is 16 bytes.  The md5-derived 60-bit line hash is the same
 oracle-replayable family as the dedup shingles
-(:func:`greatex_spark.operators.dedup.md5_long`); a corpus of 10^12
+(:func:`greatex_spark.operators.minhash.md5_long`); a corpus of 10^12
 lines has a ~3e-5 expected birthday collision count at 60 bits —
 acceptable for boilerplate removal (and the spec hashes the raw line
 bytes, so the DuckDB twin replays decisions exactly).
@@ -45,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from greatex_spark.operators.dedup import md5_long, md5_long_sql
+from greatex_spark.operators.minhash import md5_long, md5_long_sql
 
 MIN_LEN = 30  # CCNet-ish: only lines of substance participate
 

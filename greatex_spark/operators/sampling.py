@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from greatex_spark.operators.dedup import md5_long, md5_long_sql
+from greatex_spark.operators.minhash import md5_long, md5_long_sql
 
 DENOM = 1_000_000
 

@@ -6,7 +6,7 @@ Lee et al. build a suffix array over the whole corpus and mark every
 design.  The Spark-native recast is shingle fingerprinting: every
 k-token window becomes a 62-bit polynomial hash composed from per-word
 hashes (the same overflow-safe composition as the MinHash family,
-``operators/dedup.py``); a window whose hash occurs more than once in
+``operators/minhash.py``); a window whose hash occurs more than once in
 the corpus marks its k tokens as duplicated; per document, the union of
 marked windows gives the duplicated-token count and fraction — the
 gate signal (Lee et al. drop or trim documents dominated by repeated
@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from greatex_spark.functions.exprs import let
-from greatex_spark.operators.dedup import (
+from greatex_spark.operators.minhash import (
     _compose_hash,
     _compose_hash_sql,
     md5_long,

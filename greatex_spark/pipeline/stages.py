@@ -35,7 +35,7 @@ from greatex_spark.functions.heuristics import DEFAULT_THRESHOLDS
 from greatex_spark.functions.heuristics_arrow import page_signals_arrow
 from greatex_spark.functions.perplexity import make_log_perplexity_udf
 from greatex_spark.functions.pii import scrub_pii
-from greatex_spark.functions.textstats import fingerprint64
+from greatex_spark.operators.minhash import minhash_lsh_dedup
 
 
 @dataclass
@@ -49,7 +49,7 @@ class PipelineConfig:
     minhash_num_bands: int = 16
     # xxhash64 = GC-light numeric shingle hashing (hot path); "md5" is
     # the oracle-replayable spec family (same decisions up to hash
-    # collisions) — see operators/dedup.py
+    # collisions) — see operators/minhash.py
     dedup_hash_family: str = "xxhash64"
     # real-model seam: paths to a fastText .bin / KenLM .arpa swap the
     # deterministic stand-ins for real models (lazily loaded once per
@@ -67,14 +67,13 @@ class PipelineConfig:
     # or load_blocklist(path) for the full external list
     toxicity_blocklist: tuple[str, ...] | None = None
     # ExactSubstr rewrite (Lee et al. 2021) between dedup and gold:
-    # cut every duplicated >=substring_trim_k-token span except the
-    # corpus-canonical copy and rebuild the gold text from surviving
-    # tokens (whitespace-normalized; n_tokens becomes the post-trim
-    # count).  Document-level MinHash dedup drops whole near-dup
-    # pages; this removes the *intra-corpus boilerplate* that
-    # survives it — opt-in because it rewrites text
+    # cut every duplicated span of substringdedup.DEFAULT_K (13) or
+    # more tokens except the corpus-canonical copy and rebuild the gold
+    # text from surviving tokens (whitespace-normalized; n_tokens
+    # becomes the post-trim count).  Document-level MinHash dedup
+    # drops whole near-dup pages; this removes the *intra-corpus
+    # boilerplate* that survives it — opt-in because it rewrites text
     substring_trim: bool = False
-    substring_trim_k: int = 13
     # derive text from raw html at bronze ingest (functions/html.py
     # regexp extraction) for feeds that ship html only; rows that
     # already carry text keep it — opt-in, default preserves input text
@@ -129,7 +128,6 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
         page_signals_arrow(F.col("text")).alias("__qs"),
         ppl_udf(F.col("text")).alias("log_ppl"),
         scrubbed().alias("text_scrubbed"),
-        fingerprint64("text").alias("fingerprint"),
     ).withColumns(
         {
             "lang_pred": (
@@ -167,7 +165,6 @@ def featurize(df: DataFrame, config: PipelineConfig) -> DataFrame:
         # the text is stored once: the scrubbed copy only where scrubbing
         # changed it, NULL elsewhere (readers take scrubbed_text())
         F.nullif(F.col("text_scrubbed"), F.col("text")).alias("text_scrubbed"),
-        "fingerprint",
         "n_tokens",
         (
             keep_quality
@@ -210,8 +207,6 @@ def drop_reason(config: PipelineConfig) -> Column:
 
 
 def dedup(df: DataFrame, config: PipelineConfig) -> DataFrame:
-    from greatex_spark.operators.dedup import minhash_lsh_dedup
-
     return minhash_lsh_dedup(
         df,
         text_col="text",
@@ -219,9 +214,6 @@ def dedup(df: DataFrame, config: PipelineConfig) -> DataFrame:
         num_perm=config.minhash_num_perm,
         num_bands=config.minhash_num_bands,
         family=config.dedup_hash_family,
-        # broadcast the small dropped-id set so the text-carrying rows
-        # never shuffle (the few-% near-dup rate of filtered web text)
-        survivor_join="anti",
     )
 
 
@@ -237,6 +229,7 @@ def trim_substrings(df: DataFrame, config: PipelineConfig) -> DataFrame:
     if not config.substring_trim:
         return df
     from greatex_spark.operators.substringdedup import (
+        DEFAULT_K,
         trim_duplicate_substrings,
     )
 
@@ -247,7 +240,7 @@ def trim_substrings(df: DataFrame, config: PipelineConfig) -> DataFrame:
         df.withColumn("text_scrubbed", scrubbed_text()),
         text_col="text_scrubbed",
         id_col="url",
-        k=config.substring_trim_k,
+        k=DEFAULT_K,
         family=config.dedup_hash_family,
         payload_cols=payload,
     )

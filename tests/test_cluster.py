@@ -90,23 +90,18 @@ def test_cc_reliable_checkpoint_dir_used_and_result_unchanged(spark, tmp_path):
     assert files, "no reliable checkpoint files written under checkpoint_dir"
 
 
-def test_cc_on_round_seam_counts_doubling_rounds(spark):
-    """The on_round measurement seam fires once per materialized round
-    with 1-based indices, and the round count over a long path is
-    O(log2 diameter), the property that keeps 1M-edge graphs cheap.
-    A 128-edge path (diameter 128) must close in well under
-    128 rounds; path doubling predicts ~log2(128)=7 plus the final
-    no-change probe round."""
+def test_cc_long_path_closes_in_log_rounds(spark):
+    """The round count over a long path is O(log2 diameter), the
+    property that keeps 1M-edge graphs cheap.  A 128-edge path
+    (diameter 128) must close within 12 rounds; path doubling predicts
+    ~log2(128)=7, while plain min-label propagation needs ~128."""
     edges = [(i, i + 1) for i in range(128)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    fired: list[int] = []
     got = {
         r["node"]: r["component"]
-        for r in connected_components(df, on_round=fired.append).collect()
+        for r in connected_components(df, max_iters=12).collect()
     }
-    assert set(got.values()) == {0} and len(got) == 129
-    assert fired == list(range(1, len(fired) + 1))
-    assert 3 <= len(fired) <= 12, f"expected ~log2(128) rounds, got {len(fired)}"
+    assert len(got) == 129 and set(got.values()) == {0}
 
 
 def test_duplicate_clusters_checkpoint_dir_parity(spark, tmp_path):

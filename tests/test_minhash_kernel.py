@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from greatex_spark.functions.exprs import let
 from greatex_spark.functions.textstats import normalize_for_fingerprint
-from greatex_spark.operators.dedup import (
+from greatex_spark.operators.minhash import (
     band_hashes,
     minhash_signature,
     xxh64_int,

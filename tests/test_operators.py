@@ -1,20 +1,13 @@
-"""Tests for the dedup operators (exact, MinHash, SimHash, n-gram
-Jaccard), stratified sampling and salted repartitioning."""
+"""Tests for the dedup operators (exact, MinHash, n-gram Jaccard pairs),
+stratified sampling and salted repartitioning."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from greatex_spark.operators.dedup import (
-    exact_dedup,
-    minhash_lsh_dedup,
-    minhash_signature,
-    ngram_jaccard,
-    ngram_jaccard_dedup,
-    simhash64,
-    simhash_dedup,
-)
+from greatex_spark.operators.dedup import exact_dedup, ngram_jaccard
+from greatex_spark.operators.minhash import minhash_lsh_dedup, minhash_signature
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the sun sets slowly "
@@ -61,16 +54,6 @@ def test_minhash_lsh_dedup(docs):
     assert kept == [0, 2]
 
 
-def test_simhash_near_dup(docs):
-    rows = {r.doc_id: r.h for r in docs.select("doc_id", simhash64("text").alias("h")).collect()}
-    ham = bin(rows[0] ^ rows[1]).count("1")
-    assert ham <= 6  # near-dup → small hamming distance
-    assert rows[0] == rows[3]  # exact dup → identical simhash
-    assert bin(rows[0] ^ rows[2]).count("1") > 10
-    kept = sorted(r.doc_id for r in simhash_dedup(docs).collect())
-    assert 0 in kept and 2 in kept and 3 not in kept
-
-
 def test_ngram_jaccard_pairwise(spark):
     df = spark.createDataFrame([(BASE, NEAR_DUP), (BASE, DIFFERENT)], "a string, b string")
     sims = [r.s for r in df.select(ngram_jaccard("a", "b").alias("s")).collect()]
@@ -78,22 +61,16 @@ def test_ngram_jaccard_pairwise(spark):
     assert sims[1] == 0.0
 
 
-def test_ngram_jaccard_dedup(docs):
-    kept = sorted(r.doc_id for r in ngram_jaccard_dedup(docs, threshold=0.5).collect())
-    assert kept == [0, 2]
-
-
 def test_hot_bucket_candidates_bounded(spark):
-    """Boilerplate fixture: 400 copies of one text (all four simhash
-    bands collide → one hot bucket per band).  The representative step
-    must bound candidates at rows × cap instead of bucket² pairs, and
-    dedup must still collapse the clones to the lowest id."""
+    """Boilerplate fixture: 400 copies of one text (every LSH band
+    collides → one hot bucket per band).  The representative step must
+    bound candidate pairs at rows × cap instead of bucket² pairs, and
+    every clone must still pair with a lower id."""
     from pyspark.sql import functions as F
 
     from greatex_spark.operators.dedup import (
         bucket_representatives,
-        ngram_jaccard_dedup,
-        simhash_dedup,
+        ngram_jaccard_pairs,
     )
 
     n, cap = 400, 8
@@ -112,18 +89,13 @@ def test_hot_bucket_candidates_bounded(spark):
     assert all(r["count"] <= cap for r in per_bucket)
 
     # capped candidates: rows × cap pairs max, NOT n²/2 ≈ 80k
-    for dedup_fn in (simhash_dedup, ngram_jaccard_dedup):
-        kept = sorted(
-            r.doc_id
-            for r in dedup_fn(df, "text", "doc_id", candidate_cap=cap).collect()
-        )
-        assert kept == [0, n + 1], dedup_fn.__name__
+    capped = ngram_jaccard_pairs(df, "text", "doc_id", candidate_cap=cap).collect()
+    assert len(capped) <= (n + 1) * cap
+    assert {r["__ida"] for r in capped} == set(range(1, n))
 
-    # exact mode still available
-    kept_exact = sorted(
-        r.doc_id for r in simhash_dedup(df, "text", "doc_id", candidate_cap=None).collect()
-    )
-    assert kept_exact == [0, n + 1]
+    # exact mode still available: every lower clone is an edge
+    exact = ngram_jaccard_pairs(df, "text", "doc_id", candidate_cap=None)
+    assert exact.count() == n * (n - 1) // 2
 
 
 def test_salted_repartition_balances_hot_domains(spark):
@@ -239,11 +211,9 @@ def test_dedup_families_handle_short_documents(spark):
     element_at is an ANSI-mode ERROR and killed the whole stage)."""
     import duckdb
 
-    from greatex_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        minhash_lsh_dedup_duckdb_sql,
-        ngram_jaccard_dedup,
-    )
+    from greatex_spark.operators.cluster import duplicate_clusters
+    from greatex_spark.operators.dedup import ngram_jaccard_pairs
+    from greatex_spark.operators.minhash import minhash_lsh_dedup_duckdb_sql
 
     rows = [(1, ""), (2, "one"), (3, "two words"),
             (4, "a b c d e f g h"), (5, "a b c d e f g h")]
@@ -251,7 +221,10 @@ def test_dedup_families_handle_short_documents(spark):
     for fam in ("md5", "xxhash64"):
         kept = sorted(r.doc_id for r in minhash_lsh_dedup(df, family=fam).collect())
         assert kept == [1, 2, 3, 4], fam  # exact dup 5 dropped, shorts kept
-    assert ngram_jaccard_dedup(df, candidate_cap=None).count() == 4
+    pairs = ngram_jaccard_pairs(df, candidate_cap=None).collect()
+    assert [(r["__ida"], r["__idb"]) for r in pairs] == [(5, 4)]
+    survivors = duplicate_clusters(df, candidate_cap=None).where("is_survivor")
+    assert sorted(r.doc_id for r in survivors.collect()) == [1, 2, 3, 4]
     # the md5 oracle replays the identical short-doc decisions
     con = duckdb.connect()
     con.execute(
@@ -267,22 +240,18 @@ def test_dedup_families_handle_short_documents(spark):
 def test_minhash_dedup_keeps_every_null_text_row(spark):
     """A NULL text lands in no LSH bucket, so NULL-text rows are not
     near-duplicates of each other: all three survive in both hash
-    families and both survivor joins, and the md5 oracle agrees."""
+    families, and the md5 oracle agrees."""
     import duckdb
 
-    from greatex_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        minhash_lsh_dedup_duckdb_sql,
-    )
+    from greatex_spark.operators.minhash import minhash_lsh_dedup_duckdb_sql
 
     text = "the same six words in here"
     rows = [(1, None), (2, text), (3, None), (4, text), (5, None), (6, "")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for fam in ("md5", "xxhash64"):
-        for join in ("semi", "anti"):
-            kept = minhash_lsh_dedup(df, family=fam, survivor_join=join)
-            assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 5, 6], (fam, join)
-            assert kept.columns == df.columns
+        kept = minhash_lsh_dedup(df, family=fam)
+        assert sorted(r.doc_id for r in kept.collect()) == [1, 2, 3, 5, 6], fam
+        assert kept.columns == df.columns
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
@@ -291,24 +260,27 @@ def test_minhash_dedup_keeps_every_null_text_row(spark):
 
 
 def test_minhash_dedup_anti_join_parity(spark, sf_dir):
-    """survivor_join='anti' (drop-set broadcast path) must select the
-    exact same survivor rows as the spec semi join, including on frames
-    with null/short texts."""
-    from greatex_spark.operators.dedup import minhash_lsh_dedup
+    """The drop-set broadcast join (the only survivor join) selects the
+    same survivor rows as the DuckDB twin's survivor join on the same
+    frame, including null/short texts."""
+    import duckdb
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    extra = spark.createDataFrame(
-        [(900001, None), (900002, ""), (900003, "tiny")],
-        "doc_id long, text string",
+    from greatex_spark.operators.minhash import minhash_lsh_dedup_duckdb_sql
+
+    path = f"{sf_dir}/documents.parquet"
+    extra_rows = [(900001, None), (900002, ""), (900003, "tiny")]
+    extra = spark.createDataFrame(extra_rows, "doc_id long, text string")
+    frame = spark.read.parquet(path).select("doc_id", "text").unionByName(extra)
+    got = {r.doc_id for r in minhash_lsh_dedup(frame).select("doc_id").collect()}
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT doc_id::BIGINT AS doc_id, text"
+        f" FROM read_parquet('{path}')"
     )
-    frame = docs.select("doc_id", "text").unionByName(extra)
-    semi = {r.doc_id for r in minhash_lsh_dedup(frame).select("doc_id").collect()}
-    anti = {
-        r.doc_id
-        for r in minhash_lsh_dedup(frame, survivor_join="anti")
-        .select("doc_id").collect()
-    }
-    assert anti == semi
+    con.executemany("INSERT INTO documents VALUES (?, ?)", extra_rows)
+    duck = con.execute(minhash_lsh_dedup_duckdb_sql("t.doc_id")).fetchall()
+    assert got == {r[0] for r in duck}
+    assert {900001, 900002, 900003} <= got
 
 
 class TestMinhashAccuracyEval:

@@ -137,7 +137,7 @@ class TestDedupClusterStats:
             [(i, t) for i, t in texts.items()], "doc_id long, text string"
         )
         clusters = duplicate_clusters(
-            df, "text", "doc_id", n=3, threshold=0.5, family="md5"
+            df, "text", "doc_id", n=3, threshold=0.5
         )
         stats = (
             clusters.groupBy("cluster_size")

@@ -190,16 +190,17 @@ def run_checkpoint(
     evaluation_parameters: dict | None = None,
     known: dict | None = None,
     compiled: Compiled | None = None,
+    record: bool = True,
 ) -> ValidationResult:
     """Gate ``df``.  ``known`` holds metric values already computed over
     exactly these rows (a snapshot's commit record); the suite scans
     only for the rest.  ``compiled`` is the resolved suite already
-    compiled against ``df``'s schema (see :func:`run_suite`)."""
-    from greatex_spark.expectations.params import (
-        store_parameters,
-        validation_parameters,
-    )
+    compiled against ``df``'s schema (see :func:`run_suite`).
 
+    A gate is two steps: evaluate (resolve the suite and run it) and
+    :func:`record_checkpoint`.  ``record=False`` runs the evaluate step
+    only; it stores nothing and raises nothing, so a caller can evaluate
+    several gates at once and record them in its own order."""
     suite = resolve_checkpoint_suite(spark, checkpoint, catalog, evaluation_parameters)
     validation = run_suite(
         df,
@@ -210,6 +211,27 @@ def run_checkpoint(
         known=known,
         compiled=compiled,
     )
+    if not record:
+        return validation
+    return record_checkpoint(spark, validation, checkpoint, catalog, epoch, run_name)
+
+
+def record_checkpoint(
+    spark: SparkSession,
+    validation: ValidationResult,
+    checkpoint: Checkpoint,
+    catalog: Catalog | None = None,
+    epoch: int = 0,
+    run_name: str | None = None,
+) -> ValidationResult:
+    """The record step of a gate: store the validation's metrics and
+    parameters (with a catalog), call ``on_failure`` and raise
+    :class:`GateFailed` on a failed validation."""
+    from greatex_spark.expectations.params import (
+        store_parameters,
+        validation_parameters,
+    )
+
     if catalog is not None:
         store_metrics(spark, catalog, validation, epoch)
         # StoreEvaluationParametersAction recast (SURVEY §2 D4): publish

@@ -28,20 +28,35 @@ Only the exact-distinct metrics (url uniqueness) scan the committed
 files.  The parquet round trip is lossless for the stage tables' column
 types, so what was validated is exactly what the next stage reads.  A
 resume gates the same way, from the record of the committed snapshot.
+
+A resume starts the gate of every committed stage at once, on a small
+thread pool (one thread per committed stage), because each reads only
+its own snapshot and commit record.  The runner still walks the stages
+in order: a committed stage takes its gate's result, a missing one is
+computed after the previous gate.  Storing metrics and parameters,
+``on_failure`` and ``GateFailed`` stay in stage order; a gate that
+finishes after an earlier failure is discarded.
 """
 
 from __future__ import annotations
 
 import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greatex_spark.expectations.compiler import ValidationResult, compile_suite
+from greatex_spark.expectations.compiler import (
+    ELEMENT_COUNT,
+    ValidationResult,
+    compile_suite,
+)
 from greatex_spark.pipeline.checkpoint import (
     Checkpoint,
+    record_checkpoint,
     resolve_checkpoint_suite,
     run_checkpoint,
     store_partition_lineage,
@@ -58,6 +73,7 @@ from greatex_spark.pipeline import suites as S
 from greatex_spark.tables import Catalog
 
 BRONZE, SILVER, KEPT, GOLD = "pages_bronze", "pages_silver", "pages_kept", "pages_gold"
+STAGES = (BRONZE, SILVER, KEPT, GOLD)
 
 
 @dataclass
@@ -81,43 +97,69 @@ class PipelineResult:
         }
 
 
+def _regate(
+    spark: SparkSession,
+    catalog: Catalog,
+    table: str,
+    epoch: int,
+    run_name: str,
+    checkpoint: Checkpoint,
+) -> tuple[DataFrame, ValidationResult]:
+    """Evaluate the gate of the committed snapshot ``epoch`` of
+    ``table`` from its commit record; stores nothing.  Runs on the
+    resume's gate pool."""
+    committed = catalog.read_snapshot(spark, table, epoch)
+    return committed, run_checkpoint(
+        spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
+        known=catalog.snapshot_metrics(table, epoch), record=False,
+    )
+
+
 def _gated_stage(
     spark: SparkSession,
     catalog: Catalog,
     result: PipelineResult,
     table: str,
     epoch: int,
-    resume: bool,
     compute,
     run_name: str,
     checkpoint: Checkpoint,
+    regate: Future | None,
 ) -> DataFrame:
     """Write-or-skip one stage, gate it and return the committed snapshot.
 
-    The suite is resolved before the write, which observes the suite's
-    observable metrics and records them with the snapshot.  A fresh run
-    and a resume then gate alike: the recorded values plus one scan of
-    the committed snapshot for whatever the record lacks.  A fresh run
-    compiles the suite once: the committed snapshot has the schema of
-    the frame it was written from."""
-    checkpoint = replace(checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog))
-    compiled = None
-    if resume and catalog.has_epoch(table, epoch):
+    ``regate`` is the running gate of an already committed snapshot
+    (:func:`_regate`): the stage is skipped, and its gate's result is
+    recorded here, in stage order.  Otherwise the suite is resolved
+    before the write, which observes the suite's observable metrics and
+    records them with the snapshot; the gate then takes the recorded
+    values plus one scan of the committed snapshot for whatever the
+    record lacks.  A fresh run compiles the suite once: the committed
+    snapshot has the schema of the frame it was written from."""
+    if regate is not None:
         result.skipped.append(table)
-        committed = catalog.read_snapshot(spark, table, epoch)
-    else:
-        df = compute()
-        compiled = compile_suite(df, checkpoint.suite)
-        catalog.write_snapshot(
-            df, table, epoch, [m.column for m in compiled[0] if m.observable]
+        committed, validation = regate.result()
+        result.validations[checkpoint.name] = record_checkpoint(
+            spark, validation, checkpoint, catalog, epoch, run_name
         )
-        committed = catalog.read_snapshot(spark, table, epoch)
-        store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
+        return committed
+    checkpoint = replace(checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog))
+    df = compute()
+    compiled = compile_suite(df, checkpoint.suite)
+    catalog.write_snapshot(df, table, epoch, [m.column for m in compiled[0] if m.observable])
+    committed = catalog.read_snapshot(spark, table, epoch)
+    store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
     result.validations[checkpoint.name] = run_checkpoint(
         spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
         known=catalog.snapshot_metrics(table, epoch), compiled=compiled,
     )
     return committed
+
+
+def _kept_checkpoint(n_bronze: int, config: PipelineConfig) -> Checkpoint:
+    lo = int(n_bronze * config.keep_fraction_band[0])
+    hi = int(n_bronze * config.keep_fraction_band[1])
+    return Checkpoint("kept", S.kept_suite(lo, hi))
 
 
 def _bronze_source(
@@ -159,46 +201,82 @@ def run_pipeline(
     config = config or PipelineConfig()
     run_name = run_name or f"run-{uuid.uuid4().hex[:12]}"
     result = PipelineResult(run_name=run_name, epoch=epoch)
+    checkpoints = {
+        BRONZE: Checkpoint("source", S.source_suite(html_extracted=config.extract_from_html)),
+        SILVER: Checkpoint("silver", S.silver_suite()),
+        GOLD: Checkpoint("gold", S.gold_suite(config.target_lang)),
+    }
+    committed = [t for t in STAGES if resume and catalog.has_epoch(t, epoch)]
+    # the kept corridor comes from the bronze row count: recorded by
+    # bronze's write when bronze is committed, else the source gate's
+    n_recorded = (
+        catalog.snapshot_metrics(BRONZE, epoch).get(ELEMENT_COUNT)
+        if BRONZE in committed else None
+    )
+    if n_recorded is not None:
+        checkpoints[KEPT] = _kept_checkpoint(int(n_recorded), config)
 
-    # -- bronze ----------------------------------------------------------
-    bronze = _gated_stage(
-        spark, catalog, result, BRONZE, epoch, resume,
-        lambda: _bronze_source(source_df, epoch, config), run_name,
-        Checkpoint("source", S.source_suite(html_extracted=config.extract_from_html)),
-    )
-    n_bronze = result.counts[BRONZE] = result.validations["source"].results[1].result[
-        "observed_value"
-    ]
+    pool = ThreadPoolExecutor(len(committed), "gate") if committed else None
 
-    # -- silver ----------------------------------------------------------
-    silver = _gated_stage(
-        spark, catalog, result, SILVER, epoch, resume,
-        lambda: featurize(bronze, config), run_name,
-        Checkpoint("silver", S.silver_suite()),
-    )
-    # every silver expectation is row-level: its element_count is the
-    # row count, recorded by the write, so counting runs no job
-    result.counts[SILVER] = result.validations["silver"].results[0].result["element_count"]
+    def start_gate(table: str) -> Future | None:
+        if table not in committed:
+            return None
+        # the wrap hands this thread's Spark local properties (job group,
+        # description, scheduler pool) and tags on to the gate's thread
+        return pool.submit(
+            inheritable_thread_target(spark)(_regate),
+            spark, catalog, table, epoch, run_name, checkpoints[table],
+        )
 
-    # -- kept (filter + dedup) --------------------------------------------
-    lo = int(n_bronze * config.keep_fraction_band[0])
-    hi = int(n_bronze * config.keep_fraction_band[1])
-    kept = _gated_stage(
-        spark, catalog, result, KEPT, epoch, resume,
-        lambda: trim_substrings(dedup(filter_kept(silver), config), config),
-        run_name, Checkpoint("kept", S.kept_suite(lo, hi)),
-    )
-    result.counts[KEPT] = result.validations["kept"].results[0].result["observed_value"]
+    regates = {t: start_gate(t) for t in committed if t in checkpoints}
+    try:
+        # -- bronze ------------------------------------------------------
+        bronze = _gated_stage(
+            spark, catalog, result, BRONZE, epoch,
+            lambda: _bronze_source(source_df, epoch, config), run_name,
+            checkpoints[BRONZE], regates.get(BRONZE),
+        )
+        n_bronze = result.counts[BRONZE] = result.validations["source"].results[1].result[
+            "observed_value"
+        ]
+        if KEPT not in checkpoints:
+            checkpoints[KEPT] = _kept_checkpoint(n_bronze, config)
+            regates[KEPT] = start_gate(KEPT)
 
-    # -- gold --------------------------------------------------------------
-    _gated_stage(
-        spark, catalog, result, GOLD, epoch, resume,
-        lambda: gold_projection(kept), run_name,
-        Checkpoint("gold", S.gold_suite(config.target_lang)),
-    )
-    result.counts[GOLD] = result.validations["gold"].results[1].result.get(
-        "element_count", result.counts[KEPT]
-    )
+        # -- silver ------------------------------------------------------
+        silver = _gated_stage(
+            spark, catalog, result, SILVER, epoch,
+            lambda: featurize(bronze, config), run_name,
+            checkpoints[SILVER], regates.get(SILVER),
+        )
+        # every silver expectation is row-level: its element_count is the
+        # row count, recorded by the write, so counting runs no job
+        result.counts[SILVER] = result.validations["silver"].results[0].result[
+            "element_count"
+        ]
+
+        # -- kept (filter + dedup) ----------------------------------------
+        kept = _gated_stage(
+            spark, catalog, result, KEPT, epoch,
+            lambda: trim_substrings(dedup(filter_kept(silver), config), config),
+            run_name, checkpoints[KEPT], regates.get(KEPT),
+        )
+        result.counts[KEPT] = result.validations["kept"].results[0].result["observed_value"]
+
+        # -- gold ----------------------------------------------------------
+        _gated_stage(
+            spark, catalog, result, GOLD, epoch,
+            lambda: gold_projection(kept), run_name,
+            checkpoints[GOLD], regates.get(GOLD),
+        )
+        result.counts[GOLD] = result.validations["gold"].results[1].result.get(
+            "element_count", result.counts[KEPT]
+        )
+    finally:
+        if pool is not None:
+            # after a failed gate, wait out the later gates' scans; their
+            # results are never recorded
+            pool.shutdown(cancel_futures=True)
     # D5 recast: one markdown report per run next to the catalog, plus
     # the HTML data-docs page + index (the reference's static site)
     from greatex_spark.pipeline.report import write_data_docs, write_run_report
@@ -212,7 +290,7 @@ def run_pipeline(
     # GC torn-write orphan directories.  The append-only metrics/lineage
     # tables are never expired — they are the audit trail.
     if config.retain_epochs is not None:
-        for table in (BRONZE, SILVER, KEPT, GOLD):
+        for table in STAGES:
             result.maintenance[table] = {
                 "expired_epochs": catalog.expire_snapshots(
                     table, keep_last=config.retain_epochs

@@ -187,25 +187,29 @@ class Catalog:
 
     def append(self, table: pa.Table, name: str, key: str | None = None) -> None:
         """Append ``table`` to the append-only table ``name`` as one
-        parquet file in ``snapshot=0``, written on the driver.  The file
-        is written under a dot-prefixed temp name, which Spark and
+        parquet file in its latest snapshot (``snapshot=0`` until a
+        :meth:`compact` commits a new one), written on the driver.  The
+        file is written under a dot-prefixed temp name, which Spark and
         pyarrow readers skip, then renamed into place: an append is
         atomic, and concurrent appends never share a path.
 
         ``key`` names the file instead of a fresh uuid: a second append
         under the same key replaces the first one, so a writer that may
         repeat itself (a replayed micro-batch) keys its rows by what it
-        is repeating."""
-        snap = self._snapshot_dir(name, 0)
+        is repeating.  A compaction rewrites keyed files under Spark's
+        part names, so a later append under a key stored before it adds
+        its rows next to the compacted ones instead of replacing them."""
+        m = self._read_manifest(name)
+        epoch = 0 if m["latest"] is None else m["latest"]
+        snap = self._snapshot_dir(name, epoch)
         os.makedirs(snap, exist_ok=True)
         part = f"part-{key or uuid.uuid4().hex}.parquet"
         tmp = os.path.join(snap, f".{part}.tmp")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(snap, part))
-        m = self._read_manifest(name)
-        if 0 not in m["committed_epochs"]:
-            m["committed_epochs"].append(0)
-            m["latest"] = 0
+        if epoch not in m["committed_epochs"]:
+            m["committed_epochs"].append(epoch)
+            m["latest"] = epoch
             self._commit_manifest(name, m)
 
     def has_epoch(self, name: str, epoch: int) -> bool:

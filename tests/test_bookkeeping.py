@@ -149,3 +149,17 @@ def test_bookkeeping_runs_no_spark_job(spark, tmp_path):
     ).to_pylist()
     assert sum(r["row_count"] for r in lineage) == 100
     assert sorted(r["partition_id"] for r in lineage) == [0, 1, 2]
+
+
+def test_append_after_compaction_is_read_back(spark, tmp_path):
+    """A compaction commits the table's rows as a new latest epoch; an
+    append after it lands in that epoch, so the next read sees it."""
+    from greatex_spark.expectations.params import PARAMS_TABLE
+
+    catalog = Catalog(str(tmp_path))
+    store_parameters(spark, catalog, {"s.element_count": 1.0}, "s", "r1", 1)
+    assert catalog.compact(spark, PARAMS_TABLE) == 1
+    store_parameters(spark, catalog, {"s.element_count": 2.0}, "s", "r2", 2)
+    assert load_parameters(spark, catalog) == {"s.element_count": 2.0}
+    assert catalog.latest_epoch(PARAMS_TABLE) == 1
+    assert catalog.read_latest(spark, PARAMS_TABLE).count() == 2

@@ -127,6 +127,21 @@ def test_resume_reads_and_silver_gate_run_no_job(spark, lake, tmp_path, monkeypa
         assert jobs[f"gate:{suite}"] >= 1
 
 
+def test_resume_without_bronze_record_takes_the_corridor_from_the_source_gate(
+    spark, lake, tmp_path
+):
+    """The kept corridor of a resume comes from bronze's recorded row
+    count; with no bronze record the kept gate waits for the source
+    gate's scan, and every gate still equals the fresh run's."""
+    _, fresh = lake
+    catalog = _copy(lake, tmp_path)
+    os.remove(os.path.join(catalog.root, BRONZE, "snapshot=1", COMMIT_RECORD))
+    result = run_pipeline(spark, catalog, 1, resume=True, run_name="resume")
+    for gate in TABLES:
+        assert _outcome(result.validations[gate]) == _outcome(fresh.validations[gate])
+    assert result.counts == fresh.counts
+
+
 def test_recorded_schema_equals_inferred_schema(spark, lake):
     root, _ = lake
     catalog = Catalog(root)

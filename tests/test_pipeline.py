@@ -4,13 +4,23 @@ scrub, idempotent re-run, kill-and-resume, metrics/lineage artifacts."""
 from __future__ import annotations
 
 import os
+import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from greatex_spark.expectations.compiler import GateFailed
 from greatex_spark.functions.pii import scrub_pii_py
 from greatex_spark.pages import HTML_POST, HTML_PRE, generate_pages
+from greatex_spark.expectations.params import (
+    PARAMS_SCHEMA,
+    PARAMS_TABLE,
+    suite_has_markers,
+)
+from greatex_spark.pipeline import suites as S
+from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
 from greatex_spark.pipeline.runner import (
     BRONZE,
     GOLD,
@@ -159,11 +169,100 @@ def test_idempotent_rerun(spark, completed, pages):
     assert (n1, chk1) == (gold2.count(), chk2)
 
 
+def _outcome(vr) -> dict:
+    """A validation without its run name and times."""
+    d = vr.to_dict()
+    return {k: d[k] for k in ("results", "success", "statistics")}
+
+
 def test_resume_skips_committed_stages(spark, completed, pages):
-    catalog, _ = completed
+    """A resume gates the four committed stages at once; each gate's
+    result and every count equal the committing run's."""
+    catalog, first = completed
     result = run_pipeline(spark, catalog, epoch=1, run_name="r3", resume=True)
-    assert set(result.skipped) == {BRONZE, SILVER, KEPT, GOLD}
+    assert result.skipped == [BRONZE, SILVER, KEPT, GOLD]
     assert all(v.success for v in result.validations.values())
+    assert list(result.validations) == ["source", "silver", "kept", "gold"]
+    for gate, vr in first.validations.items():
+        assert _outcome(result.validations[gate]) == _outcome(vr), gate
+    assert result.counts == first.counts
+
+
+def _stored_suites(catalog, run_name: str) -> tuple[set[str], set[str]]:
+    metrics = catalog.read_latest_arrow(METRICS_TABLE, to_arrow_schema(METRICS_SCHEMA))
+    params = catalog.read_latest_arrow(PARAMS_TABLE, to_arrow_schema(PARAMS_SCHEMA))
+    return (
+        {r["expectation_suite_name"] for r in metrics.to_pylist() if r["run_name"] == run_name},
+        {r["suite_name"] for r in params.to_pylist() if r["run_name"] == run_name},
+    )
+
+
+def test_resume_gate_failure_stores_in_stage_order(spark, completed):
+    """The gold gate of a resume runs alongside the kept gate, but after
+    the kept gate fails it stores nothing: metrics and parameters exist
+    for the source, silver and kept gates only, as in a sequential run."""
+    catalog, _ = completed
+    bad = PipelineConfig(keep_fraction_band=(0.95, 1.0))
+    with pytest.raises(GateFailed, match="pages_kept_suite"):
+        run_pipeline(spark, catalog, epoch=1, config=bad, run_name="rF", resume=True)
+    want = {"pages_source_suite", "pages_silver_suite", "pages_kept_suite"}
+    assert _stored_suites(catalog, "rF") == (want, want)
+
+
+def test_resume_gate_jobs_keep_the_callers_job_group(spark, completed):
+    """The resume's gates run on pool threads, which take the caller's
+    Spark local properties: their jobs land in the caller's job group."""
+    catalog, _ = completed
+    sc = spark.sparkContext
+    group = f"resume-{os.getpid()}"
+    sc.setJobGroup(group, "resume under a caller's job group")
+    try:
+        run_pipeline(spark, catalog, epoch=1, run_name="rG", resume=True)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # the source, kept and gold gates each scan for url uniqueness; job
+    # events reach the status tracker asynchronously
+    deadline = time.monotonic() + 30
+    while (len(sc.statusTracker().getJobIdsForGroup(group)) < 3
+           and time.monotonic() < deadline):
+        time.sleep(0.1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+
+
+def test_resume_calls_each_gate_function_once_per_gate(spark, completed, monkeypatch):
+    """The benchmark's tracer wraps these module attributes; a resume
+    must still reach each of them once per gate, from whichever thread."""
+    from greatex_spark.expectations import params as params_mod
+    from greatex_spark.pipeline import checkpoint as checkpoint_mod
+    from greatex_spark.pipeline import runner as runner_mod
+
+    catalog, _ = completed
+    calls = []
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for owner, name in ((runner_mod, "run_checkpoint"), (checkpoint_mod, "run_suite"),
+                        (checkpoint_mod, "store_metrics"), (params_mod, "store_parameters")):
+        monkeypatch.setattr(owner, name, counted(name, getattr(owner, name)))
+    run_pipeline(spark, catalog, epoch=1, run_name="rT", resume=True)
+    assert Counter(calls) == {
+        "run_checkpoint": 4, "run_suite": 4, "store_metrics": 4, "store_parameters": 4
+    }
+
+
+def test_pipeline_suites_carry_no_parameter_markers():
+    """A resume resolves every gate's suite before the earlier gates store
+    their parameters, so a pipeline suite bound by ``$PARAMETER`` would
+    read the previous run's values: none may carry a marker."""
+    for suite in (S.source_suite(), S.source_suite(html_extracted=True), S.silver_suite(),
+                  S.kept_suite(1, 2), S.gold_suite("en")):
+        assert not suite_has_markers(suite), suite.name
 
 
 def test_gate_failure_halts_and_resume_completes(spark, tmp_path, pages):

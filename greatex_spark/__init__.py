@@ -12,9 +12,11 @@ Architecture is Spark-first: every expectation compiles to Column
 expressions fused into ONE ``df.agg(...)`` pass per suite; filters and
 scrubbers are pure ``DataFrame -> DataFrame`` functions built from
 ``pyspark.sql.functions``; the only Python-side execution is Arrow
-UDF batch kernels (featurize's page signals and perplexity, the
-xxhash64 MinHash) and the pandas-UDF langid scorer.  No RDDs, no
-per-row Python UDFs anywhere.
+UDF batch kernels: featurize's page signals (which also make the
+pipeline's language decision), perplexity, an optional external langid
+model and the xxhash64 MinHash.  The pandas-UDF langid scorer in
+``functions/langid.py`` is a library function the pipeline does not
+call.  No RDDs, no per-row Python UDFs anywhere.
 """
 
 __version__ = "0.1.0"

@@ -138,6 +138,9 @@ class ValidationResult:
     results: list[ExpectationResult]
     success: bool
     statistics: dict[str, Any]
+    # the validated frame's count(1), the suite's first metric; not part
+    # of the golden document or the metrics rows
+    element_count: int
 
     def to_dict(self) -> dict[str, Any]:
         return {
@@ -415,6 +418,19 @@ def compile_suite(df: DataFrame, suite: Suite) -> Compiled:
     return list(by_key.values()), plan
 
 
+def _unexpected_result(
+    unexpected: int, element_count: int, mostly: float
+) -> tuple[bool, dict[str, Any]]:
+    """Success and result block of a per-row expectation with
+    ``unexpected`` failing rows of ``element_count``."""
+    pct = 100.0 * unexpected / element_count if element_count else 0.0
+    return pct <= (1.0 - mostly) * 100.0, {
+        "element_count": element_count,
+        "unexpected_count": unexpected,
+        "unexpected_percent": pct,
+    }
+
+
 def run_suite(
     df: DataFrame,
     suite: Suite,
@@ -502,33 +518,11 @@ def run_suite(
                     .agg(F.sum("__n"))
                     .first()
                 )
-                unexpected = int(row[0] or 0)
-                pct = 100.0 * unexpected / element_count if element_count else 0.0
-                success = pct <= (1.0 - exp.mostly) * 100.0
-                res = {
-                    "element_count": element_count,
-                    "unexpected_count": unexpected,
-                    "unexpected_percent": pct,
-                }
-            elif p["kind"] == "unique_fused":
+                success, res = _unexpected_result(int(row[0] or 0), element_count, exp.mostly)
+            else:  # unique_fused, row_level
                 unexpected = int(agg_row[p["metric"]] or 0)
-                pct = 100.0 * unexpected / element_count if element_count else 0.0
-                success = pct <= (1.0 - exp.mostly) * 100.0
-                res = {
-                    "element_count": element_count,
-                    "unexpected_count": unexpected,
-                    "unexpected_percent": pct,
-                }
-            else:  # row_level
-                unexpected = int(agg_row[p["metric"]] or 0)
-                pct = 100.0 * unexpected / element_count if element_count else 0.0
-                success = pct <= (1.0 - exp.mostly) * 100.0
-                res = {
-                    "element_count": element_count,
-                    "unexpected_count": unexpected,
-                    "unexpected_percent": pct,
-                }
-                if unexpected and collect_partial_unexpected:
+                success, res = _unexpected_result(unexpected, element_count, exp.mostly)
+                if p["kind"] == "row_level" and unexpected and collect_partial_unexpected:
                     # deterministic sample: distinct unexpected values,
                     # lowest-first (GE's 20-row sample is arbitrary —
                     # SURVEY.md §7 "hard parts").  One groupBy job yields
@@ -580,4 +574,5 @@ def run_suite(
         results=results,
         success=ok == n,
         statistics=stats,
+        element_count=element_count,
     )

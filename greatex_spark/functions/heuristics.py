@@ -71,17 +71,6 @@ def ngrams_col(words: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def dup_ngram_fraction(words: Column, n: int) -> Column:
-    """Fraction of n-grams that are repeats of an earlier n-gram
-    (our deterministic variant of Gopher's duplicate-n-gram rule)."""
-    grams = ngrams_col(words, n)
-    total = F.size(grams)
-    return F.when(
-        total > 0,
-        (total - F.size(F.array_distinct(grams))).cast("double") / total,
-    ).otherwise(F.lit(0.0))
-
-
 FEATURE_NAMES = (
     "n_chars", "n_words", "n_lines", "mean_word_length", "symbol_to_word_ratio",
     "stopword_count", "alpha_word_fraction", "bullet_line_fraction",

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (name, pattern, replacement) — ordered.  Patterns are valid and
@@ -58,12 +58,6 @@ def scrub_pii(col: Column | str) -> Column:
     for _, pat, repl in PII_PATTERNS:
         out = F.regexp_replace(out, pat, repl)
     return out
-
-
-def with_scrubbed_text(
-    df: DataFrame, text_col: str = "text", out_col: str = "text_scrubbed"
-) -> DataFrame:
-    return df.withColumn(out_col, scrub_pii(text_col))
 
 
 _COMPILED = [(re.compile(pat), repl) for _, pat, repl in PII_PATTERNS]

@@ -29,13 +29,16 @@ files.  The parquet round trip is lossless for the stage tables' column
 types, so what was validated is exactly what the next stage reads.  A
 resume gates the same way, from the record of the committed snapshot.
 
-A resume starts the gate of every committed stage at once, on a small
-thread pool (one thread per committed stage), because each reads only
-its own snapshot and commit record.  The runner still walks the stages
-in order: a committed stage takes its gate's result, a missing one is
-computed after the previous gate.  Storing metrics and parameters,
-``on_failure`` and ``GateFailed`` stay in stage order; a gate that
-finishes after an earlier failure is discarded.
+Every stage goes through one evaluate step and one record step.  A
+missing stage is computed, written with its observed metrics and
+lineage, and evaluated inline with the suite it compiled for the
+write.  A resume starts the evaluation of every committed stage at
+once, on a small thread pool (one thread per committed stage), because
+each reads only its own snapshot and commit record.  The runner then
+records each stage's gate in order: storing metrics and parameters,
+``on_failure`` and ``GateFailed`` stay in stage order, a missing stage
+is computed only after the previous gate passed, and an evaluation
+that finishes after an earlier failure is discarded.
 """
 
 from __future__ import annotations
@@ -51,6 +54,7 @@ from pyspark.sql import functions as F
 
 from greatex_spark.expectations.compiler import (
     ELEMENT_COUNT,
+    Compiled,
     ValidationResult,
     compile_suite,
 )
@@ -97,63 +101,25 @@ class PipelineResult:
         }
 
 
-def _regate(
+def _evaluate(
     spark: SparkSession,
     catalog: Catalog,
     table: str,
     epoch: int,
     run_name: str,
     checkpoint: Checkpoint,
+    compiled: Compiled | None = None,
 ) -> tuple[DataFrame, ValidationResult]:
-    """Evaluate the gate of the committed snapshot ``epoch`` of
-    ``table`` from its commit record; stores nothing.  Runs on the
-    resume's gate pool."""
+    """The evaluate step of a stage's gate: read the committed snapshot
+    ``epoch`` of ``table`` and run the suite on the metrics its commit
+    record holds, scanning only for the rest; stores nothing.
+    ``compiled`` is the suite compiled for the write, when this run
+    wrote the snapshot."""
     committed = catalog.read_snapshot(spark, table, epoch)
     return committed, run_checkpoint(
         spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
-        known=catalog.snapshot_metrics(table, epoch), record=False,
+        known=catalog.snapshot_metrics(table, epoch), compiled=compiled, record=False,
     )
-
-
-def _gated_stage(
-    spark: SparkSession,
-    catalog: Catalog,
-    result: PipelineResult,
-    table: str,
-    epoch: int,
-    compute,
-    run_name: str,
-    checkpoint: Checkpoint,
-    regate: Future | None,
-) -> DataFrame:
-    """Write-or-skip one stage, gate it and return the committed snapshot.
-
-    ``regate`` is the running gate of an already committed snapshot
-    (:func:`_regate`): the stage is skipped, and its gate's result is
-    recorded here, in stage order.  Otherwise the suite is resolved
-    before the write, which observes the suite's observable metrics and
-    records them with the snapshot; the gate then takes the recorded
-    values plus one scan of the committed snapshot for whatever the
-    record lacks.  A fresh run compiles the suite once: the committed
-    snapshot has the schema of the frame it was written from."""
-    if regate is not None:
-        result.skipped.append(table)
-        committed, validation = regate.result()
-        result.validations[checkpoint.name] = record_checkpoint(
-            spark, validation, checkpoint, catalog, epoch, run_name
-        )
-        return committed
-    checkpoint = replace(checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog))
-    df = compute()
-    compiled = compile_suite(df, checkpoint.suite)
-    catalog.write_snapshot(df, table, epoch, [m.column for m in compiled[0] if m.observable])
-    committed = catalog.read_snapshot(spark, table, epoch)
-    store_partition_lineage(spark, catalog, committed, table, epoch, run_name)
-    result.validations[checkpoint.name] = run_checkpoint(
-        spark, committed, checkpoint, catalog, epoch, run_name, f"{table}@{epoch}",
-        known=catalog.snapshot_metrics(table, epoch), compiled=compiled,
-    )
-    return committed
 
 
 def _kept_checkpoint(n_bronze: int, config: PipelineConfig) -> Checkpoint:
@@ -200,78 +166,63 @@ def run_pipeline(
     """
     config = config or PipelineConfig()
     run_name = run_name or f"run-{uuid.uuid4().hex[:12]}"
-    result = PipelineResult(run_name=run_name, epoch=epoch)
+    committed = [t for t in STAGES if resume and catalog.has_epoch(t, epoch)]
+    result = PipelineResult(run_name=run_name, epoch=epoch, skipped=list(committed))
     checkpoints = {
         BRONZE: Checkpoint("source", S.source_suite(html_extracted=config.extract_from_html)),
         SILVER: Checkpoint("silver", S.silver_suite()),
         GOLD: Checkpoint("gold", S.gold_suite(config.target_lang)),
     }
-    committed = [t for t in STAGES if resume and catalog.has_epoch(t, epoch)]
-    # the kept corridor comes from the bronze row count: recorded by
-    # bronze's write when bronze is committed, else the source gate's
+    frames: dict[str, DataFrame] = {}
+    computes = {
+        BRONZE: lambda: _bronze_source(source_df, epoch, config),
+        SILVER: lambda: featurize(frames[BRONZE], config),
+        KEPT: lambda: trim_substrings(dedup(filter_kept(frames[SILVER]), config), config),
+        GOLD: lambda: gold_projection(frames[KEPT]),
+    }
     n_recorded = (
         catalog.snapshot_metrics(BRONZE, epoch).get(ELEMENT_COUNT)
         if BRONZE in committed else None
     )
-    if n_recorded is not None:
-        checkpoints[KEPT] = _kept_checkpoint(int(n_recorded), config)
-
     pool = ThreadPoolExecutor(len(committed), "gate") if committed else None
-
-    def start_gate(table: str) -> Future | None:
-        if table not in committed:
-            return None
-        # the wrap hands this thread's Spark local properties (job group,
-        # description, scheduler pool) and tags on to the gate's thread
-        return pool.submit(
-            inheritable_thread_target(spark)(_regate),
-            spark, catalog, table, epoch, run_name, checkpoints[table],
-        )
-
-    regates = {t: start_gate(t) for t in committed if t in checkpoints}
+    gates: dict[str, Future] = {}
     try:
-        # -- bronze ------------------------------------------------------
-        bronze = _gated_stage(
-            spark, catalog, result, BRONZE, epoch,
-            lambda: _bronze_source(source_df, epoch, config), run_name,
-            checkpoints[BRONZE], regates.get(BRONZE),
-        )
-        n_bronze = result.counts[BRONZE] = result.validations["source"].results[1].result[
-            "observed_value"
-        ]
-        if KEPT not in checkpoints:
-            checkpoints[KEPT] = _kept_checkpoint(n_bronze, config)
-            regates[KEPT] = start_gate(KEPT)
-
-        # -- silver ------------------------------------------------------
-        silver = _gated_stage(
-            spark, catalog, result, SILVER, epoch,
-            lambda: featurize(bronze, config), run_name,
-            checkpoints[SILVER], regates.get(SILVER),
-        )
-        # every silver expectation is row-level: its element_count is the
-        # row count, recorded by the write, so counting runs no job
-        result.counts[SILVER] = result.validations["silver"].results[0].result[
-            "element_count"
-        ]
-
-        # -- kept (filter + dedup) ----------------------------------------
-        kept = _gated_stage(
-            spark, catalog, result, KEPT, epoch,
-            lambda: trim_substrings(dedup(filter_kept(silver), config), config),
-            run_name, checkpoints[KEPT], regates.get(KEPT),
-        )
-        result.counts[KEPT] = result.validations["kept"].results[0].result["observed_value"]
-
-        # -- gold ----------------------------------------------------------
-        _gated_stage(
-            spark, catalog, result, GOLD, epoch,
-            lambda: gold_projection(kept), run_name,
-            checkpoints[GOLD], regates.get(GOLD),
-        )
-        result.counts[GOLD] = result.validations["gold"].results[1].result.get(
-            "element_count", result.counts[KEPT]
-        )
+        for table in STAGES:
+            # the kept corridor comes from bronze's count(1): recorded by
+            # bronze's write when bronze is committed, else bronze's gate
+            n_bronze = result.counts.get(BRONZE, n_recorded)
+            if KEPT not in checkpoints and n_bronze is not None:
+                checkpoints[KEPT] = _kept_checkpoint(int(n_bronze), config)
+            for t in committed:
+                if t in checkpoints and t not in gates:
+                    # the wrap hands this thread's Spark local properties
+                    # (job group, description, scheduler pool) and tags on
+                    # to the gate's thread
+                    gates[t] = pool.submit(
+                        inheritable_thread_target(spark)(_evaluate),
+                        spark, catalog, t, epoch, run_name, checkpoints[t],
+                    )
+            checkpoint = checkpoints[table]
+            if table in gates:
+                frames[table], validation = gates[table].result()
+            else:
+                checkpoint = replace(
+                    checkpoint, suite=resolve_checkpoint_suite(spark, checkpoint, catalog)
+                )
+                df = computes[table]()
+                # compiled once: the snapshot has the schema of the frame
+                compiled = compile_suite(df, checkpoint.suite)
+                catalog.write_snapshot(
+                    df, table, epoch, [m.column for m in compiled[0] if m.observable]
+                )
+                frames[table], validation = _evaluate(
+                    spark, catalog, table, epoch, run_name, checkpoint, compiled
+                )
+                store_partition_lineage(spark, catalog, frames[table], table, epoch, run_name)
+            result.validations[checkpoint.name] = record_checkpoint(
+                spark, validation, checkpoint, catalog, epoch, run_name
+            )
+            result.counts[table] = validation.element_count
     finally:
         if pool is not None:
             # after a failed gate, wait out the later gates' scans; their

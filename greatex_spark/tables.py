@@ -198,15 +198,23 @@ class Catalog:
         repeat itself (a replayed micro-batch) keys its rows by what it
         is repeating.  A compaction rewrites keyed files under Spark's
         part names, so a later append under a key stored before it adds
-        its rows next to the compacted ones instead of replacing them."""
+        its rows next to the compacted ones instead of replacing them.
+
+        A compacted epoch has a commit record; the append keeps its file
+        list true to the directory, so reads still skip schema inference,
+        and drops its metrics, which no longer cover the rows."""
         m = self._read_manifest(name)
         epoch = 0 if m["latest"] is None else m["latest"]
         snap = self._snapshot_dir(name, epoch)
         os.makedirs(snap, exist_ok=True)
+        record = self._commit_record(name, epoch)
         part = f"part-{key or uuid.uuid4().hex}.parquet"
         tmp = os.path.join(snap, f".{part}.tmp")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(snap, part))
+        if record is not None:
+            record.update(files=self._data_files(snap), metrics={})
+            _replace_json(os.path.join(snap, COMMIT_RECORD), record)
         if epoch not in m["committed_epochs"]:
             m["committed_epochs"].append(epoch)
             m["latest"] = epoch

@@ -162,4 +162,7 @@ def test_append_after_compaction_is_read_back(spark, tmp_path):
     store_parameters(spark, catalog, {"s.element_count": 2.0}, "s", "r2", 2)
     assert load_parameters(spark, catalog) == {"s.element_count": 2.0}
     assert catalog.latest_epoch(PARAMS_TABLE) == 1
+    # the append keeps the compacted epoch's commit record true to its
+    # files, so reads still take the recorded schema instead of a job
+    assert catalog._commit_record(PARAMS_TABLE, 1) is not None
     assert catalog.read_latest(spark, PARAMS_TABLE).count() == 2

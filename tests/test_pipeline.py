@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from greatex_spark.expectations.compiler import GateFailed
+from greatex_spark.expectations.compiler import ELEMENT_COUNT, GateFailed
 from greatex_spark.functions.pii import scrub_pii_py
 from greatex_spark.pages import HTML_POST, HTML_PRE, generate_pages
 from greatex_spark.expectations.params import (
@@ -63,6 +63,8 @@ def test_counts_cover_every_stage(spark, completed):
     catalog, result = completed
     for table in (BRONZE, SILVER, KEPT, GOLD):
         assert result.counts[table] == catalog.read_latest(spark, table).count(), table
+        # each count is its gate's count(1), which the write recorded
+        assert result.counts[table] == catalog.snapshot_metrics(table, 1)[ELEMENT_COUNT], table
     with open(os.path.join(catalog.root, "reports", "run-1-r1.md")) as f:
         report = f.read()
     assert f"- `{SILVER}`: {result.counts[SILVER]:,}" in report
@@ -230,30 +232,49 @@ def test_resume_gate_jobs_keep_the_callers_job_group(spark, completed):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
 
 
-def test_resume_calls_each_gate_function_once_per_gate(spark, completed, monkeypatch):
-    """The benchmark's tracer wraps these module attributes; a resume
-    must still reach each of them once per gate, from whichever thread."""
+@pytest.mark.parametrize("resume", [False, True], ids=["fresh", "resume"])
+def test_resume_calls_each_gate_function_once_per_gate(
+    spark, completed, pages, tmp_path, monkeypatch, resume
+):
+    """The benchmark's tracer wraps these module attributes and labels
+    its spans by positional arguments (``perfbench/spans.py``).  A fresh
+    run and a resume must each reach every one of them once per gate or
+    stage, from whichever thread, with the gate or the stage table at
+    the position the tracer reads."""
     from greatex_spark.expectations import params as params_mod
     from greatex_spark.pipeline import checkpoint as checkpoint_mod
     from greatex_spark.pipeline import runner as runner_mod
 
-    catalog, _ = completed
     calls = []
 
-    def counted(name, fn):
+    def counted(name, fn, label):
         def wrapper(*args, **kwargs):
-            calls.append(name)
+            calls.append((name, label(args)))
             return fn(*args, **kwargs)
 
         return wrapper
 
-    for owner, name in ((runner_mod, "run_checkpoint"), (checkpoint_mod, "run_suite"),
-                        (checkpoint_mod, "store_metrics"), (params_mod, "store_parameters")):
-        monkeypatch.setattr(owner, name, counted(name, getattr(owner, name)))
-    run_pipeline(spark, catalog, epoch=1, run_name="rT", resume=True)
-    assert Counter(calls) == {
-        "run_checkpoint": 4, "run_suite": 4, "store_metrics": 4, "store_parameters": 4
-    }
+    for owner, name, label in (
+        (runner_mod, "run_checkpoint", lambda a: a[2].name),
+        (runner_mod, "store_partition_lineage", lambda a: a[3]),
+        (checkpoint_mod, "run_suite", lambda a: None),
+        (checkpoint_mod, "store_metrics", lambda a: None),
+        (params_mod, "store_parameters", lambda a: None),
+        (Catalog, "write_snapshot", lambda a: a[2]),
+        (Catalog, "read_snapshot", lambda a: a[2]),
+    ):
+        monkeypatch.setattr(owner, name, counted(name, getattr(owner, name), label))
+    if resume:
+        run_pipeline(spark, completed[0], epoch=1, run_name="rT", resume=True)
+    else:
+        run_pipeline(spark, Catalog(str(tmp_path)), epoch=1, source_df=pages, run_name="rT")
+    want = Counter({("run_suite", None): 4, ("store_metrics", None): 4,
+                    ("store_parameters", None): 4})
+    for gate, table in zip(("source", "silver", "kept", "gold"), (BRONZE, SILVER, KEPT, GOLD)):
+        want.update([("run_checkpoint", gate), ("read_snapshot", table)])
+        if not resume:
+            want.update([("write_snapshot", table), ("store_partition_lineage", table)])
+    assert Counter(calls) == want
 
 
 def test_pipeline_suites_carry_no_parameter_markers():

@@ -1,20 +1,29 @@
-"""Compile a declarative Suite into ONE fused Spark aggregation.
+"""Compile a declarative Suite into ONE Spark job.
 
 The reference evaluates each expectation of a gate as its own query or
 pandas op (~23 scans per checkpoint — SURVEY.md §4 "single-pass
 multi-metric: absent").  Here every metric of a suite becomes a Column
 expression and the whole suite runs as a single ``df.agg(...)`` job:
 one scan, partition-local partial aggregation, tiny driver-side merge —
-the classic partial/final agg Catalyst already implements.  Schema
-expectations evaluate driver-side with zero jobs.  The only extra work
-is one small, deterministic follow-up job per *failed* row-level
-expectation to collect its ``partial_unexpected_list`` (lowest-first,
-``LIMIT 20``), mirroring the result-document contract of
+the classic partial/final agg Catalyst already implements (or, with
+exact distinct counts on a small frame, one Arrow collect; see the
+scale notes).  Schema expectations evaluate driver-side with zero jobs.
+The only extra work is one small, deterministic follow-up job per
+*failed* row-level expectation to collect its ``partial_unexpected_list``
+(lowest-first, ``LIMIT 20``), mirroring the result-document contract of
 ``/root/reference/great_expectations/validations.json:29-65``.
 
 Scale notes (100 TB): the fused agg is a full scan + map-side combine;
-no shuffle except the final single-row merge.  ``countDistinct``-based
-expectations add one shuffle — flag ``approx=True`` in kwargs to use
+no shuffle except the final single-row merge.  Exact distinct counts
+(url uniqueness) cannot be observed or fused without a shuffle, so when
+the frame is small enough for one process they are counted on the
+driver: one Arrow collect of their columns (with the suite's other
+missing metrics observed on the same job) hashed by ``pyarrow.compute``.
+"Small enough" is Spark's own broadcast line: the optimizer's size
+estimate of that collect is at most ``spark.sql.autoBroadcastJoinThreshold``.
+A larger frame, one with no size estimate, or a column whose Arrow
+equality is not Spark's (doubles, collated strings) keeps the fused
+``count(DISTINCT)`` (one shuffle) — flag ``approx=True`` in kwargs to use
 ``approx_count_distinct`` (HLL, shuffle-free partials) on huge tables.
 Partial-unexpected collection only scans on failure and is bounded by
 ``distinct().orderBy().limit(20)``.
@@ -33,8 +42,11 @@ from collections.abc import Mapping
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from greatex_spark.expectations.spec import Expectation, Suite
 
@@ -277,20 +289,54 @@ ELEMENT_COUNT = "count(1)"  # the key of F.count(F.lit(1)), every suite's first 
 class Metric:
     """One aggregate of the fused agg.  ``key`` is the expression text
     without an alias, so it does not depend on where the metric sits in
-    the suite, and a changed bound is a different key.  ``observable``
-    is False for DISTINCT aggregates, which Spark rejects in
-    ``DataFrame.observe``; they are never taken from a ``known`` map.
-    Their text drops the DISTINCT flag (``count(DISTINCT x)`` prints
-    as ``count(x)``), so their key is prefixed ``distinct:``."""
+    the suite, and a changed bound is a different key.
+
+    ``distinct`` is ``(column, form)`` for an exact DISTINCT count, which
+    Spark rejects in ``DataFrame.observe``; such a metric is never taken
+    from a ``known`` map.  Its form is one of :data:`DISTINCT_FORMS`.
+    Its text drops the DISTINCT flag (``count(DISTINCT x)`` prints as
+    ``count(x)``), so its key is prefixed ``distinct:``.  GE's
+    every-member count has no fused form: its ``column`` is None."""
 
     key: str
-    column: Column  # aliased to ``key``
-    observable: bool = True
+    column: Column | None  # aliased to ``key``
+    distinct: tuple[str, str] | None = None
+
+    @property
+    def observable(self) -> bool:
+        return self.distinct is None
 
 
-def _metric(expr: Column, observable: bool = True) -> Metric:
-    key = expr._jc.toString() if observable else f"distinct:{expr._jc.toString()}"
-    return Metric(key, expr.alias(key), observable)
+def _count_distinct(values: pa.ChunkedArray) -> int:
+    return pc.count_distinct(values, mode="only_valid").as_py()
+
+
+def _every_member(values: pa.ChunkedArray) -> int:
+    counts = pc.value_counts(values.drop_null()).field("counts")
+    return pc.sum(pc.filter(counts, pc.greater(counts, 1))).as_py() or 0
+
+
+# what a DISTINCT metric counts over the non-null values of its column,
+# computed on the driver from the collected Arrow column
+DISTINCT_FORMS = {
+    # expect_column_unique_value_count_to_be_between
+    "count_distinct": _count_distinct,
+    # expect_column_values_to_be_unique: excess duplicates
+    "excess": lambda v: len(v) - v.null_count - _count_distinct(v),
+    # expect_column_values_to_be_unique(exact=True): every member of a
+    # duplicate group, GE's count
+    "every_member": _every_member,
+}
+
+
+def _metric(expr: Column | None, distinct: tuple[str, str] | None = None) -> Metric:
+    if distinct is None:
+        key = expr._jc.toString()
+    elif expr is None:
+        key = f"distinct:{distinct[1]}({distinct[0]})"
+    else:
+        key = f"distinct:{expr._jc.toString()}"
+    return Metric(key, None if expr is None else expr.alias(key), distinct)
 
 
 Compiled = tuple[list[Metric], dict[int, dict[str, Any]]]
@@ -302,8 +348,8 @@ def compile_suite(df: DataFrame, suite: Suite) -> Compiled:
     results; a plan's ``metric`` is a metric key."""
     by_key: dict[str, Metric] = {}
 
-    def add(expr: Column, observable: bool = True) -> str:
-        m = _metric(expr, observable)
+    def add(expr: Column | None, distinct: tuple[str, str] | None = None) -> str:
+        m = _metric(expr, distinct)
         by_key.setdefault(m.key, m)
         return m.key
 
@@ -367,26 +413,31 @@ def compile_suite(df: DataFrame, suite: Suite) -> Compiled:
             if k.get("approx"):
                 key = add(F.approx_count_distinct(F.col(k["column"])))
             else:
-                key = add(F.count_distinct(F.col(k["column"])), observable=False)
+                key = add(
+                    F.count_distinct(F.col(k["column"])), (k["column"], "count_distinct")
+                )
             plan[i] = {"kind": "aggregate", "metric": key}
         elif t == "expect_column_values_to_be_unique" and k.get("exact"):
             # opt-in GE-EXACT semantics: unexpected = every member of a
             # duplicate group (GE counts all rows whose value occurs
-            # more than once), computed by a dedicated groupBy job in
-            # run_suite — one extra shuffle, which is exactly why the
-            # fused excess-duplicates variant below stays the default.
-            # Gate outcomes are identical at mostly=1.0; exact=True
-            # closes the sub-1.0 divergence documented in README
-            # "Divergences from Great Expectations".
-            plan[i] = {"kind": "unique_exact", "column": k["column"]}
+            # more than once).  Counted on the driver with the other
+            # distinct metrics; where run_suite cannot, a dedicated
+            # groupBy job — one extra shuffle, which is why the fused
+            # excess-duplicates variant below stays the default.  Gate
+            # outcomes are identical at mostly=1.0; exact=True closes
+            # the sub-1.0 divergence documented in README "Divergences
+            # from Great Expectations".
+            plan[i] = {
+                "kind": "unique_exact", "metric": add(None, (k["column"], "every_member"))
+            }
         elif t == "expect_column_values_to_be_unique":
-            # fused into the single-pass agg: unexpected = excess
-            # duplicates = count(col) − count_distinct(col).  (GE counts
-            # every member of a duplicate group; the excess count is 0
-            # exactly when GE's is 0, so gate outcomes at mostly=1.0 are
-            # identical.  At mostly<1.0 the unexpected% is LOWER than
-            # GE's — roughly halved when duplicates come in pairs — so a
-            # sub-1.0 mostly gate can pass here where GE would fail.
+            # unexpected = excess duplicates = count(col) −
+            # count_distinct(col).  (GE counts every member of a
+            # duplicate group; the excess count is 0 exactly when GE's
+            # is 0, so gate outcomes at mostly=1.0 are identical.  At
+            # mostly<1.0 the unexpected% is LOWER than GE's — roughly
+            # halved when duplicates come in pairs — so a sub-1.0
+            # mostly gate can pass here where GE would fail.
             # Documented engine semantics (README "Divergences from
             # Great Expectations"), chosen so the suite needs NO
             # auxiliary groupBy shuffle.  approx=True → HLL partials for
@@ -398,7 +449,7 @@ def compile_suite(df: DataFrame, suite: Suite) -> Compiled:
             col = F.col(k["column"])
             key = add(
                 F.greatest(F.count(col) - agg_fn(col), F.lit(0)).cast("long"),
-                observable=approx,
+                None if approx else (k["column"], "excess"),
             )
             plan[i] = {"kind": "unique_fused", "metric": key}
         elif exp.is_row_level:
@@ -431,6 +482,73 @@ def _unexpected_result(
     }
 
 
+def _arrow_equality_is_sparks(dtype: T.DataType) -> bool:
+    """Whether two values of ``dtype`` are equal in Arrow's hash kernels
+    exactly when Spark's DISTINCT takes them as equal: byte-equal
+    strings (no collation) and binaries, and fixed-width values that
+    Spark does not normalize.  Doubles are not (Spark takes ``-0.0`` for
+    ``0.0`` and every NaN as one), nor are collated strings."""
+    if isinstance(dtype, T.StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return isinstance(dtype, (
+        T.BinaryType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+        T.BooleanType, T.DateType, T.TimestampType, T.TimestampNTZType,
+    ))
+
+
+def _fits_the_driver(sel: DataFrame) -> bool:
+    """Whether the optimizer's size estimate of ``sel`` is within
+    ``spark.sql.autoBroadcastJoinThreshold``, the line Spark draws for
+    collecting a relation into one process.  A plan with no estimate
+    (an RDD source) is estimated at ``spark.sql.defaultSizeInBytes``."""
+    conf = sel.sparkSession._jsparkSession.sessionState().conf()
+    threshold = conf.autoBroadcastJoinThreshold()
+    if threshold <= 0:
+        return False
+    return sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() <= threshold
+
+
+def _aggregate(df: DataFrame, missing: list[Metric]) -> dict[str, Any]:
+    """The values of the ``missing`` metrics over ``df``.
+
+    With DISTINCT metrics among them, one job collects their columns as
+    Arrow and observes the other metrics on the way; the driver counts
+    the distincts.  Where that cannot stand in for Spark's answer (see
+    the two checks above), the metrics run as one fused ``df.agg`` and
+    each every-member count as its own ``groupBy`` job."""
+    distinct = [m for m in missing if not m.observable]
+    observable = [m.column for m in missing if m.observable]
+    if distinct and all(
+        _arrow_equality_is_sparks(df.schema[m.distinct[0]].dataType) for m in distinct
+    ):
+        observation = Observation()
+        sel = (df.observe(observation, *observable) if observable else df).select(
+            *dict.fromkeys(m.distinct[0] for m in distinct)
+        )
+        if _fits_the_driver(sel):
+            table = sel.toArrow()
+            values = observation.get if observable else {}
+            for m in distinct:
+                column, form = m.distinct
+                values[m.key] = DISTINCT_FORMS[form](table.column(column))
+            return values
+    fused = [m.column for m in missing if m.column is not None]
+    values = df.agg(*fused).collect()[0].asDict() if fused else {}
+    for m in missing:
+        if m.column is None:  # the every-member count
+            col = F.col(m.distinct[0])
+            row = (
+                df.where(col.isNotNull())
+                .groupBy(col)
+                .agg(F.count(F.lit(1)).alias("__n"))
+                .where(F.col("__n") > 1)
+                .agg(F.sum("__n"))
+                .first()
+            )
+            values[m.key] = int(row[0] or 0)
+    return values
+
+
 def run_suite(
     df: DataFrame,
     suite: Suite,
@@ -446,8 +564,14 @@ def run_suite(
 
     ``known`` maps metric keys to values already computed over exactly
     the rows of ``df`` (the observed metrics of the write that produced
-    it).  Only the metrics missing from it are aggregated, in one job;
-    when none is missing, no job runs.
+    it).  Only the metrics missing from it are computed, in one job;
+    when none is missing, no job runs.  The exact distinct counts are
+    never known: with one among the missing metrics, that job is a
+    collect of the distinct columns as Arrow, counted on the driver,
+    and the other missing metrics are observed on it.  A frame whose
+    size estimate is above ``spark.sql.autoBroadcastJoinThreshold`` (or
+    that has none), or a distinct column whose Arrow equality is not
+    Spark's, is aggregated by Spark instead (see :func:`_aggregate`).
 
     ``compiled`` is ``compile_suite(other, suite)`` for a frame ``other``
     with the same column names and types as ``df``: a caller that gates
@@ -459,9 +583,9 @@ def run_suite(
 
     known = known or {}
     agg_row = {m.key: known[m.key] for m in metrics if m.observable and m.key in known}
-    missing = [m.column for m in metrics if m.key not in agg_row]
+    missing = [m for m in metrics if m.key not in agg_row]
     if missing:
-        agg_row.update(df.agg(*missing).collect()[0].asDict())
+        agg_row.update(_aggregate(df, missing))
     element_count = int(agg_row[ELEMENT_COUNT])
     dtypes = dict(df.dtypes)
 
@@ -505,21 +629,7 @@ def run_suite(
                     observed, k.get("min_value"), k.get("max_value")
                 )
                 res = {"observed_value": observed}
-            elif p["kind"] == "unique_exact":
-                # GE-exact: count every row belonging to a duplicate
-                # group (nulls excluded, like the fused variant) — its
-                # own aggregation job, map-side partials + one shuffle
-                col = F.col(p["column"])
-                row = (
-                    df.where(col.isNotNull())
-                    .groupBy(col)
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .where(F.col("__n") > 1)
-                    .agg(F.sum("__n"))
-                    .first()
-                )
-                success, res = _unexpected_result(int(row[0] or 0), element_count, exp.mostly)
-            else:  # unique_fused, row_level
+            else:  # unique_fused, unique_exact, row_level
                 unexpected = int(agg_row[p["metric"]] or 0)
                 success, res = _unexpected_result(unexpected, element_count, exp.mostly)
                 if p["kind"] == "row_level" and unexpected and collect_partial_unexpected:

@@ -24,10 +24,13 @@ DROP-and-recreate idempotency, without losing history).
 Gates validate the rows handed to the writer: each stage write
 observes its suite's metrics (``DataFrame.observe``) and commits them
 with the snapshot, and the gate reads them from that commit record.
-Only the exact-distinct metrics (url uniqueness) scan the committed
-files.  The parquet round trip is lossless for the stage tables' column
-types, so what was validated is exactly what the next stage reads.  A
-resume gates the same way, from the record of the committed snapshot.
+Only the exact-distinct metrics (url uniqueness) read the committed
+files: one job collects the url column as Arrow and the driver counts
+it, or, for a snapshot above ``spark.sql.autoBroadcastJoinThreshold``,
+Spark aggregates it.  The parquet round trip is lossless for the stage
+tables' column types, so what was validated is exactly what the next
+stage reads.  A resume gates the same way, from the record of the
+committed snapshot.
 
 Every stage goes through one evaluate step and one record step.  A
 missing stage is computed, written with its observed metrics and

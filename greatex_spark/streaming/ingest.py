@@ -15,13 +15,16 @@ batch lands on top of itself — effective exactly-once output.
 
 Scale notes: the file source lists the landing dir incrementally
 (``maxFilesPerTrigger`` caps batch width).  The suite is compiled once
-per query (the page schema is fixed) and the gate is the same fused agg
-per suite as the batch path, one extra pass over the micro-batch; with
-adaptive execution the exact ``count(DISTINCT url)`` of the uniqueness
-check splits it into about three Spark jobs per micro-batch.  The
-gate metrics of a batch are stored under a name keyed by (checkpoint
-location, suite, batch id), so a replayed batch replaces its metrics
-rows as its output replaces its rows.
+per query (the page schema is fixed) and the gate is one Spark job per
+micro-batch: the url column collected as Arrow for the exact uniqueness
+check, counted on the driver, with the suite's other metrics observed
+on the same pass (see ``expectations.compiler.run_suite``).  A
+micro-batch whose size estimate is above
+``spark.sql.autoBroadcastJoinThreshold`` is aggregated by Spark instead
+(about three jobs with adaptive execution).  The gate metrics of a
+batch are stored under a name keyed by (checkpoint location, suite,
+batch id), so a replayed batch replaces its metrics rows as its output
+replaces its rows.
 """
 
 from __future__ import annotations

@@ -5,10 +5,10 @@ take them from there instead of re-scanning."""
 from __future__ import annotations
 
 import datetime as dt
-import itertools
 import json
 import os
 import shutil
+import uuid
 from decimal import Decimal
 
 import pytest
@@ -45,16 +45,17 @@ def _suites(n_bronze: int) -> dict[str, Suite]:
 
 
 class JobCounter:
-    """Runs calls under their own Spark job group and counts their jobs."""
+    """Runs calls under their own Spark job group and counts their jobs.
+    Group names are unique across counters: a name shared with an earlier
+    counter's call would count that call's jobs too."""
 
     def __init__(self, spark):
         self.sc = spark.sparkContext
         self.calls: list[tuple[str, str]] = []
-        self._ids = itertools.count()
 
     def wrap(self, fn, label):
         def wrapper(*args, **kwargs):
-            group = f"gate-on-write-{os.getpid()}-{next(self._ids)}"
+            group = f"gate-on-write-{uuid.uuid4().hex}"
             self.calls.append((label(args, kwargs), group))
             previous = self.sc.getLocalProperty("spark.jobGroup.id")
             self.sc.setJobGroup(group, group)
@@ -125,6 +126,34 @@ def test_resume_reads_and_silver_gate_run_no_job(spark, lake, tmp_path, monkeypa
     # the exact url-uniqueness metric is not observable: one small agg
     for suite in ("pages_source_suite", "pages_kept_suite", "pages_gold_suite"):
         assert jobs[f"gate:{suite}"] >= 1
+
+
+URL_GATES = ("pages_source_suite", "pages_kept_suite", "pages_gold_suite")
+
+
+def test_resume_url_gates_run_one_job_each(spark, lake, tmp_path, monkeypatch):
+    """Each url-uniqueness gate of a resume is one Arrow collect of the
+    url column, counted on the driver."""
+    _, jobs = _resume_counted(spark, monkeypatch, _copy(lake, tmp_path))
+    assert {suite: jobs[f"gate:{suite}"] for suite in URL_GATES} == dict.fromkeys(URL_GATES, 1)
+
+
+def test_url_gates_above_the_bound_take_the_spark_scan(spark, lake, tmp_path, monkeypatch):
+    """With ``autoBroadcastJoinThreshold`` at -1 nothing is small enough
+    to collect: the url gates run Spark's count(DISTINCT) (more than one
+    job under adaptive execution) and their outcomes are the fresh run's."""
+    _, fresh = lake
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    previous = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        result, jobs = _resume_counted(spark, monkeypatch, _copy(lake, tmp_path))
+    finally:
+        spark.conf.set(threshold, previous)
+    for gate in TABLES:
+        assert _outcome(result.validations[gate]) == _outcome(fresh.validations[gate])
+    for suite in URL_GATES:
+        assert jobs[f"gate:{suite}"] > 1, suite
 
 
 def test_resume_without_bronze_record_takes_the_corridor_from_the_source_gate(

@@ -4,6 +4,7 @@ resume, and a metrics store shared with the batch gates."""
 from __future__ import annotations
 
 import os
+import uuid
 from collections import Counter
 
 import pyarrow.parquet as pq
@@ -14,7 +15,7 @@ from greatex_spark.expectations.spec import E, Suite
 from greatex_spark.pages import generate_pages
 from greatex_spark.pipeline.checkpoint import METRICS_SCHEMA, METRICS_TABLE
 from greatex_spark.pipeline.suites import source_suite
-from greatex_spark.streaming import gated_ingest
+from greatex_spark.streaming import gated_ingest, ingest
 from greatex_spark.tables import Catalog
 
 
@@ -164,3 +165,35 @@ def test_replayed_batch_replaces_its_metrics(spark, tmp_path):
                     for g in range(meta.num_row_groups)
                     for c in range(meta.num_columns)
                 } <= {"ZSTD"}, f
+
+
+def test_each_micro_batch_gate_runs_one_job(spark, tmp_path, monkeypatch):
+    """The source suite of a micro-batch (url uniqueness included) is one
+    job: the url column collected as Arrow, the other metrics observed
+    on the same job."""
+    sc = spark.sparkContext
+    groups: list[str] = []
+    run_suite = ingest.run_suite
+
+    def counted(*args, **kwargs):
+        group = f"stream-gate-{uuid.uuid4().hex}"
+        groups.append(group)
+        previous = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            return run_suite(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", previous)
+
+    monkeypatch.setattr(ingest, "run_suite", counted)
+    landing = str(tmp_path / "landing")
+    pages = generate_pages(spark, 60, seed=4)
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    for i in range(3):
+        _land(pages.where(part == i), landing)
+    gated_ingest(
+        spark, landing, str(tmp_path / "bronze"), str(tmp_path / "q"),
+        str(tmp_path / "ckpt"), source_suite(), max_files_per_trigger=1,
+        catalog=Catalog(str(tmp_path / "lake")),
+    )
+    assert [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups] == [1, 1, 1]
